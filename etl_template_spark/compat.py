@@ -63,24 +63,22 @@ from pyspark.sql import functions as F
 _PRECISION = 30
 
 
-def dec(col: Column | str, scale: int = 6) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({_PRECISION},{scale})")
+def dec_sql(expr: str, scale: int = 6) -> str:
+    return f"CAST(({expr}) AS DECIMAL({_PRECISION},{scale}))"
 
 
-def dsum(col: Column | str, scale: int = 6) -> Column:
+def dsum_sql(expr: str, scale: int = 6) -> str:
     """Order-independent double sum (exact decimal accumulation)."""
-    return F.sum(dec(col, scale)).cast("double")
+    return f"CAST(SUM({dec_sql(expr, scale)}) AS DOUBLE)"
 
 
-def davg(col: Column | str, scale: int = 6) -> Column:
+def davg_sql(expr: str, scale: int = 6) -> str:
     """Order-independent double mean: exact decimal sum / count, divided
     in double (both engines perform the identical IEEE division)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum(c, scale) / F.count(c)
+    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
 
 
-def fp6(col: Column | str) -> Column:
+def fp6_sql(expr: str) -> str:
     """Fixed-point scale-6 value as an exact integer decimal:
     ``sign(x) * floor(|x| * 1e6 + 0.5)`` cast to ``decimal(30,0)``.
 
@@ -88,49 +86,6 @@ def fp6(col: Column | str) -> Column:
     ``Double.toString``/BigDecimal allocation — the per-row cost that
     dominates ``dec``'s double→decimal cast (r13 profiling: ~60% of
     q_agg_group's runtime was the five cast columns)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    n = F.when(c >= 0, F.floor(c * 1e6 + F.lit(0.5))).otherwise(
-        -F.floor(-c * 1e6 + F.lit(0.5))
-    )
-    return n.cast("decimal(30,0)")
-
-
-def dsum_fp(col: Column | str) -> Column:
-    """Order-independent double sum over CERTIFIED money-like columns —
-    bit-identical to ``dsum`` but ~25-30% faster end-to-end on
-    aggregation-bound queries (r13 A/B on q_agg_group at sf0.1:
-    1.68 s → 1.19 s median, identical bytes).
-
-    How it stays exact: each value becomes the integer ``n`` =
-    HALF-UP(x·10⁶) via pure FP arithmetic (``fp6``), the ``n`` are
-    summed EXACTLY in integer decimal (no overflow until 10³⁰ — a long
-    sum would wrap at ~9.2·10¹⁸, i.e. at 100 TB scale), and the final
-    exact rational Σn/10⁶ is divided at scale 8 (exact: at most 6
-    fractional digits exist) before one correctly-rounded cast to
-    double — the same exact rational, hence the same double, as
-    ``dsum``'s decimal(30,6) accumulation.
-
-    CONTRACT: per-value agreement between ``floor(|x|·1e6 + 0.5)`` and
-    Spark's shortest-repr double→decimal(30,6) cast is DATA-DEPENDENT
-    (an adversarial double within an ulp of a half-point can round
-    differently).  Use only on expressions certified by
-    ``tests/test_compat_guard.py::test_fixed_point_money_agreement``,
-    which sweeps every such column and derived expression at every SF
-    and fails on the first divergent value.  Everything else —
-    transcendental outputs, embedding folds, uncertified columns —
-    stays on ``dsum``/``davg``."""
-    return (F.sum(fp6(col)) / F.lit(1000000)).cast("double")
-
-
-def davg_fp(col: Column | str) -> Column:
-    """``dsum_fp`` / count — the certified-column twin of ``davg``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return dsum_fp(c) / F.count(c)
-
-
-def fp6_sparksql(expr: str) -> str:
-    """Spark-SQL text twin of ``fp6`` — the same operator sequence
-    (CAST DOUBLE → FP half-up to integer units → DECIMAL(30,0))."""
     x = f"CAST(({expr}) AS DOUBLE)"
     n = (
         f"CASE WHEN {x} >= 0 THEN FLOOR({x} * CAST(1000000 AS DOUBLE) + 0.5D)"
@@ -139,27 +94,66 @@ def fp6_sparksql(expr: str) -> str:
     return f"CAST({n} AS DECIMAL({_PRECISION},0))"
 
 
-def dsum_fp_sparksql(expr: str) -> str:
-    """Spark-SQL text twin of ``dsum_fp`` (r14, guide §7.3): the same
-    operator sequence — CAST DOUBLE → FP half-up to integer units →
-    exact DECIMAL(30,0) sum → /1e6 → DOUBLE — written as SQL so a
-    query can be stated as ONE parsed statement instead of eagerly
-    analyzed Dataset ops.  Same certification contract as ``dsum_fp``
-    (the guard sweep); equivalence is snapshot- and oracle-gated."""
-    return f"CAST(SUM({fp6_sparksql(expr)}) / 1000000 AS DOUBLE)"
+def dsum_fp_sql(expr: str) -> str:
+    """Order-independent double sum over CERTIFIED money-like columns —
+    bit-identical to ``dsum_sql`` but ~25-30% faster end-to-end on
+    aggregation-bound queries (r13 A/B on q_agg_group at sf0.1:
+    1.68 s → 1.19 s median, identical bytes).
+
+    How it stays exact: each value becomes the integer ``n`` =
+    HALF-UP(x·10⁶) via pure FP arithmetic (``fp6_sql``), the ``n`` are
+    summed EXACTLY in integer decimal (no overflow until 10³⁰ — a long
+    sum would wrap at ~9.2·10¹⁸, i.e. at 100 TB scale), and the final
+    exact rational Σn/10⁶ is divided at scale 8 (exact: at most 6
+    fractional digits exist) before one correctly-rounded cast to
+    double — the same exact rational, hence the same double, as
+    ``dsum_sql``'s decimal(30,6) accumulation.
+
+    CONTRACT: per-value agreement between ``floor(|x|·1e6 + 0.5)`` and
+    Spark's shortest-repr double→decimal(30,6) cast is DATA-DEPENDENT
+    (an adversarial double within an ulp of a half-point can round
+    differently).  Use only on expressions certified by
+    ``tests/test_compat_guard.py::test_fixed_point_money_agreement``,
+    which sweeps every such column and derived expression at every SF
+    and fails on the first divergent value (``grep -rn 'd[a-z]*_fp'``
+    lists every site it must cover).  Everything else — transcendental
+    outputs, embedding folds, uncertified columns — stays on
+    ``dsum``/``davg``."""
+    return f"CAST(SUM({fp6_sql(expr)}) / 1000000 AS DOUBLE)"
 
 
-def davg_fp_sparksql(expr: str) -> str:
-    """``dsum_fp_sparksql`` / COUNT — Spark-SQL text twin of ``davg_fp``."""
-    return f"({dsum_fp_sparksql(expr)} / COUNT({expr}))"
+def davg_fp_sql(expr: str) -> str:
+    """``dsum_fp_sql`` / COUNT — the certified-column form of ``davg_sql``."""
+    return f"({dsum_fp_sql(expr)} / COUNT({expr}))"
 
 
-def dsum_sql(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL({_PRECISION},{scale}))) AS DOUBLE)"
+# Column forms for DataFrame builders: each is the SQL text above,
+# parsed by F.expr — one definition per expression, so a Column site
+# and a spark.sql site analyze to the same operators by construction.
 
 
-def davg_sql(expr: str, scale: int = 6) -> str:
-    return f"({dsum_sql(expr, scale)} / COUNT({expr}))"
+def dec(expr: str, scale: int = 6) -> Column:
+    return F.expr(dec_sql(expr, scale))
+
+
+def dsum(expr: str, scale: int = 6) -> Column:
+    return F.expr(dsum_sql(expr, scale))
+
+
+def davg(expr: str, scale: int = 6) -> Column:
+    return F.expr(davg_sql(expr, scale))
+
+
+def fp6(expr: str) -> Column:
+    return F.expr(fp6_sql(expr))
+
+
+def dsum_fp(expr: str) -> Column:
+    return F.expr(dsum_fp_sql(expr))
+
+
+def davg_fp(expr: str) -> Column:
+    return F.expr(davg_fp_sql(expr))
 
 
 def rounding_agreement_failures(values, scale: int = 6) -> list[float]:

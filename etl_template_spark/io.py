@@ -90,10 +90,12 @@ def table_schema(name: str) -> T.StructType:
 # scans the parquet files (scan splits and shuffle sizing are decided
 # per execution, so partition-invariance semantics are untouched).
 # Keyed weakly by session so test sessions drop their entries with the
-# session object; fixture dirs are immutable by contract (the driver's
-# testdata), which is what makes the resolved file-list snapshot safe
-# to reuse.  Handle aliasing across queries is the ordinary Spark
-# self-join case (DeduplicateRelations re-ids the duplicate side).
+# session object.  Fixture dirs can be regenerated in place, so each
+# entry carries a freshness token of the parquet file and a stale entry
+# is REPLACED, not kept beside the new one (one entry per table, however
+# often it is regenerated).  Handle aliasing across queries is the
+# ordinary Spark self-join case (DeduplicateRelations re-ids the
+# duplicate side).
 _TABLE_HANDLES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -137,12 +139,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         token = (st.st_mtime_ns, st.st_size)
     except OSError:
         token = None
-    key = (os.path.abspath(sf_dir), name, token)
+    key = (os.path.abspath(sf_dir), name)
     cached = cache.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == token:
+        return cached[1]
     df = _load_table_uncached(spark, sf_dir, name)
-    cache[key] = df
+    cache[key] = (token, df)
     return df
 
 

@@ -26,13 +26,15 @@ shifts; correctness of the probe contract never does.  Retraining is a
 REBUILD (new store), by design — mutating centroids would silently
 re-shuffle historical assignments and break the append-only identity.
 
-Reuses the decimal-exact helpers from ``queries/similarity.py``
-(``_assign_cells``, ``cosine_col``, ``davg``) rather than duplicating
-them: that module is content-hash-frozen by verification.py, so the
-dependency cannot drift under this one.  Layering note: operators
-normally don't import from queries/; here the hash pin is exactly why
-the import is safe, and moving the helpers would invalidate six
-recorded similarity queries for an aesthetic.
+Reuses the stage helpers of ``queries/similarity.py``
+(``_assign_cells``, ``_per_dim_means``, ``cosine_col``) rather than
+duplicating them.  Each is the one definition of its stage, built with
+selectExpr/F.expr from that module's SQL fold texts, so this index and
+q_sim_search_ivf run the same expressions.  Layering note: operators
+normally don't import from queries/.  The helpers stay there because
+``verification.query_content_hash`` stamps only each query's defining
+module: moved into operators/, a change to them would no longer
+invalidate the recorded similarity queries.
 """
 
 from __future__ import annotations
@@ -74,11 +76,10 @@ def train_centroids(
         .withColumn("cell", F.row_number().over(Window.orderBy("vec_id")) - 1)
         .select("cell", F.col("embedding").alias("centroid"))
     )
-    assigned = _assign_cells(e, seeds)
     # Lloyd means shared with the IVF quantizer (decimal-exact davg)
     from ..queries.similarity import _per_dim_means
 
-    return _per_dim_means(assigned, ["cell"], "embedding")
+    return _per_dim_means(_assign_cells(e, seeds), ["cell"], "embedding")
 
 
 def ivf_index_incremental(

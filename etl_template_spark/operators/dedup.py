@@ -14,8 +14,6 @@ stays < 2^63 in both engines' signed-64 arithmetic.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -54,10 +52,9 @@ def shingles_col(toks: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_id(s: Column) -> Column:
-    """32-bit id from the first 8 hex chars of sha2-256 — DuckDB:
-    ``cast(concat('0x', substr(sha256(s),1,8)) as bigint)``."""
-    return F.conv(F.substring(F.sha2(s, 256), 1, 8), 16, 10).cast("bigint")
+# 32-bit shingle id from the first 8 hex chars of sha2-256 — DuckDB:
+# ``cast(concat('0x', substr(sha256(s),1,8)) as bigint)``.
+SHINGLE_ID_SQL = "CAST(conv(substring(sha2(s, 256), 1, 8), 16, 10) AS BIGINT)"
 
 
 def dedup_exact(
@@ -82,57 +79,32 @@ def minhash_signature(shingles: DataFrame, id_col: str = "doc_id") -> DataFrame:
     into each min() re-evaluates sha2+conv per hash function (codegen
     subexpression elimination does not reach across the 16 aggregate
     inputs — A/B-measured 0.92 s → 0.82 s on the sf0.1 signature
-    stage, identical output)."""
-    pre = shingles.select(id_col, shingle_id(F.col("s")).alias("__sid"))
+    stage, identical output).
+
+    Built from SQL text via selectExpr/F.expr: one parse per expression
+    instead of eager per-op analysis of Column trees (the 16-min
+    aggregate cost ~0.4 s of driver-side build as Columns), and safe
+    on a persisted input — unlike ``spark.sql(..., sh=frame)``, whose
+    temp-view cleanup uncaches the frame it names."""
+    pre = shingles.selectExpr(id_col, f"{SHINGLE_ID_SQL} AS __sid")
     return pre.groupBy(id_col).agg(
         *[
-            F.min((F.lit(a) * F.col("__sid") + F.lit(b)) % F.lit(MH_PRIME)).alias(
-                f"mh{i}"
-            )
+            F.expr(f"min(({a} * __sid + {b}) % {MH_PRIME})").alias(f"mh{i}")
             for i, (a, b) in enumerate(MH_AB)
         ],
-        F.count(F.lit(1)).alias("n_sh"),
+        F.expr("count(1)").alias("n_sh"),
     )
 
 
-def minhash_signature_sql(id_col: str = "doc_id") -> str:
-    """Spark-SQL text twin of ``minhash_signature`` with a ``{sh}``
-    placeholder for the shingle frame (``spark.sql(sql, sh=shingles)``).
-
-    Why a twin exists (r14, guide §7.3): the Column form eagerly
-    analyzes a growing plan per Dataset op — the 16 min() aggregate
-    alone costs ~0.4 s of driver-side build per query at any scale —
-    while the SQL text is ONE parse + analysis (~60 ms).  Expressions
-    are written to analyze to the very same operators (same literals,
-    same projected ``__sid`` below the aggregate), so the executed
-    plan — and therefore the signature bits — are unchanged; the
-    snapshot harness and the DuckDB oracles gate that equivalence."""
-    mins = ", ".join(
-        f"min(({a} * __sid + {b}) % {MH_PRIME}) AS mh{i}"
-        for i, (a, b) in enumerate(MH_AB)
-    )
-    return (
-        f"SELECT {id_col}, {mins}, count(1) AS n_sh FROM ("
-        f"SELECT {id_col}, CAST(conv(substring(sha2(s, 256), 1, 8), 16, 10)"
-        " AS BIGINT) AS __sid FROM {sh}"
-        f") GROUP BY {id_col}"
-    )
+# The 8 band keys of a signature row: band i = (mh_{2i}, mh_{2i+1})
+# packed into one string.
+BAND_KEYS_SQL = ", ".join(
+    f"concat_ws(':', {i}, mh{2 * i}, mh{2 * i + 1})" for i in range(MH_BANDS)
+)
 
 
-def _band_keys(signatures: DataFrame, id_col: str) -> DataFrame:
-    return signatures.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-                    )
-                    for i in range(MH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
+def band_keys(signatures: DataFrame, id_col: str) -> DataFrame:
+    return signatures.selectExpr(id_col, f"explode(array({BAND_KEYS_SQL})) AS band_key")
 
 
 def lsh_candidate_pairs(
@@ -153,7 +125,7 @@ def lsh_candidate_pairs(
     (``d1 < d2``) and distinct in both modes; with ``probe`` a subset
     of ``signatures``, the output is exactly the self-join pairs that
     touch the probe set."""
-    bands = _band_keys(signatures, id_col)
+    bands = band_keys(signatures, id_col)
     right = bands.select(F.col(id_col).alias("d2"), "band_key")
     if probe is None:
         left = bands.select(F.col(id_col).alias("d1"), "band_key")
@@ -163,7 +135,7 @@ def lsh_candidate_pairs(
             .select("d1", "d2")
         )
     else:
-        left = _band_keys(probe, id_col).select(
+        left = band_keys(probe, id_col).select(
             F.col(id_col).alias("d1"), "band_key"
         )
         pairs = (
@@ -222,26 +194,6 @@ def verified_jaccard(
         .where(F.col("jaccard") >= threshold)
         .select("d1", "d2", "jaccard")
     )
-
-
-def simhash_col_bits(tid: Column, n_bits: int = 16) -> list[Column]:
-    """±1 vote aggregates per bit of a token-id column (sum → sign)."""
-    return [
-        F.sum(F.when((tid.bitwiseAND(F.lit(1 << b))) != 0, 1).otherwise(-1)).alias(
-            f"w{b}"
-        )
-        for b in range(n_bits)
-    ]
-
-
-def pack_simhash(n_bits: int = 16) -> Column:
-    """Pack the w0..w{n-1} vote columns into one integer fingerprint."""
-    packed: Column | None = None
-    for b in range(n_bits):
-        term = F.when(F.col(f"w{b}") > 0, 1 << b).otherwise(0)
-        packed = term if packed is None else packed + term
-    assert packed is not None
-    return packed.cast("bigint")
 
 
 def ngram_jaccard_pairs(
@@ -326,29 +278,33 @@ def ngram_jaccard_pairs_prefix(
     return verified_jaccard(candidates, shingles, threshold, sizes=sizes)
 
 
-def df_capped_pair_counts(shingles: DataFrame, n_docs: DataFrame):
+def df_capped_pair_counts(shingles: DataFrame, docs: DataFrame) -> DataFrame:
     """The DF-capped inverted-index candidate pipeline shared by
-    q_dedup_ngram (Jaccard) and q_dedup_containment (containment) —
-    factored here (r8 review) so the cap semantics and join shape have
-    one fix point.  Returns ``(sizes, common)``: per-doc pruned shingle
-    counts ``(doc_id, n_sh)`` and per-pair co-occurrence counts
-    ``(d1, d2, c)`` with ``d1 < d2``; the caller supplies the scoring
-    denominator (Jaccard's ``n1 + n2 − c`` vs containment's
+    q_dedup_ngram (Jaccard) and q_dedup_containment (containment) — one
+    fix point for the cap semantics and the join shape.  Returns
+    ``(d1, d2, c, n1, n2)``: per-pair co-occurrence counts ``c`` with
+    ``d1 < d2`` and both docs' pruned shingle counts; the caller applies
+    the scoring denominator (Jaccard's ``n1 + n2 − c`` vs containment's
     ``least(n1, n2)``).
 
     Contract: shingles present in more than ``max(5, 1% of corpus)``
-    documents are dropped BEFORE the self-join — the 100 TB guard
-    against quadratic stopword buckets, stated in both oracles, so the
-    cap is checked semantics, not a silent approximation.
+    documents (``docs`` is the corpus table) are dropped BEFORE the
+    self-join — the 100 TB guard against quadratic stopword buckets,
+    stated in both oracles, so the cap is checked semantics, not a
+    silent approximation.
 
     Release contract (r11 ADVICE): this function persists the pruned
-    index internally via ``caching.persist_tracked`` (MEMORY_AND_DISK —
-    the A/B-measured three-consumer reuse below), so EVERY caller must
-    run under a scope that ends with ``caching.release_tracked()`` or
-    the persist leaks for the session's lifetime with no handle to
-    release it.  The registered queries satisfy this through the
-    pipeline's per-query release discipline; a direct library caller
-    must wrap its own try/finally.
+    index internally via ``caching.persist_tracked`` (MEMORY_AND_DISK)
+    — it feeds THREE consumers, the per-doc sizes and both sides of
+    the self-join, and only one of those reuses an exchange (sf0.1
+    medians 4.67 s → 4.11 s on q_dedup_ngram).  EVERY caller must run
+    under a scope that ends with ``caching.release_tracked()`` or the
+    persist leaks for the session's lifetime with no handle to release
+    it.  The registered queries satisfy this through the pipeline's
+    per-query release discipline; a direct library caller must wrap its
+    own try/finally.  Built with selectExpr/F.expr, never
+    ``spark.sql(..., sh=frame)``: the formatter's temp-view cleanup
+    would uncache a persisted ``shingles`` input.
 
     Keep-list join on the shingle value (no forced broadcast: the kept
     vocabulary is corpus-scaled; AQE broadcasts it only when small).
@@ -361,29 +317,31 @@ def df_capped_pair_counts(shingles: DataFrame, n_docs: DataFrame):
     """
     from ..caching import persist_tracked
 
-    dfreq = shingles.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    cap = F.greatest(F.lit(5), F.ceil(F.col("n_docs") / 100.0)).cast("long")
-    # persist the pruned index (r11, A/B-measured): it feeds THREE
-    # consumers — the per-doc sizes and both sides of the self-join —
-    # and only one of those reuses an exchange; without the persist the
-    # DF-count + keep-join recomputes per consumer (sf0.1 medians 4.67 s
-    # → 4.11 s on q_dedup_ngram).  MEMORY_AND_DISK, released by the
-    # caller's release_tracked() per the caching-module discipline.
+    n_docs = docs.agg(F.expr("count(1)").alias("n_docs"))
+    keep = (
+        shingles.groupBy("s")
+        .agg(F.expr("count(1)").alias("df"))
+        .crossJoin(F.broadcast(n_docs))
+        .where("df <= CAST(greatest(5, ceil(n_docs / 100.0D)) AS BIGINT)")
+        .select("s")
+    )
     kept = persist_tracked(
-        shingles.join(
-            dfreq.crossJoin(F.broadcast(n_docs))
-            .where(F.col("df") <= cap)
-            .select("s"),
-            "s",
+        shingles.alias("sh")
+        .join(keep.alias("k"), F.expr("sh.s = k.s"))
+        .select("sh.doc_id", "sh.s")
+    )
+    sizes = kept.groupBy("doc_id").agg(F.expr("count(1)").alias("n_sh"))
+    common = (
+        kept.alias("a")
+        .join(kept.alias("b"), F.expr("a.s = b.s AND a.doc_id < b.doc_id"))
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(F.expr("count(1)").alias("c"))
+    )
+    return (
+        common.alias("common")
+        .join(sizes.alias("s1"), F.expr("s1.doc_id = common.d1"))
+        .join(sizes.alias("s2"), F.expr("s2.doc_id = common.d2"))
+        .selectExpr(
+            "common.d1", "common.d2", "common.c", "s1.n_sh AS n1", "s2.n_sh AS n2"
         )
     )
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = kept.select(F.col("doc_id").alias("d1"), "s")
-    b = kept.select(F.col("doc_id").alias("d2"), "s")
-    common = (
-        a.join(b, "s")
-        .where(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return sizes, common

@@ -34,7 +34,7 @@ runs exactly like ten.
 
 Float determinism: per-hit gains are ``(2^rel - 1) / log2(r + 1)`` —
 both engines fold the identical IEEE tree — and the per-query sums run
-through the decimal-exact pattern (compat.dec) so results are
+through the decimal-exact pattern (compat.dsum) so results are
 order-independent.  This is the registration-ready shape for the r8
 ``q_rank_metrics`` query (window-full in r7; see SURVEY §7).
 """
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..compat import dec
+from ..compat import dsum
 
 
 def rank_metrics(
@@ -60,15 +60,13 @@ def rank_metrics(
 
     Columns: query_id, ndcg, mrr, recall, n_rel, n_retrieved.
     """
-    gain = (F.pow(F.lit(2.0), F.col("rel")) - F.lit(1.0)) / F.log2(
-        F.col("rank").cast("double") + F.lit(1.0)
-    )
+    gain = "(power(2.0D, rel) - 1.0D) / log2(CAST(rank AS DOUBLE) + 1.0D)"
     hits = (
         run.join(qrels, ["query_id", "doc_id"])
         .where(F.col("rank") <= k)
     )
     per_q = hits.groupBy("query_id").agg(
-        F.sum(dec(gain)).cast("double").alias("dcg"),
+        dsum(gain).alias("dcg"),
         F.min(F.when(F.col("rel") > 0, F.col("rank"))).alias("first_rel_rank"),
         F.sum(F.when(F.col("rel") > 0, 1).otherwise(0)).alias("rel_retrieved"),
     )
@@ -77,14 +75,12 @@ def rank_metrics(
     w_ideal = Window.partitionBy("query_id").orderBy(
         F.col("rel").desc(), F.col("doc_id")
     )
-    ideal_gain = (F.pow(F.lit(2.0), F.col("rel")) - F.lit(1.0)) / F.log2(
-        F.col("irank").cast("double") + F.lit(1.0)
-    )
+    ideal_gain = "(power(2.0D, rel) - 1.0D) / log2(CAST(irank AS DOUBLE) + 1.0D)"
     ideal = (
         qrels.withColumn("irank", F.row_number().over(w_ideal))
         .where(F.col("irank") <= k)
         .groupBy("query_id")
-        .agg(F.sum(dec(ideal_gain)).cast("double").alias("idcg"))
+        .agg(dsum(ideal_gain).alias("idcg"))
     )
     n_rel = qrels.where(F.col("rel") > 0).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_rel")

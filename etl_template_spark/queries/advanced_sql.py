@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import davg_sql, dsum_sql
+from ..compat import davg_sql, dsum, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -133,12 +133,10 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine, unlike the engines' internal streaming moment
     accumulators whose merge order differs."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(30,6)")  # noqa: E731
-    q = F.col("l_quantity")
     grouped = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec(q)).cast("double").alias("s1"),
-        F.sum(dec(q * q)).cast("double").alias("s2"),
+        dsum("l_quantity").alias("s1"),
+        dsum("l_quantity * l_quantity").alias("s2"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
     var = (s2 - s1 * s1 / n) / (n - 1)

@@ -12,11 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# r13: every dsum/davg input in this module is a certified money
-# column/expression (compat.dsum_fp contract + the fixed-point guard
-# sweep in tests/test_compat_guard.py), so the module rides the fast
-# fixed-point twins — bit-identical sums, no per-row toString cast.
-from ..compat import davg_fp as davg, davg_sql, dsum_fp as dsum, dsum_sql
+# r13: every dsum_fp/davg_fp input in this module is a certified money
+# column/expression (compat.dsum_fp_sql contract + the fixed-point
+# guard sweep in tests/test_compat_guard.py) — sums bit-identical to
+# dsum/davg, no per-row toString cast.
+from ..compat import davg_fp, davg_fp_sql, davg_sql, dsum_fp, dsum_fp_sql, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -53,25 +53,21 @@ def q_agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Stated as ONE SQL text (r14, guide §7.3): the eight fixed-point
     aggregate Columns cost ~0.25 s of eager per-op analysis per build;
-    the SQL parses+analyzes once (~0.08 s) into the same plan — the
-    ``dsum_fp_sparksql`` twins emit the identical operator sequence,
-    snapshot- and oracle-gated."""
-    from ..compat import davg_fp_sparksql as davg_s, dsum_fp_sparksql as dsum_s
-
+    the SQL parses+analyzes once (~0.08 s) into the same plan."""
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = "l_extendedprice * (1 - l_discount)"
     charge = f"{disc_price} * (1 + l_tax)"
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
-               {dsum_s('l_quantity')}      AS sum_qty,
-               {dsum_s('l_extendedprice')} AS sum_base_price,
-               {dsum_s(disc_price)}        AS sum_disc_price,
-               {dsum_s(charge)}            AS sum_charge,
-               {davg_s('l_quantity')}      AS avg_qty,
-               {davg_s('l_extendedprice')} AS avg_price,
-               {davg_s('l_discount')}      AS avg_disc,
-               count(1)                    AS count_order
+               {dsum_fp_sql('l_quantity')}      AS sum_qty,
+               {dsum_fp_sql('l_extendedprice')} AS sum_base_price,
+               {dsum_fp_sql(disc_price)}        AS sum_disc_price,
+               {dsum_fp_sql(charge)}            AS sum_charge,
+               {davg_fp_sql('l_quantity')}      AS avg_qty,
+               {davg_fp_sql('l_extendedprice')} AS avg_price,
+               {davg_fp_sql('l_discount')}      AS avg_disc,
+               count(1)                         AS count_order
         FROM {{li}}
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
@@ -101,8 +97,8 @@ def q_agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        dsum("l_quantity").alias("total_qty"),
-        davg("l_extendedprice").alias("avg_price"),
+        dsum_fp("l_quantity").alias("total_qty"),
+        davg_fp("l_extendedprice").alias("avg_price"),
         F.min("l_shipdate").alias("first_ship"),
         F.max("l_shipdate").alias("last_ship"),
         F.min("l_quantity").alias("min_qty"),
@@ -133,7 +129,7 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.countDistinct("o_custkey").alias("n_customers"),
             F.countDistinct("o_orderpriority").alias("n_priorities"),
-            dsum("o_totalprice").alias("sum_price"),
+            dsum_fp("o_totalprice").alias("sum_price"),
             F.count(F.lit(1)).alias("n_orders"),
         )
     )
@@ -157,7 +153,7 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("spend"),
+            dsum_fp("o_totalprice").alias("spend"),
         )
         .where(F.col("n_orders") >= 12)
     )
@@ -294,7 +290,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.rollup("o_orderstatus", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_price"),
+            dsum_fp("o_totalprice").alias("sum_price"),
         )
         .orderBy(
             F.col("o_orderstatus").asc_nulls_first(),
@@ -324,7 +320,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.cube("l_returnflag", "l_linestatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            dsum("l_quantity").alias("sum_qty"),
+            dsum_fp("l_quantity").alias("sum_qty"),
         )
         .orderBy(
             F.col("l_returnflag").asc_nulls_first(),
@@ -384,7 +380,7 @@ def q_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["O", "F"])
-        .agg(dsum("l_quantity"))
+        .agg(dsum_fp("l_quantity"))
         .withColumnsRenamed({"O": "qty_O", "F": "qty_F"})
     )
 

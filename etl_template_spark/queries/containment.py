@@ -10,15 +10,15 @@ articles inside aggregator pages, quoted posts, boilerplate-wrapped
 bodies (Broder, "On the resemblance and containment of documents",
 SEQUENCES 1997).
 
-Plan shape is the proven inverted-index contract shared with
-q_dedup_ngram (llm_text.py:365): distinct 3-shingles → document-
-frequency cap (max(5, 1% of corpus) — part of the CHECKED semantics,
-restated in the oracle, not a silent prune) → shingle-value self-join
-(only docs sharing a kept shingle ever meet — no all-pairs) →
-co-occurrence counts → containment over the pruned sets.  The only
-delta vs Jaccard is the denominator: LEAST(|A|,|B|) instead of
-|A|+|B|−c — so every scale argument (equi-join buckets, AQE skew
-split, DF-cap hot-shingle bound) carries over verbatim.
+Plan shape is the inverted-index contract shared with q_dedup_ngram
+(both call ``operators/dedup.df_capped_pair_counts``): distinct
+3-shingles → document-frequency cap (max(5, 1% of corpus) — part of
+the CHECKED semantics, restated in the oracle, not a silent prune) →
+shingle-value self-join (only docs sharing a kept shingle ever meet —
+no all-pairs) → co-occurrence counts → containment over the pruned
+sets.  The only delta vs Jaccard is the denominator: LEAST(|A|,|B|)
+instead of |A|+|B|−c — so every scale argument (equi-join buckets, AQE
+skew split, DF-cap hot-shingle bound) carries over verbatim.
 
 Reference parity: no dedup surface in the reference; declared engine
 surface per SURVEY §2B.
@@ -36,7 +36,6 @@ re-ran green on the changed tree before this note landed).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators.dedup import df_capped_pair_counts
@@ -78,25 +77,13 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     contained in the other — the sub-document duplication detector
     Jaccard structurally under-scores."""
     sh = _doc_shingles(spark, sf_dir, k=3, persist=True)
-    n_docs = load_table(spark, sf_dir, "documents").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    # the SAME candidate pipeline as q_dedup_ngram, by construction:
-    # both call the one helper (operators/dedup.py, r8 review)
-    sizes, common = df_capped_pair_counts(sh, n_docs)
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n_sh").alias("n2"))
-    n_small = F.least(F.col("n1"), F.col("n2"))
-    containment = F.col("c") / n_small
-    return (
-        common.join(s1, "d1")
-        .join(s2, "d2")
-        .where(containment >= _THRESHOLD)
-        .select(
-            "d1",
-            "d2",
-            F.round(containment, 6).alias("containment"),
-            F.col("c").alias("n_common"),
-            n_small.cast("bigint").alias("n_small"),
-        )
+    # the SAME candidate pipeline as q_dedup_ngram: both call the one
+    # helper, which pins the pruned index (operators/dedup.py)
+    pairs = df_capped_pair_counts(sh, load_table(spark, sf_dir, "documents"))
+    return pairs.where(f"c / least(n1, n2) >= {_THRESHOLD}D").selectExpr(
+        "d1",
+        "d2",
+        "round(c / least(n1, n2), 6) AS containment",
+        "c AS n_common",
+        "CAST(least(n1, n2) AS BIGINT) AS n_small",
     )

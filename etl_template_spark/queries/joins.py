@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# r13: certified money inputs -> fixed-point dsum twin (see compat.dsum_fp)
-from ..compat import dsum_fp as dsum, dsum_sql
+# r13: certified money inputs -> fixed-point sums (see compat.dsum_fp_sql)
+from ..compat import dsum_fp, dsum_sql
 from ..io import load_table
 from ..operators.asof import asof_join
 from ..operators.rangejoin import range_join_binned
@@ -206,7 +206,7 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -214,7 +214,7 @@ def q_join_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
-            dsum(revenue).alias("revenue"),
+            dsum_fp(revenue).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
@@ -248,7 +248,7 @@ def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            dsum("l_extendedprice").alias("sum_price"),
+            dsum_fp("l_extendedprice").alias("sum_price"),
         )
         .orderBy("band")
     )
@@ -314,13 +314,15 @@ def q_join_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per year per partition."""
     li = load_table(spark, sf_dir, "lineitem")
     pt = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo_rev = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
+    rev = "l_extendedprice * (1 - l_discount)"
+    promo_rev = f"CASE WHEN p_type LIKE 'PROMO%' THEN {rev} ELSE 0.0D END"
     return (
         li.join(pt, li.l_partkey == pt.p_partkey)
         .groupBy(F.year("l_shipdate").alias("ship_year"))
         .agg(
-            F.round(100.0 * dsum(promo_rev) / dsum(rev), 4).alias("promo_share_pct"),
+            F.round(100.0 * dsum_fp(promo_rev) / dsum_fp(rev), 4).alias(
+                "promo_share_pct"
+            ),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )

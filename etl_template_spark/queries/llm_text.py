@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..operators.dedup import (
-    MH_AB as _MH_AB,
-    MH_BANDS as _MH_BANDS,
-    MH_PRIME as _MH_P,
-    shingle_id,
+    BAND_KEYS_SQL,
+    band_keys,
+    df_capped_pair_counts,
+    minhash_signature,
     shingles_col,
     tokens_col,
     verified_jaccard as _verified_jaccard,
@@ -192,10 +192,6 @@ def _fuzzy_oracle() -> str:
     """ % _SHINGLES_SQL
 
 
-_FUZZY_BAND_EXPRS = ", ".join(
-    f"concat_ws(':', {i}, mh{2 * i}, mh{2 * i + 1})" for i in range(_MH_BANDS)
-)
-
 # Band join + exact-Jaccard verification, stated once as SQL text with
 # {mins}/{sh} placeholders (see the r14 build-cost note in
 # q_dedup_fuzzy).  Same shapes as lsh_candidate_pairs/verified_jaccard:
@@ -222,7 +218,7 @@ SELECT d1, d2, jaccard FROM (
   JOIN {mins} s1 ON s1.doc_id = c.d1
   JOIN {mins} s2 ON s2.doc_id = c.d2)
 WHERE jaccard >= 0.5
-""" % _FUZZY_BAND_EXPRS
+""" % BAND_KEYS_SQL
 
 
 @register("q_dedup_fuzzy", oracle=_fuzzy_oracle(), tags=("llm", "dedup"))
@@ -239,20 +235,15 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     an inverted-index join over candidate docs.  Every hash constant is
     fixed, so the result is deterministic and exactly matches the
     all-pairs oracle (recall argument in the oracle builder)."""
-    from ..operators.dedup import minhash_signature_sql
-
     sh = _doc_shingles(spark, sf_dir, k=3)
     # ONE aggregate yields both the 16-hash signature and the set size
     # (n_sh) — verification reuses it instead of re-scanning shingles.
-    # r14 (guide §7.3): the signature and the band-join+verification
-    # stages are each ONE spark.sql parse+analysis instead of ~25
-    # eagerly-analyzed Dataset ops — the Column form cost ~0.8 s of
-    # driver-side build per call at any scale; the SQL text ~0.2 s.
-    # The statements mirror minhash_signature/_verified_jaccard
-    # expression for expression, so the executed plan and every
-    # result bit are unchanged (snapshot-gated at sf0.01/sf0.1,
-    # DuckDB-oracle-gated at sf0.01).
-    mins = spark.sql(minhash_signature_sql("doc_id"), sh=sh)
+    # The signature is the shared frame helper (selectExpr/F.expr over
+    # SQL text — one parse per expression); the band join +
+    # verification is ONE spark.sql statement (r14, guide §7.3: ~25
+    # eagerly-analyzed Dataset ops cost ~0.8 s of driver-side build
+    # per call at any scale).
+    mins = minhash_signature(sh)
     # 8 band keys: band i = (mh_{2i}, mh_{2i+1}) packed into one string
     out = spark.sql(_FUZZY_VERIFY_SQL, mins=mins, sh=sh)
     # persist AFTER the last templated spark.sql: the formatter's
@@ -260,8 +251,8 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncacheView matches the frame's plan), so a persist taken before
     # the compose would be silently dropped.  Cache substitution
     # happens at execution (useCachedData), so pinning here still puts
-    # InMemoryTableScans under every consumer — plan-gated by
-    # tests/test_plans.py.  ORDER MATTERS (r14, measured): the
+    # InMemoryTableScans under every consumer — gated by
+    # tests/test_cache_pins.py.  ORDER MATTERS (r14, measured): the
     # CacheManager normalizes a new cache entry's key against caches
     # that already exist, so persisting ``sh`` first would bake an
     # InMemoryRelation(sh) into ``mins``'s key and no raw consumer
@@ -397,23 +388,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cor_hash = d.where(~is_inc).select(F.sha2("text", 256).alias("h")).distinct()
     exact_ids = inc_hash.join(cor_hash, "h", "left_semi").select("doc_id")
 
-    from ..operators.dedup import minhash_signature
-
     sh = _doc_shingles(spark, sf_dir, k=3, persist=True)
     mins = persist_tracked(minhash_signature(sh))
-    bands = mins.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", F.lit(i), F.col(f"mh{2 * i}"), F.col(f"mh{2 * i + 1}")
-                    )
-                    for i in range(_MH_BANDS)
-                ]
-            )
-        ).alias("band_key"),
-    )
+    bands = band_keys(mins, "doc_id")
     inc_bands = bands.where(F.col("doc_id") % 10 == 0).select(
         F.col("doc_id").alias("d1"), "band_key"
     )
@@ -449,36 +426,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q_dedup_ngram — inverted-index exact n-gram Jaccard
 # ---------------------------------------------------------------------------
-
-# SQL-text twins of df_capped_pair_counts + the Jaccard scoring tail
-# (r14 build-cost move — one parse/analysis each, same executed plan;
-# see the helper's docstring for the cap/keep-join/skew rationale).
-_NGRAM_KEPT_SQL = """
-SELECT sh.doc_id, sh.s
-FROM {sh} sh
-JOIN (
-  SELECT /*+ BROADCAST(nd) */ f.s
-  FROM (SELECT s, count(1) AS df FROM {sh} GROUP BY s) f
-  CROSS JOIN (SELECT count(1) AS n_docs FROM {docs}) nd
-  WHERE f.df <= CAST(greatest(5, ceil(nd.n_docs / 100.0D)) AS BIGINT)
-) k ON sh.s = k.s
-"""
-
-_NGRAM_PAIRS_SQL = """
-WITH sizes AS (SELECT doc_id, count(1) AS n_sh FROM {kept} GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(1) AS c
-  FROM {kept} a JOIN {kept} b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id)
-SELECT d1, d2, round(c / (n1 + n2 - c), 6) AS jaccard
-FROM (
-  SELECT common.d1, common.d2, common.c, s1.n_sh AS n1, s2.n_sh AS n2
-  FROM common
-  JOIN sizes s1 ON s1.doc_id = common.d1
-  JOIN sizes s2 ON s2.doc_id = common.d2)
-WHERE c / (n1 + n2 - c) >= 0.5
-"""
-
 
 @register(
     "q_dedup_ngram",
@@ -523,22 +470,15 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     its DF-ordering pass costs more than it saves below bucket-skew
     scale."""
     sh = _doc_shingles(spark, sf_dir, k=3)
-    docs = load_table(spark, sf_dir, "documents")
-    # Same contract as operators/dedup.py:df_capped_pair_counts (which
-    # q_dedup_containment still uses), stated as two spark.sql calls —
-    # r14 build-cost move, see q_dedup_fuzzy.  The pruned index is
-    # persisted exactly as the helper does (three consumers: sizes +
-    # both self-join sides), released per the caching discipline;
-    # persists are taken AFTER the last templated spark.sql because the
-    # formatter's temp-view cleanup uncaches referenced frames (see
-    # q_dedup_fuzzy).
-    kept = spark.sql(_NGRAM_KEPT_SQL, sh=sh, docs=docs)
-    out = spark.sql(_NGRAM_PAIRS_SQL, kept=kept)
-    # downstream frame first, then its input (see q_dedup_fuzzy's
-    # persist-order note)
-    persist_tracked(kept)
+    # the candidate pipeline shared with q_dedup_containment; it pins
+    # the pruned index itself.  ``sh`` is pinned after it, so the
+    # index's cached plan reads raw shingles and no scan ever reads
+    # this pin (a known dead pin, see tests/test_cache_pins.py)
+    pairs = df_capped_pair_counts(sh, load_table(spark, sf_dir, "documents"))
     persist_tracked(sh)
-    return out
+    return pairs.where("c / (n1 + n2 - c) >= 0.5").selectExpr(
+        "d1", "d2", "round(c / (n1 + n2 - c), 6) AS jaccard"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
-from ..compat import davg, davg_sql, dsum, dsum_sql
+from ..compat import davg, davg_sql, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -55,7 +55,7 @@ _DIM = 64
 #   fold-dot + per-row PRE-COMPUTED norms 0.40-0.51 s.
 #
 # So: 64-dim paths use the fold for the dot product and pre-compute
-# squared norms once per ROW in a projection (``cosine_pre_col``) —
+# squared norms once per ROW in a projection (``cosine_pre_sql``) —
 # a norm is reused across every pair its row joins into, so the
 # per-pair work drops ~3x at any scale; only the ≤16-dim PQ L2 keeps
 # the unrolled fragment.  All formulations produce bit-identical
@@ -97,88 +97,60 @@ def _l2_frag(a: str, b: str, dim: int) -> str:
     return _dim_guard(acc, dim, a, b)
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+# --- Spark fold texts: the one definition of each vector expression ---
+# Builders embed the text in spark.sql statements; DataFrame code takes
+# the same text through F.expr (the ``*_col`` forms).  Arguments are SQL
+# expressions (usually column names).
 
 
-def _sqn_fold(a: Column) -> Column:
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
-def dot_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """Sequential double dot product of two fixed-``dim`` float vectors
-    (see the formulation note above; the fold consumes the full array,
-    so no dim guard is needed)."""
-    return _dot_fold(_c(a), _c(b))
-
-
-def sq_norm_col(a: Column | str, dim: int = _DIM) -> Column:
-    return _sqn_fold(_c(a))
-
-
-def cosine_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """round(dot / sqrt(na*nb), 6) — formula mirrored verbatim in SQL."""
-    return F.round(
-        dot_col(a, b, dim) / F.sqrt(sq_norm_col(a, dim) * sq_norm_col(b, dim)), 6
-    )
-
-
-def cosine_pre_col(
-    a: Column | str, na: Column | str, b: Column | str, nb: Column | str
-) -> Column:
-    """Cosine with PRE-COMPUTED squared norms (r14 optimization):
-    ``round(dot(a,b) / sqrt(na * nb), 6)`` where ``na``/``nb`` are
-    columns holding ``sq_norm_col(a)`` / ``sq_norm_col(b)`` computed in
-    an upstream projection.  Bit-identical to ``cosine_col`` — the norm
-    folds produce the same doubles wherever they run, and the final
-    ``/ sqrt(na*nb)`` and round are the same IEEE ops — but the
-    per-PAIR work drops from three folds to one: a norm is per-ROW,
-    computed once and reused across every pair the row joins into
-    (A/B at sf0.1 assignment stage: 0.84-1.12 s → 0.40-0.51 s)."""
-    return F.round(_dot_fold(_c(a), _c(b)) / F.sqrt(_c(na) * _c(nb)), 6)
-
-
-# --- Spark-SQL text twins of the folds (r14, guide §7.3) -------------------
-# The benched similarity builders are stated as ONE parsed SQL statement
-# per pipeline stage instead of eagerly-analyzed Dataset ops (IVF build
-# was ~1.1 s, PQ ~0.8 s of driver-side analysis per call at any scale).
-# These emit the IDENTICAL expressions the Column folds analyze to —
-# same 0.0D seed, same cast/multiply order — so the executed plan and
-# every result bit are unchanged (snapshot- + oracle-gated).
-
-
-def _dot_fold_sparksql(a: str, b: str) -> str:
+def dot_sql(a: str, b: str) -> str:
+    """Sequential double dot product (see the formulation note above;
+    the fold consumes the full array, so no dim guard is needed)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) *"
         f" CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _sqn_fold_sparksql(a: str) -> str:
+def sq_norm_sql(a: str) -> str:
     return (
         f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) *"
         f" CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def _cos_fold_sparksql(a: str, b: str) -> str:
-    return (
-        f"round({_dot_fold_sparksql(a, b)} / "
-        f"sqrt({_sqn_fold_sparksql(a)} * {_sqn_fold_sparksql(b)}), 6)"
-    )
+def cosine_sql(a: str, b: str) -> str:
+    """round(dot / sqrt(na*nb), 6) — formula mirrored verbatim in the
+    DuckDB oracles (``_cos_sql``)."""
+    return f"round({dot_sql(a, b)} / sqrt({sq_norm_sql(a)} * {sq_norm_sql(b)}), 6)"
 
 
-def _cos_pre_sparksql(a: str, na: str, b: str, nb: str) -> str:
-    return f"round({_dot_fold_sparksql(a, b)} / sqrt({na} * {nb}), 6)"
+def cosine_pre_sql(a: str, na: str, b: str, nb: str) -> str:
+    """Cosine with PRE-COMPUTED squared norms (r14 optimization):
+    ``round(dot(a,b) / sqrt(na * nb), 6)`` where ``na``/``nb`` hold
+    ``sq_norm_sql(a)`` / ``sq_norm_sql(b)`` computed in an upstream
+    projection.  Bit-identical to ``cosine_sql`` — the norm folds
+    produce the same doubles wherever they run, and the final
+    ``/ sqrt(na*nb)`` and round are the same IEEE ops — but the
+    per-PAIR work drops from three folds to one: a norm is per-ROW,
+    computed once and reused across every pair the row joins into
+    (A/B at sf0.1 assignment stage: 0.84-1.12 s → 0.40-0.51 s)."""
+    return f"round({dot_sql(a, b)} / sqrt({na} * {nb}), 6)"
+
+
+def sq_norm_col(a: str) -> Column:
+    return F.expr(sq_norm_sql(a))
+
+
+def cosine_col(a: str, b: str) -> Column:
+    return F.expr(cosine_sql(a, b))
+
+
+def cosine_pre_col(a: str, na: str, b: str, nb: str) -> Column:
+    return F.expr(cosine_pre_sql(a, na, b, nb))
+
+
+# --- DuckDB oracle texts (the same folds via list_reduce) ---
 
 
 def _dot_sql(a: str, b: str, dim: int = _DIM) -> str:
@@ -199,8 +171,8 @@ def _cos_sql(a: str, b: str, dim: int = _DIM) -> str:
 
 
 def _l2_sql(a: str, b: str, dim: int) -> str:
-    """DuckDB squared-L2 as the identical sequential double fold that
-    ``_l2_col`` states in Spark."""
+    """DuckDB squared-L2 as the identical sequential double chain that
+    ``_l2_frag`` states in Spark."""
     term = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
     return (
         f"list_reduce(list_transform(range(1, {dim + 1}), "
@@ -235,18 +207,19 @@ def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: squared norms pre-computed per ROW (query norm once in the
     # 1-row broadcast frame instead of per corpus row; corpus norm in
     # the scan projection) — the scoring expression is one fold-dot
-    # instead of three folds, same bits (see cosine_pre_col).  Stated
-    # as ONE SQL text (see the fold-twin note above).
+    # instead of three folds, same bits (see cosine_pre_sql).  Stated
+    # as ONE SQL text (r14: one parse/analysis instead of eager per-op
+    # analysis).
     return spark.sql(
         f"""
         SELECT /*+ BROADCAST(q) */ v.vec_id, v.label,
-               {_cos_pre_sparksql('v.embedding', 'v.__n', 'q.qv', 'q.__qn')}
+               {cosine_pre_sql('v.embedding', 'v.__n', 'q.qv', 'q.__qn')}
                  AS cos_sim
         FROM (SELECT vec_id, label, embedding,
-                     {_sqn_fold_sparksql('embedding')} AS __n
+                     {sq_norm_sql('embedding')} AS __n
               FROM {{e}} WHERE vec_id != 0) v
         CROSS JOIN (SELECT embedding AS qv,
-                           {_sqn_fold_sparksql('embedding')} AS __qn
+                           {sq_norm_sql('embedding')} AS __qn
                     FROM {{e2}} WHERE vec_id = 0) q
         ORDER BY cos_sim DESC, vec_id
         LIMIT 10
@@ -274,21 +247,22 @@ def _plane(j: int) -> list[float]:
     return coefs
 
 
-def _bucket_col(vec: str) -> Column:
+def _bucket_sql(vec: str) -> str:
     """LSH bucket id: sign bit per hyperplane, packed into an int.
 
-    Plane dots are ``dot_col`` folds against literal coefficient
-    arrays (the same left-associated ``0.0``-seeded chain, so the sign
-    — and therefore the bucket — is unchanged).  r14: reverted from
-    the r13 unrolled fragment — 6 planes × 64 terms in one projection
-    is far past the JIT method limit, so the unroll ran as interpreted
+    Plane dots are ``dot_sql`` folds against literal coefficient arrays
+    (the same left-associated ``0.0``-seeded chain, so the sign — and
+    therefore the bucket — is unchanged).  The coefficients are exact
+    binary fractions written as ``D``-suffixed ``repr`` values, which
+    the parser reads back bit-exactly.  r14: reverted from the r13
+    unrolled fragment — 6 planes × 64 terms in one projection is far
+    past the JIT method limit, so the unroll ran as interpreted
     bytecode, slower than the fold it replaced (see the formulation
     note at the top of this module)."""
-    bucket = F.lit(0)
+    bucket = "0"
     for j in range(_N_PLANES):
-        plane = F.array(*[F.lit(c) for c in _plane(j)])
-        d = dot_col(F.col(vec), plane)
-        bucket = bucket + F.when(d >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+        plane = "array(" + ", ".join(f"{c!r}D" for c in _plane(j)) + ")"
+        bucket += f" + CASE WHEN {dot_sql(vec, plane)} >= 0 THEN {1 << j} ELSE 0 END"
     return bucket
 
 
@@ -365,11 +339,11 @@ def q_sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order).  Tests additionally assert candidate-exactness
     and recall vs q_sim_search."""
     e = load_table(spark, sf_dir, "embeddings")
-    bucketed = e.withColumn("bucket", _bucket_col("embedding"))
+    bucketed = e.withColumn("bucket", F.expr(_bucket_sql("embedding")))
     q = bucketed.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qbucket"),
-        # r14: query norm once in the broadcast frame (cosine_pre_col)
+        # r14: query norm once in the broadcast frame (cosine_pre_sql)
         sq_norm_col("embedding").alias("__qn"),
     )
     # query bucket + Hamming-1 and Hamming-2 probes, as a broadcast frame
@@ -549,16 +523,27 @@ def _per_dim_means(
     centroid), shared by the IVF coarse quantizer, the PQ codebooks and
     ``operators.ann.train_centroids``."""
     return (
-        assigned.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        assigned.selectExpr(*keys, f"posexplode({vec}) AS (pos, x)")
         .groupBy(*keys, "pos")
-        .agg(davg(F.col("x").cast("double")).alias("m"))
+        .agg(davg("CAST(x AS DOUBLE)").alias("m"))
         .groupBy(*keys)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select(
-            *keys,
-            F.transform("pm", lambda st: st.getField("m")).alias("centroid"),
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(pos, m))), st -> st.m)"
+            ).alias("centroid")
         )
     )
+
+
+# The long-packed argmax over (cdist, cell) for _assign_cells(n=1):
+# the rounded score in the high bits, the cell in the low 31.
+_ARGMAX_ENC = (
+    "min(CAST(1000001 - (CASE WHEN isnan(cdist) THEN -1000001 ELSE"
+    " CASE WHEN cdist >= 0"
+    " THEN FLOOR(cdist * CAST(1000000 AS DOUBLE) + 0.5D)"
+    " ELSE - FLOOR(- cdist * CAST(1000000 AS DOUBLE) + 0.5D) END END)"
+    " AS BIGINT) * 2147483648L + CAST(cell AS BIGINT))"
+)
 
 
 def _assign_cells(vecs: DataFrame, centroids: DataFrame, n: int = 1) -> DataFrame:
@@ -568,14 +553,12 @@ def _assign_cells(vecs: DataFrame, centroids: DataFrame, n: int = 1) -> DataFram
     n=1 (the corpus-side hot path) is a long-packed argmax under a
     plain HashAggregate whose GROUPING KEY carries the payload columns
     (constant per vec_id, so the grouping is unchanged — see below).
-    n>1 (the tiny query-side multiprobe) keeps the windowed top-n, and
-    deliberately keeps the FOLD cosine (Column form): its input is a
-    bounded frame (1 probe × k centroids), where a fresh codegen
-    compile of the unrolled cosine costs more than interpreting k rows
-    at any scale."""
+    n>1 (the tiny query-side multiprobe) keeps the windowed top-n over
+    the plain 3-fold cosine: its input is a bounded frame (1 probe × k
+    centroids), so pre-computed norms would save nothing."""
     if n > 1:
         scored = vecs.crossJoin(F.broadcast(centroids)).withColumn(
-            "cdist", cosine_col(F.col("embedding"), F.col("centroid"))
+            "cdist", cosine_col("embedding", "centroid")
         )
         w = Window.partitionBy("vec_id").orderBy(
             F.col("cdist").desc(), F.col("cell")
@@ -617,35 +600,22 @@ def _assign_cells(vecs: DataFrame, centroids: DataFrame, n: int = 1) -> DataFram
     #   squared norm per ROW (reused across all k centroid pairings),
     #   and the centroid norms land in the k-row broadcast frame — the
     #   per-pair work is one dot fold, not three folds.
-    cents = centroids.select(
-        "cell", "centroid", sq_norm_col("centroid").alias("__cn")
+    cents = centroids.selectExpr(
+        "cell", "centroid", f"{sq_norm_sql('centroid')} AS __cn"
     )
     scored = (
-        vecs.withColumn("__vn", sq_norm_col("embedding"))
+        vecs.selectExpr("*", f"{sq_norm_sql('embedding')} AS __vn")
         .crossJoin(F.broadcast(cents))
-        .withColumn(
-            "cdist", cosine_pre_col("embedding", "__vn", "centroid", "__cn")
+        .selectExpr(
+            "*",
+            f"{cosine_pre_sql('embedding', '__vn', 'centroid', '__cn')} AS cdist",
         )
     )
-    n_enc = F.when(
-        F.isnan(F.col("cdist")), F.lit(-1000001)
-    ).otherwise(
-        F.when(
-            F.col("cdist") >= 0, F.floor(F.col("cdist") * 1e6 + F.lit(0.5))
-        ).otherwise(-F.floor(-F.col("cdist") * 1e6 + F.lit(0.5)))
-    )
-    enc = (F.lit(1000001) - n_enc).cast("long") * F.lit(1 << 31) + F.col(
-        "cell"
-    ).cast("long")
+    cell_type = dict(centroids.dtypes)["cell"]
     return (
         scored.groupBy(*vecs.columns)
-        .agg(F.min(enc).alias("__b"))
-        .select(
-            *vecs.columns,
-            (F.col("__b") % F.lit(1 << 31))
-            .cast(dict(centroids.dtypes)["cell"])
-            .alias("cell"),
-        )
+        .agg(F.expr(_ARGMAX_ENC).alias("__b"))
+        .selectExpr(*vecs.columns, f"CAST(__b % 2147483648L AS {cell_type}) AS cell")
     )
 
 
@@ -696,69 +666,6 @@ def _ivf_oracle() -> str:
     """
 
 
-# SQL-text twins of _assign_cells(n=1)/_per_dim_means for the benched
-# IVF builder (r14 build-cost move — see the fold-twin note; ann.py and
-# semdedup.py keep the Column helpers).  Emits the same long-packed
-# argmax over the same pre-normed cosine as the Column path.
-
-
-def _argmax_enc_sparksql() -> str:
-    """The r13/r14 long-packed argmax over (cdist, cell) columns —
-    identical CASE/FLOOR/packing expressions to _assign_cells' n=1
-    path."""
-    n_enc = (
-        "CASE WHEN isnan(cdist) THEN -1000001 ELSE"
-        " CASE WHEN cdist >= 0"
-        " THEN FLOOR(cdist * CAST(1000000 AS DOUBLE) + 0.5D)"
-        " ELSE - FLOOR(- cdist * CAST(1000000 AS DOUBLE) + 0.5D) END END"
-    )
-    return f"min(CAST(1000001 - ({n_enc}) AS BIGINT) * 2147483648L + CAST(cell AS BIGINT))"
-
-
-def _per_dim_means_sparksql(keys: str, src: str, vec: str = "embedding") -> str:
-    """compat.davg per dimension per key — same posexplode + decimal
-    mean + array_sort(collect_list(struct)) reassembly as
-    _per_dim_means."""
-    m = davg_sql("CAST(x AS DOUBLE)")
-    return f"""
-  SELECT {keys}, transform(array_sort(collect_list(struct(pos, m))),
-                           st -> st.m) AS centroid
-  FROM (SELECT {keys}, pos, {m} AS m
-        FROM (SELECT {keys}, posexplode({vec}) AS (pos, x) FROM {src})
-        GROUP BY {keys}, pos)
-  GROUP BY {keys}"""
-
-
-def _ivf_assign1_subquery(vecs_sql: str, cents_rel: str) -> str:
-    """Subquery text for the n=1 broadcast-assign: score every vector
-    of ``vecs_sql`` against ``cents_rel`` (pre-normed cosine) and keep
-    the argmax cell per vector via the long-packed min.
-
-    Deliberately NOT a WITH/CTE: the CacheManager keys cached frames on
-    the CTE-INLINED normalized plan, so a persisted frame whose
-    producing statement contains a CTE is never substituted back into
-    consumers (measured r14: the IVF centroid and PQ codebook pins were
-    silently dead as CTEs — plans showed the quantizer pipeline
-    recomputed per consumer; nested subqueries restore the
-    InMemoryTableScans)."""
-    cos = _cos_pre_sparksql("v.embedding", "v.__vn", "c.centroid", "c.__cn")
-    return f"""
-  (SELECT vec_id, embedding, label,
-          CAST(__b % 2147483648L AS BIGINT) AS cell
-   FROM (SELECT vec_id, embedding, label, {_argmax_enc_sparksql()} AS __b
-         FROM (
-           SELECT /*+ BROADCAST(c) */ v.vec_id, v.embedding, v.label,
-                  c.cell,
-                  {cos} AS cdist
-           FROM (SELECT vec_id, embedding, label,
-                        {_sqn_fold_sparksql('embedding')} AS __vn
-                 FROM {vecs_sql}) v
-           CROSS JOIN (SELECT cell, centroid,
-                              {_sqn_fold_sparksql('centroid')} AS __cn
-                       FROM {cents_rel}) c)
-         GROUP BY vec_id, embedding, label))"""
-
-
 @register(
     "q_sim_search_ivf", oracle=_ivf_oracle(), tags=("llm", "similarity", "approx")
 )
@@ -775,61 +682,46 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreaks), so the whole pipeline is hash-checked against a DuckDB
     oracle; tests additionally assert recall vs q_sim_search."""
     e = load_table(spark, sf_dir, "embeddings")
-    # Two SQL statements (r14, guide §7.3 — one parse/analysis each;
-    # ~1.1 s of eager per-op analysis removed per build, executed plan
-    # unchanged): the quantizer build, then assignment + probe + score.
-    # The 10-row centroid frame stays pinned (r11, A/B-measured): its
-    # LINEAGE is the whole seed-assign + Lloyd-mean pipeline over the
-    # corpus, and both the corpus-side and the probe-side assignment
-    # consume it.  The persist is taken AFTER the last templated
-    # spark.sql (the formatter's temp-view cleanup uncaches referenced
-    # frames — see llm_text.q_dedup_fuzzy).
-    cents = spark.sql(
-        f"""
-        {_per_dim_means_sparksql(
-            'cell',
-            _ivf_assign1_subquery(
-                f'(SELECT * FROM {{e}})',
-                f'(SELECT vec_id AS cell, embedding AS centroid FROM {{seeds}}'
-                f' WHERE vec_id < {_IVF_CELLS})',
-            ) + ' assigned',
-        )}
-        """,
-        e=e,
-        seeds=e,
-    )
+    # The quantizer build and the corpus assignment are the shared
+    # frame helpers (built with selectExpr/F.expr, one parse per
+    # expression); probe + score is one SQL statement.  The 10-row
+    # centroid frame stays pinned (r11, A/B-measured): its LINEAGE is
+    # the whole seed-assign + Lloyd-mean pipeline over the corpus, and
+    # both the corpus-side and the probe-side assignment consume it.
+    # The persist is taken AFTER the templated spark.sql (the
+    # formatter's temp-view cleanup uncaches referenced frames — see
+    # llm_text.q_dedup_fuzzy).
+    cents = _ivf_centroids(e)
+    corpus = _assign_cells(e.where("vec_id != 0"), cents)
     out = spark.sql(
         f"""
         WITH corpus AS (
           SELECT vec_id, embedding, label, cell,
-                 {_sqn_fold_sparksql('embedding')} AS __n
-          FROM {_ivf_assign1_subquery(
-              f'(SELECT * FROM {{e}} WHERE vec_id != 0)', '{cents}'
-          )} assigned),
+                 {sq_norm_sql('embedding')} AS __n
+          FROM {{corpus}}),
         probes AS (
           SELECT cell, embedding AS qv,
-                 {_sqn_fold_sparksql('embedding')} AS __qn
+                 {sq_norm_sql('embedding')} AS __qn
           FROM (
             SELECT s.*, row_number() OVER (
                      PARTITION BY vec_id ORDER BY cdist DESC, cell
                    ) AS crnk
             FROM (SELECT /*+ BROADCAST(c) */ v.vec_id, v.embedding, v.label,
                          c.cell,
-                         {_cos_fold_sparksql('v.embedding', 'c.centroid')}
+                         {cosine_sql('v.embedding', 'c.centroid')}
                            AS cdist
                   FROM (SELECT * FROM {{e2}} WHERE vec_id = 0) v
                   CROSS JOIN {{cents2}} c) s)
           WHERE crnk <= {_IVF_NPROBE})
         SELECT /*+ BROADCAST(p) */ c.vec_id, c.label,
-               {_cos_pre_sparksql('c.embedding', 'c.__n', 'p.qv', 'p.__qn')}
+               {cosine_pre_sql('c.embedding', 'c.__n', 'p.qv', 'p.__qn')}
                  AS cos_sim
         FROM corpus c JOIN probes p ON c.cell = p.cell
         ORDER BY cos_sim DESC, vec_id
         LIMIT 10
         """,
-        e=e,
+        corpus=corpus,
         e2=e,
-        cents=cents,
         cents2=cents,
     )
     persist_tracked(cents)
@@ -843,77 +735,6 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M = 4        # subspaces (64-dim → 4 × 16-dim subvectors)
 _PQ_K = 32       # codes per subspace → 4 bytes/vector vs 256 raw (64×)
 _PQ_RERANK = 200  # exact-rerank pool (the recall/latency knob)
-
-
-def _pq_subvectors(e: DataFrame, dim: int = 64) -> DataFrame:
-    """(vec_id, label, s, sub): each vector split into _PQ_M slices."""
-    width = dim // _PQ_M
-    return e.select(
-        "vec_id",
-        "label",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice("embedding", s * width + 1, width)
-                    for s in range(_PQ_M)
-                ]
-            )
-        ).alias("s", "sub"),
-    )
-
-
-def _l2_col(a: Column | str, b: Column | str, dim: int = _DIM) -> Column:
-    """Squared L2 as the same sequential double chain ``_l2_sql`` states
-    (unrolled + JVM-parsed on the string path — see ``dot_col``)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_l2_frag(a, b, dim))
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _pq_codebooks(sub: DataFrame) -> DataFrame:
-    """(s, cell, centroid): per-subspace codebook — deterministic seeds
-    (vec_id 0.._PQ_K-1) + one Lloyd refinement, the same distributed
-    recipe as the IVF coarse quantizer (broadcast-assign, groupBy
-    means; no driver loops).  Means are ``compat.davg`` (decimal-exact,
-    summation-order-independent) so the codebook is bit-reproducible
-    and statable in the DuckDB oracle."""
-    seeds = sub.where(F.col("vec_id") < _PQ_K).select(
-        "s", F.col("vec_id").alias("cell"), F.col("sub").alias("centroid")
-    )
-    assigned = _pq_assign(sub, seeds)
-    return _per_dim_means(
-        assigned.join(sub.select("vec_id", "s", "sub"), ["vec_id", "s"]),
-        ["s", "cell"],
-        "sub",
-    )
-
-
-def _pq_assign(sub: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """(vec_id, s, cell): nearest codebook entry per subvector (L2,
-    deterministic cell-id tiebreak); codebooks broadcast.
-
-    argmin as ``min(struct(d2, cell)).cell`` — structs order
-    lexicographically, so the minimum IS (smallest distance, smallest
-    cell on ties).  A hash aggregate partial-combines map-side and
-    never sorts; the row_number-window formulation costs a full
-    (vec_id, s) shuffle-sort for the same answer."""
-    scored = sub.join(F.broadcast(codebooks), "s").withColumn(
-        "__d2", _l2_col("sub", "centroid", _DIM // _PQ_M)
-    )
-    return (
-        scored.groupBy("vec_id", "s")
-        .agg(F.min(F.struct(F.col("__d2"), F.col("cell"))).alias("__b"))
-        .select("vec_id", "s", F.col("__b.cell").alias("cell"))
-    )
 
 
 def _pq_oracle() -> str:
@@ -1001,13 +822,12 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally assert a recall floor vs q_sim_search."""
     e = load_table(spark, sf_dir, "embeddings")
     # Three SQL statements (r14, guide §7.3 — one parse/analysis each,
-    # ~0.6 s of eager per-op analysis removed per build; executed plan
-    # unchanged, snapshot- + oracle-gated): subvector split, codebook
-    # training, then code-assign + ADC scan + exact rerank.  The
-    # sub/books pins are unchanged (both feed multiple consumers);
-    # persists are taken AFTER the last templated spark.sql (the
-    # formatter's temp-view cleanup uncaches referenced frames — see
-    # llm_text.q_dedup_fuzzy).
+    # ~0.6 s of eager per-op analysis removed per build): subvector
+    # split, codebook seed-assignment (then the shared _per_dim_means
+    # Lloyd step), then code-assign + ADC scan + exact rerank.  The
+    # sub/books pins feed multiple consumers; persists are taken AFTER
+    # the last templated spark.sql (the formatter's temp-view cleanup
+    # uncaches referenced frames — see llm_text.q_dedup_fuzzy).
     width = _DIM // _PQ_M
     slices = ", ".join(
         f"slice(embedding, {s * width + 1}, {width})" for s in range(_PQ_M)
@@ -1021,30 +841,30 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-subspace codebooks: seed-assign (unrolled 16-dim L2, the one
     # width that JIT-compiles — see the formulation note) + Lloyd means
     l2 = _l2_frag("v.sub", "sd.centroid", width)
-    # nested subqueries, not CTEs: a CTE-bearing producer is never
-    # substituted back from the cache (see _ivf_assign1_subquery)
-    books = spark.sql(
+    # nested subqueries, not CTEs: the CacheManager keys cached frames
+    # on the CTE-INLINED normalized plan, so a persisted frame whose
+    # producing statement contains a CTE is never substituted back into
+    # consumers (measured r14: the IVF centroid and PQ codebook pins
+    # were silently dead as CTEs)
+    assigned = spark.sql(
         f"""
-        {_per_dim_means_sparksql(
-            's, cell',
-            f'''(SELECT a.s, a.cell, v.sub
-   FROM (SELECT vec_id, s, __b.cell AS cell
-         FROM (SELECT vec_id, s, min(struct(__d2, cell)) AS __b
-               FROM (SELECT /*+ BROADCAST(sd) */ v.vec_id, v.s, sd.cell,
-                            {l2} AS __d2
-                     FROM {{sub}} v
-                     JOIN (SELECT s, vec_id AS cell, sub AS centroid
-                           FROM {{seeds}} WHERE vec_id < {_PQ_K}) sd
-                       ON v.s = sd.s)
-               GROUP BY vec_id, s)) a
-   JOIN {{sub2}} v ON a.vec_id = v.vec_id AND a.s = v.s) j''',
-            'sub',
-        )}
+        SELECT a.s, a.cell, v.sub
+        FROM (SELECT vec_id, s, __b.cell AS cell
+              FROM (SELECT vec_id, s, min(struct(__d2, cell)) AS __b
+                    FROM (SELECT /*+ BROADCAST(sd) */ v.vec_id, v.s, sd.cell,
+                                 {l2} AS __d2
+                          FROM {{sub}} v
+                          JOIN (SELECT s, vec_id AS cell, sub AS centroid
+                                FROM {{seeds}} WHERE vec_id < {_PQ_K}) sd
+                            ON v.s = sd.s)
+                    GROUP BY vec_id, s)) a
+        JOIN {{sub2}} v ON a.vec_id = v.vec_id AND a.s = v.s
         """,
         sub=sub,
         seeds=sub,
         sub2=sub,
     )
+    books = _per_dim_means(assigned, ["s", "cell"], "sub")
     l2b = _l2_frag("v.sub", "b.centroid", width)
     out = spark.sql(
         f"""
@@ -1060,7 +880,7 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
           -- bounded frame (_PQ_M x _PQ_K = 128 rows): fold, not unroll
           -- (a codegen compile costs more than 128 interpreted dots)
           SELECT b.s, b.cell,
-                 {_dot_fold_sparksql('q.qsub', 'b.centroid')} AS pdot
+                 {dot_sql('q.qsub', 'b.centroid')} AS pdot
           FROM (SELECT s, sub AS qsub FROM {{sub2}} WHERE vec_id = 0) q
           JOIN {{books2}} b ON q.s = b.s),
         approx AS (
@@ -1072,7 +892,7 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
           LIMIT {_PQ_RERANK})
         SELECT /*+ BROADCAST(q) */ e.vec_id, e.label,
                -- bounded frame (_PQ_RERANK rows): fold, not unroll
-               {_cos_fold_sparksql('e.embedding', 'q.qv')} AS cos_sim
+               {cosine_sql('e.embedding', 'q.qv')} AS cos_sim
         FROM approx a
         JOIN {{e}} e ON a.vec_id = e.vec_id
         CROSS JOIN (SELECT embedding AS qv FROM {{e2}} WHERE vec_id = 0) q

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # r13: events.value is fixed-point-certified (see compat.dsum_fp)
-from ..compat import dsum_fp as dsum, dsum_sql
+from ..compat import dsum_fp, dsum_sql
 from ..io import load_table
 from ..operators.sessionize import sessionize
 from ..registry import register
@@ -53,7 +53,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(win.alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
+            dsum_fp("value").alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("win_start"),
@@ -99,7 +99,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(win.alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
+            dsum_fp("value").alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("win_start"),
@@ -154,7 +154,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
-            dsum("value").alias("sum_value"),
+            dsum_fp("value").alias("sum_value"),
         )
         .select(
             "user_id",
@@ -324,7 +324,7 @@ def q_sessionize_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
+            dsum_fp("value").alias("sum_value"),
         )
         .select(
             "user_id",

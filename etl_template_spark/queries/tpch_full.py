@@ -37,8 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# r13: certified money inputs -> fixed-point dsum twin (see compat.dsum_fp)
-from ..compat import davg_sql, dsum_fp as dsum, dsum_sql, fp6
+# r13: certified money inputs -> fixed-point sums (see compat.dsum_fp_sql)
+from ..compat import davg_fp, davg_sql, dsum_fp, dsum_fp_sql, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -77,7 +77,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.03, 0.07)
         & (F.col("l_quantity") < 24)
     )
-    return li.agg(dsum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
+    return li.agg(dsum_fp("l_extendedprice * l_discount").alias("revenue"))
 
 
 # ---------------------------------------------------------------------------
@@ -185,15 +185,12 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CASE inside the partial agg), then one IEEE division per year and a
     decimal-routed round — bit-identical across engines and cluster
     sizes."""
-    from ..compat import fp6_sparksql
-
     # r14 (guide §7.3): the 7-table star stated as ONE SQL text — one
     # parse+analysis instead of seven eagerly-analyzed join ops over a
-    # growing plan (~0.28 s → ~0.1 s of driver-side build; same
-    # executed plan, snapshot- and oracle-gated).  r13's fp6 sums are
-    # kept verbatim via the ``fp6_sparksql`` twin: same exact rationals
-    # as sum(dec(...)), so the double quotient (and its 30,8 re-round)
-    # is unchanged.
+    # growing plan (~0.28 s → ~0.1 s of driver-side build).  The r13
+    # fixed-point sums are ``dsum_fp_sql``: same exact rationals as
+    # sum(dec(...)), so the double quotient (and its 30,8 re-round) is
+    # unchanged.
     vol = "l_extendedprice * (1 - l_discount)"
     nat_vol = f"CASE WHEN supp_nation = 'NATION_12' THEN {vol} ELSE 0.0D END"
     return spark.sql(
@@ -201,8 +198,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT /*+ BROADCAST(n1), BROADCAST(n2), BROADCAST(r) */
                year(o_orderdate) AS o_year,
                CAST(CAST(
-                 CAST(SUM({fp6_sparksql(nat_vol)}) / 1000000 AS DOUBLE)
-                 / CAST(SUM({fp6_sparksql(vol)}) / 1000000 AS DOUBLE)
+                 {dsum_fp_sql(nat_vol)} / {dsum_fp_sql(vol)}
                AS DECIMAL(30,8)) AS DOUBLE) AS mkt_share
         FROM {{li}} li
         JOIN {{o}} o ON li.l_orderkey = o.o_orderkey
@@ -266,9 +262,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     p = load_table(spark, sf_dir, "part").where(F.col("p_name").like("%red%"))
     n = load_table(spark, sf_dir, "nation")
-    profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "p_retailprice"
-    ) * 0.1 * F.col("l_quantity")
+    profit = "l_extendedprice * (1 - l_discount) - p_retailprice * 0.1D * l_quantity"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -277,7 +271,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
-        .agg(F.round(dsum(profit), 4).alias("sum_profit"))
+        .agg(F.round(dsum_fp(profit), 4).alias("sum_profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -323,8 +317,8 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_extendedprice") * F.col("l_quantity")).alias("val"),
         )
     )
-    per_part = base.groupBy("l_partkey").agg(dsum("val").alias("part_value"))
-    total = base.agg((dsum("val") * F.lit(0.001)).alias("_threshold"))
+    per_part = base.groupBy("l_partkey").agg(dsum_fp("val").alias("part_value"))
+    total = base.agg((dsum_fp("val") * F.lit(0.001)).alias("_threshold"))
     return (
         per_part.join(F.broadcast(total))
         .where(F.col("part_value") > F.col("_threshold"))
@@ -414,9 +408,9 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= _ts("1996-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ts("1996-04-01 00:00:00"))
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(dsum(rev), 4).alias("total_revenue")
+        F.round(dsum_fp(rev), 4).alias("total_revenue")
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("_max_rev"))
     s = load_table(spark, sf_dir, "supplier")
@@ -462,15 +456,14 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part_avg = li.groupBy(F.col("l_partkey").alias("_pk")).agg(
         (
             F.lit(0.2)
-            * ((F.sum(fp6("l_quantity")) / F.lit(1000000)).cast("double")
-               / F.count("l_quantity"))
+            * davg_fp("l_quantity")
         ).alias("_qty_cap")
     )
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .join(per_part_avg, li.l_partkey == F.col("_pk"))
         .where(F.col("l_quantity") < F.col("_qty_cap"))
-        .agg((dsum("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
+        .agg((dsum_fp("l_extendedprice") / F.lit(7.0)).alias("avg_yearly"))
     )
 
 
@@ -525,11 +518,11 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") >= 20)
         & (F.col("l_quantity") <= 30)
     )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(p, li.l_partkey == p.p_partkey)
         .where(band)
-        .agg(F.round(dsum(rev), 4).alias("revenue"))
+        .agg(F.round(dsum_fp(rev), 4).alias("revenue"))
     )
 
 
@@ -572,12 +565,13 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim.  Quantities are integral doubles summed as exact decimals, so
     the 2× comparison is engine-independent."""
     li = load_table(spark, sf_dir, "lineitem")
-    recent = (F.col("l_shipdate") >= _ts("1996-01-01 00:00:00")) & (
-        F.col("l_shipdate") < _ts("1996-07-01 00:00:00")
+    recent = (
+        "l_shipdate >= CAST('1996-01-01 00:00:00' AS TIMESTAMP)"
+        " AND l_shipdate < CAST('1996-07-01 00:00:00' AS TIMESTAMP)"
     )
     pair_qty = li.groupBy("l_partkey", "l_suppkey").agg(
-        dsum("l_quantity").alias("total_qty"),
-        dsum(F.when(recent, F.col("l_quantity")).otherwise(F.lit(0.0))).alias(
+        dsum_fp("l_quantity").alias("total_qty"),
+        dsum_fp(f"CASE WHEN {recent} THEN l_quantity ELSE 0.0D END").alias(
             "recent_qty"
         ),
     )
@@ -729,8 +723,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
     )
     avg_bal = codes.where(F.col("c_acctbal") > 0.0).agg(
-        ((F.sum(fp6("c_acctbal")) / F.lit(1000000)).cast("double")
-         / F.count("c_acctbal")).alias("_avg_bal")
+        davg_fp("c_acctbal").alias("_avg_bal")
     )
     o_keys = load_table(spark, sf_dir, "orders").select("o_custkey")
     return (
@@ -740,7 +733,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cntrycode")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            dsum("c_acctbal").alias("totacctbal"),
+            dsum_fp("c_acctbal").alias("totacctbal"),
         )
         .orderBy("cntrycode")
     )

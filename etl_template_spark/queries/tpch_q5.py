@@ -48,8 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# r13: certified money inputs -> fixed-point dsum twin (see compat.dsum_fp)
-from ..compat import dsum_fp as dsum, dsum_sql
+# r13: certified money inputs -> fixed-point sums (see compat.dsum_fp_sql)
+from ..compat import dsum_fp, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -106,7 +106,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey") == F.col("n_nationkey"),
         "semi",
     )
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -119,7 +119,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(asia_nations), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
-            F.round(dsum(revenue), 4).alias("revenue"),
+            F.round(dsum_fp(revenue), 4).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .orderBy(F.col("revenue").desc(), F.col("n_name"))

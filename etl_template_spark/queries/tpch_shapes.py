@@ -26,8 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# r13: certified money inputs -> fixed-point dsum twin (see compat.dsum_fp)
-from ..compat import dsum_fp as dsum, dsum_fp_sparksql, dsum_sql
+# r13: certified money inputs -> fixed-point sums (see compat.dsum_fp_sql)
+from ..compat import dsum_fp, dsum_fp_sql, dsum_sql
 from ..io import load_table
 from ..registry import register
 
@@ -61,12 +61,12 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cutoff)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cutoff)
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(dsum(revenue), 4).alias("revenue"))
+        .agg(F.round(dsum_fp(revenue), 4).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
@@ -112,7 +112,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                total_qty
         FROM (SELECT l_orderkey, sum(l_quantity) AS qty,
-                     {dsum_fp_sparksql('l_quantity')} AS total_qty
+                     {dsum_fp_sql('l_quantity')} AS total_qty
               FROM {{li}} GROUP BY l_orderkey) big
         JOIN {{o}} o ON o.o_orderkey = big.l_orderkey
         JOIN {{c}} c ON o.o_custkey = c.c_custkey
@@ -210,7 +210,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair = (
         (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -223,7 +223,7 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(F.round(dsum(revenue), 4).alias("revenue"))
+        .agg(F.round(dsum_fp(revenue), 4).alias("revenue"))
     )
 
 
@@ -260,13 +260,13 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    revenue = "l_extendedprice * (1 - l_discount)"
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.round(dsum(revenue), 4).alias("revenue"))
+        .agg(F.round(dsum_fp(revenue), 4).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)

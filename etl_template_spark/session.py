@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+
 def _default_shuffle_partitions() -> int:
     # read per-call, not at import (r10 review): get_spark reads
     # SPARK_GRAFT_CPUS per call for local[N], so an env var set after
@@ -25,11 +26,6 @@ def _default_shuffle_partitions() -> int:
     # import-time constant left local[4] paired with 32 shuffle
     # partitions, the 8x-tasks-per-core skew the sizing exists to avoid
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-# backward-compat name: evaluated at import for callers that read it,
-# but get_spark itself uses the per-call reader above
-DEFAULT_SHUFFLE_PARTITIONS = _default_shuffle_partitions()
 
 
 def get_spark(

@@ -24,7 +24,10 @@ from hypothesis import strategies as st
 
 from etl_template_spark.compat import rounding_agreement_failures
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+# absolute, so a relative env value sweeps ITS parent dir (ADVICE r14)
+SF_DIR = os.path.abspath(
+    os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+)
 
 # r14 (ADVICE): the fixture-scanning guards sweep EVERY fixture SF dir
 # in one run, not just the session's SF_DIR — dsum_fp's bit-identity
@@ -32,7 +35,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # the driver benches or verifies against, in the same required suite.
 # (The env-pinned SF_DIR is kept in the list so an explicitly pointed
 # run still covers whatever the driver pointed at.)
-_FIXTURE_ROOT = os.path.dirname(SF_DIR.rstrip("/")) or "/root/testdata"
+_FIXTURE_ROOT = os.path.dirname(SF_DIR)
 SF_DIRS = sorted(
     {
         p
@@ -278,23 +281,20 @@ def test_derived_price_expressions_round_identically(sf_dir):
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_fixed_point_money_agreement(spark, sf_dir):
     """CONTRACT GATE for ``compat.dsum_fp``/``davg_fp``/``fp6`` (r13):
-    for every money column and derived expression routed through the
-    fixed-point twins, the pure-FP rounding
-    ``sign(x)·floor(|x|·1e6 + 0.5)`` must equal the unscaled value of
-    Spark's shortest-repr double→decimal(30,6) cast on EVERY value in
-    the fixtures — swept over EVERY fixture SF dir (r14 ADVICE), so a
-    driver-regenerated fixture at any scale trips the gate.  A single
-    divergent value here means the fast twins would no longer be
-    bit-identical to dsum/davg — move the affected call sites back to
-    the decimal path before shipping."""
+    for every money column and derived expression routed through
+    ``dsum_fp``/``davg_fp`` (``grep -rn 'd[a-z]*_fp'`` lists the sites),
+    the shipped ``compat.fp6`` rounding ``sign(x)·floor(|x|·1e6 + 0.5)``
+    must equal the unscaled value of Spark's shortest-repr
+    double→decimal(30,6) cast on EVERY value in the fixtures — swept
+    over EVERY fixture SF dir (r14 ADVICE), so a driver-regenerated
+    fixture at any scale trips the gate.  A single divergent value here
+    means the fixed-point sums would no longer be bit-identical to
+    dsum/davg — move the affected call sites back to the decimal path
+    before shipping."""
     from pyspark.sql import functions as F
 
+    from etl_template_spark.compat import fp6
     from etl_template_spark.io import load_table
-
-    def fast(c):
-        return F.when(c >= 0, F.floor(c * 1e6 + F.lit(0.5))).otherwise(
-            -F.floor(-c * 1e6 + F.lit(0.5))
-        ).cast("long")
 
     def exact(c):
         return (c.cast("decimal(30,6)") * 1000000).cast("long")
@@ -320,7 +320,7 @@ def test_fixed_point_money_agreement(spark, sf_dir):
             bad = (
                 df.select(x.alias("__x"))
                 .where(F.col("__x").isNotNull())
-                .where(fast(F.col("__x")) != exact(F.col("__x")))
+                .where(fp6("__x").cast("long") != exact(F.col("__x")))
                 .limit(3)
                 .collect()
             )

@@ -606,6 +606,31 @@ def test_load_table_events_handles_both_timestamp_generations(spark, tmp_path):
     assert got_ts == ts
 
 
+def test_load_table_handle_cache_replaces_stale_entry(spark, tmp_path):
+    """A fixture table regenerated in place is re-resolved, and its
+    stale handle is REPLACED: two regenerations leave one cache entry
+    for the table, serving the newest file's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_template_spark.io import _TABLE_HANDLES
+
+    d = str(tmp_path)
+    path = os.path.join(d, "supplier.parquet")
+
+    def regenerate(n):
+        pq.write_table(pa.table({"s_suppkey": list(range(n))}), path)
+        st = os.stat(path)  # distinct mtime even on a coarse clock
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + n * 10**9))
+
+    key = (os.path.abspath(d), "supplier")
+    for n in (1, 2, 3):
+        regenerate(n)
+        assert load_table(spark, d, "supplier").count() == n
+    entries = [k for k in _TABLE_HANDLES[spark] if k[0] == key[0]]
+    assert entries == [key]
+
+
 def test_diff_versions_library_api(spark, tmp_path):
     """io.diff_versions over hand-built versions: added/removed/changed
     classification, NULL-safe value comparison (a change to/from NULL

@@ -325,7 +325,7 @@ def test_salted_knn_equals_naive_under_random_blocks(spark, vecs, k, n_salts):
                       F.col("embedding").alias("emb1"))
     corpus = e.select("label", F.col("vec_id").alias("v2"),
                       F.col("embedding").alias("emb2"))
-    score = cosine_col(F.col("emb1"), F.col("emb2"))
+    score = cosine_col("emb1", "emb2")
     salted = knn_join_blocked(
         probes, corpus, block_col="label", probe_id_cols=("v1",),
         corpus_id_col="v2", score=score, k=k, score_name="cs",

@@ -651,7 +651,7 @@ def test_ivf_search_equals_brute_force_over_probed_cells(spark, sf_dir, tmp_path
         .select(
             "vec_id",
             cosine_col(
-                F.col("embedding"), F.array(*[F.lit(float(x)) for x in qv])
+                "embedding", "array(" + ", ".join(f"{float(x)!r}D" for x in qv) + ")"
             ).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), "vec_id")

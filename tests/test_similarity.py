@@ -98,7 +98,7 @@ def test_salted_knn_identical_to_naive(spark, skewed_vectors):
     salted = knn_join_blocked(
         probes, corpus,
         block_col="label", probe_id_cols=("v1",), corpus_id_col="v2",
-        score=cosine_col(F.col("emb1"), F.col("emb2")), k=3,
+        score=cosine_col("emb1", "emb2"), k=3,
         score_name="cos_sim", pair_filter=F.col("v1") != F.col("v2"),
     ).select("v1", "v2", "cos_sim", "rnk")
 
@@ -106,7 +106,7 @@ def test_salted_knn_identical_to_naive(spark, skewed_vectors):
     naive = (
         probes.join(corpus, "label")
         .where(F.col("v1") != F.col("v2"))
-        .select("v1", "v2", cosine_col(F.col("emb1"), F.col("emb2")).alias("cos_sim"))
+        .select("v1", "v2", cosine_col("emb1", "emb2").alias("cos_sim"))
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 3)
     )
@@ -130,7 +130,7 @@ def test_salted_pair_join_identical_to_naive(spark, skewed_vectors):
     b = e.select(
         "label", F.col("vec_id").alias("v2"), F.col("embedding").alias("emb2")
     )
-    cos = cosine_col(F.col("emb1"), F.col("emb2"))
+    cos = cosine_col("emb1", "emb2")
     salted = (
         salted_block_join(a, b, "label", "v2")
         .where(F.col("v1") < F.col("v2"))
