@@ -69,7 +69,6 @@ from ..operators.dedup import (
     lsh_candidate_pairs,
     minhash_signature,
     shingles_col,
-    tokens_col,
     verified_jaccard,
 )
 
@@ -123,7 +122,7 @@ def night_pairs(
         )
     try:
         sh_new = new_docs.select(
-            "doc_id", F.explode(shingles_col(tokens_col("text"), 3)).alias("s")
+            "doc_id", F.explode(shingles_col("text", 3)).alias("s")
         ).distinct()
         sig_new = minhash_signature(sh_new)
         if sig_new.isEmpty():  # fully-redelivered night: nothing to index

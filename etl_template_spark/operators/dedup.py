@@ -38,18 +38,26 @@ def tokens_col(text: str | Column = "text") -> Column:
     return F.split(c, " ", -1)
 
 
-def shingles_col(toks: Column, k: int = 3) -> Column:
-    """k-token shingles as strings; empty array when the doc has < k
-    tokens (mirrors DuckDB ``range`` semantics — Spark's ``sequence``
-    would count DOWN without the guard)."""
-    n = F.size(toks)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def shingles_sql(text: str = "text", k: int = 3) -> str:
+    """k-token shingles of the SQL expression ``text``, as SQL text:
+    one ``regexp_extract_all`` with a zero-width match at every token
+    start whose lookahead captures the next k tokens.  Tokens are
+    exactly ``split(text, ' ', -1)``, empty ones included, so shingle i
+    is ``concat_ws(' ', toks[i:i+k])``, in order, repeats kept; < k
+    tokens give an empty array and NULL gives NULL.  The start is
+    ``^|(?<= )``, not ``(?<![^ ])``: Java also tries the position inside
+    a surrogate pair, where that lookbehind passes and a non-BMP
+    character (an emoji) would start a bogus shingle.  A built-in
+    expression codegens into the JVM row loop: no lambda, no Python."""
+    if k < 1:
+        raise ValueError(f"shingle size must be >= 1, got {k}")
+    grams = " ".join(["[^ ]*"] * k)
+    return f"regexp_extract_all({text}, '(?:^|(?<= ))(?=({grams}))', 1)"
+
+
+def shingles_col(text: str = "text", k: int = 3) -> Column:
+    """:func:`shingles_sql` as a Column (``text`` is SQL text)."""
+    return F.expr(shingles_sql(text, k))
 
 
 # 32-bit shingle id from the first 8 hex chars of sha2-256 — DuckDB:

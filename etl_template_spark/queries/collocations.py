@@ -23,6 +23,13 @@ floor (>= 5) applies the standard PMI-sparsity guard before ranking.
 Float determinism: counts are exact integers; the PMI expression is
 the identical IEEE op tree in both engines (divisions → multiply → ln
 → round 6), the precedent q_bm25_rank established for ``ln``.
+
+Shingling plan note: q_ngram_pmi's plan changed through
+operators/dedup.shingles_col, which now shingles with one codegen'd
+``regexp_extract_all`` instead of an interpreted ``transform`` lambda.
+The module-source stamp cannot see that; this note invalidates it so
+the query re-records.  The shingles are unchanged
+(tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -87,7 +94,7 @@ def q_ngram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = persist_tracked(uni)
     nu = uni.agg(F.sum("c").alias("n_uni"))
     bi = (
-        toks.select(F.explode(shingles_col(F.col("w"), 2)).alias("g"))
+        d.select(F.explode(shingles_col("text", 2)).alias("g"))
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("c"))
     )

@@ -23,14 +23,12 @@ skew split, DF-cap hot-shingle bound) carries over verbatim.
 Reference parity: no dedup surface in the reference; declared engine
 surface per SURVEY §2B.
 
-
-r11 plan note: this query's physical plan changed via its shared
-helpers — llm_text._doc_shingles (repartition(doc_id) single-shuffle) and operators/dedup.df_capped_pair_counts (persisted keep-index) —
-which the content-hash stamp (defining module + oracle only)
-cannot see.  This paragraph deliberately invalidates the stamp so
-the round-11 window re-records the query against its NEW plan;
-results are bit-identical (sf0.1 soak + both-scale invariance
-re-ran green on the changed tree before this note landed).
+Shingling plan note: this query's plan changed through
+llm_text._doc_shingles, which now shingles with one codegen'd
+``regexp_extract_all`` instead of a Python ``mapInArrow`` generator.
+The module-source stamp cannot see that; this note invalidates it so
+the query re-records.  The shingles are unchanged
+(tests/test_operators.py).
 """
 
 from __future__ import annotations

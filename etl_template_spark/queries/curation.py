@@ -12,6 +12,13 @@ map-side partial aggregation.  No UDFs, no driver loops.
 This module registers AFTER every other query module (queries/__init__
 imports it last) so its entries land behind the pinned round-3
 correctness window (tests/test_entry_contract.py).
+
+Shingling plan note: q_ngram_freq's plan changed through
+operators/dedup.shingles_col, which now shingles with one codegen'd
+``regexp_extract_all`` instead of an interpreted ``transform`` lambda.
+The module-source stamp cannot see that; this note invalidates it so
+the query re-records.  The shingles are unchanged
+(tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -105,7 +112,7 @@ def q_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 + driver merge — the vocab table itself is never globally
     sorted.  Tiebreak on the ngram value makes rank 20 deterministic."""
     d = load_table(spark, sf_dir, "documents")
-    grams = d.select(F.explode(shingles_col(tokens_col(), 2)).alias("ngram"))
+    grams = d.select(F.explode(shingles_col("text", 2)).alias("ngram"))
     return (
         grams.groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("freq"))

@@ -11,6 +11,13 @@ Determinism discipline (same as the rest of the inventory): no float
 sums — counts, min/max, and ratio-of-counts only; every arg-extremum
 and mode carries an explicit total-order tiebreak; sampling/splitting
 is content-hash based, never rand().
+
+Shingling plan note: q_contamination_check's and q_ngram_novelty's
+plan changed through operators/dedup.shingles_col, which now shingles
+with one codegen'd ``regexp_extract_all`` instead of an interpreted
+``transform`` lambda.  The module-source stamp cannot see that; this
+note invalidates it so the query re-records.  The shingles are
+unchanged (tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ..operators.dedup import shingles_col, tokens_col
+from ..operators.dedup import shingles_col
 from ..registry import register
 
 # ---------------------------------------------------------------------------
@@ -307,7 +314,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus)."""
     d = load_table(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles_col(tokens_col(), 5)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 5)).alias("s")
     ).distinct()
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
     eval_sh = sh.where(is_eval).select(F.col("doc_id").alias("eval_id"), "s")
@@ -355,7 +362,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums anywhere."""
     d = load_table(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles_col(tokens_col(), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     df = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     joined = sh.join(df, "s")

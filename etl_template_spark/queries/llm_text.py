@@ -25,7 +25,7 @@ declared-engine extension of its per-record transform surface
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
@@ -35,6 +35,7 @@ from ..operators.dedup import (
     df_capped_pair_counts,
     minhash_signature,
     shingles_col,
+    shingles_sql,
     tokens_col,
     verified_jaccard as _verified_jaccard,
 )
@@ -58,66 +59,18 @@ def _doc_shingles(
     corpus snapshot (it is reused by every dedup/fingerprint pass), not
     re-deriving it per query.
 
-    r13 optimization, step 1 (shape): the table is MAP-ONLY — per-doc
-    distinct needs no aggregation and no exchange at all, because
-    duplicate (doc_id, s) pairs only ever come from repeats inside one
-    document.  This supersedes the r11 ``repartition(doc_id) +
-    distinct`` single-shuffle plan: that shape still shuffled the FULL
-    shingle table — the engine's largest intermediate — once; now
-    nothing shuffles it, and the MinHash signature's groupBy(doc_id)
-    partial-aggregates map-side so its exchange carries one 17-column
-    row per document instead (r13 A/B at sf0.1: q_dedup_fuzzy 3.4 s →
-    2.3 s cold median, identical output).
-
-    r13 optimization, step 2 (per-task work, guide §4.2): the shingling
-    itself moves from the JVM higher-order chain
-    ``explode(array_distinct(transform(sequence, slice+concat_ws)))`` —
-    whose lambda is interpreted per element, measured ~10 µs per
-    shingle, the single largest cost in every shingle-family query — to
-    ONE Arrow boundary doing native batch string work (the posture the
-    multimodal family already uses).  Only (doc_id, text) crosses, the
-    generator is allocated once per task, and each batch splits/joins
-    in CPython's C string routines.  Token semantics are identical by
-    construction: ``str.split(' ')`` == Spark ``split(text, ' ', -1)``
-    == DuckDB ``string_split(text, ' ')`` (single-space separator,
-    empty tokens preserved), ``' '.join`` == ``concat_ws`` over
-    non-null strings, NULL text yields no rows exactly like exploding
-    the NULL-guarded array, and per-doc first-seen dedup equals DISTINCT
-    (order is irrelevant downstream — every consumer joins or
-    aggregates).  Verified bit-identical at sf0.01/sf0.1 across all six
-    consumer queries and against the DuckDB oracles."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    id_type = dict(d.dtypes)["doc_id"]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            texts = b.column("text").to_pylist()
-            out_ids: list = []
-            out_s: list = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = t.split(" ")
-                n = len(toks) - (k - 1)
-                if n < 1:
-                    continue
-                grams = dict.fromkeys(
-                    " ".join(toks[j : j + k]) for j in range(n)
-                )
-                out_ids.extend([i] * len(grams))
-                out_s.extend(grams)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=b.column("doc_id").type),
-                    pa.array(out_s, type=pa.string()),
-                ],
-                ["doc_id", "s"],
-            )
-
-    sh = d.mapInArrow(gen, schema=f"doc_id {id_type}, s string")
+    Map-only (r13): duplicate (doc_id, s) pairs only come from repeats
+    inside one document, so the per-doc ``array_distinct`` needs no
+    exchange, and the MinHash groupBy(doc_id) partial-aggregates
+    map-side.  The shingles are ONE built-in expression
+    (``operators/dedup.shingles_sql``), codegen'd into the scan's stage.
+    It replaced a Python ``mapInArrow`` generator (q_dedup_ngram run
+    first in a session at sf0.01, 4 vCPU: 9.2-9.8 s → 8.4-8.9 s; sf0.1
+    warm q_dedup_fuzzy 2.7 s → 2.4 s), itself the successor of an
+    interpreted ``transform`` lambda (~10 µs per shingle)."""
+    sh = load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"explode(array_distinct({shingles_sql('text', k)})) AS s"
+    )
     return persist_tracked(sh) if persist else sh
 
 
@@ -469,13 +422,12 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prefix filtering, Bayardo et al. WWW'07), kept library-side because
     its DF-ordering pass costs more than it saves below bucket-skew
     scale."""
-    sh = _doc_shingles(spark, sf_dir, k=3)
-    # the candidate pipeline shared with q_dedup_containment; it pins
-    # the pruned index itself.  ``sh`` is pinned after it, so the
-    # index's cached plan reads raw shingles and no scan ever reads
-    # this pin (a known dead pin, see tests/test_cache_pins.py)
+    # ``sh`` is pinned BEFORE the candidate pipeline (shared with
+    # q_dedup_containment) pins its pruned index, so the index's cached
+    # plan reads the shingle pin and shingling runs once; pinned after
+    # it, no scan ever read ``sh`` (tests/test_cache_pins.py)
+    sh = _doc_shingles(spark, sf_dir, k=3, persist=True)
     pairs = df_capped_pair_counts(sh, load_table(spark, sf_dir, "documents"))
-    persist_tracked(sh)
     return pairs.where("c / (n1 + n2 - c) >= 0.5").selectExpr(
         "d1", "d2", "round(c / (n1 + n2 - c), 6) AS jaccard"
     )
@@ -778,7 +730,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic in both engines — exact."""
     d = load_table(spark, sf_dir, "documents")
     sh = d.select(
-        "doc_id", F.explode(shingles_col(tokens_col(), k=5)).alias("s")
+        "doc_id", F.explode(shingles_col("text", k=5)).alias("s")
     )
     fp = F.min(F.sha2("s", 256))
     return sh.groupBy("doc_id").agg(

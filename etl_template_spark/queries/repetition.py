@@ -17,6 +17,13 @@ corpus-wide state, no UDFs, fully whole-stage-codegen'd.
 Generalizes the reference's per-record transform surface
 (tools.go:841-884) to corpus-quality accounting the same way
 q_quality_score does.
+
+Shingling plan note: q_quality_repetition's plan changed through
+operators/dedup.shingles_col, which now shingles with one codegen'd
+``regexp_extract_all`` instead of an interpreted ``transform`` lambda.
+The module-source stamp cannot see that; this note invalidates it so
+the query re-records.  The shingles are unchanged
+(tests/test_operators.py).
 """
 
 from __future__ import annotations
@@ -30,7 +37,9 @@ from ..operators.dedup import shingles_col, tokens_col
 from ..registry import register
 
 # Both engines enumerate k-grams identically: positions 1..n-k+1 over
-# the whitespace token list (shingles_col mirrors this range guard).
+# the whitespace token list, none when n < k (DuckDB's ``range`` is
+# empty there; shingles_col's regex finds no token start with k-1
+# spaces after it).
 _GRAMS_SQL = """
     SELECT doc_id,
            unnest(list_transform(range(1, len(string_split(text, ' ')) - {km2}),
@@ -114,9 +123,12 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.length("text").alias("n_chars"),
                     tokens_col().alias("w"))
     toks = persist_tracked(toks)
+    # the doc text back from the pinned tokens: split and join on ' '
+    # round-trip exactly, so the k-grams read the pin, not the scan
+    text = "array_join(w, ' ')"
 
     five = (
-        toks.select("doc_id", F.explode(shingles_col(F.col("w"), 5)).alias("g"))
+        toks.select("doc_id", F.explode(shingles_col(text, 5)).alias("g"))
         .groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("cnt"))
     )
     five_doc = five.groupBy("doc_id").agg(
@@ -125,7 +137,7 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     bi = (
-        toks.select("doc_id", F.explode(shingles_col(F.col("w"), 2)).alias("g"))
+        toks.select("doc_id", F.explode(shingles_col(text, 2)).alias("g"))
         .groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("cnt"))
     )
     top_bi = (

@@ -45,6 +45,34 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def plan_nodes(spark):
+    """Walker over every node of an executed physical plan, AQE query
+    stages and the cached plans its InMemoryTableScans read included."""
+    is_plan = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.SparkPlan"
+    ).isInstance
+
+    def walk(plan):
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            yield node
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                stack.append(node.executedPlan())
+            elif name.endswith("QueryStageExec"):
+                stack.append(node.plan())
+            elif name == "InMemoryTableScanExec":
+                stack.append(node.relation().cacheBuilder().cachedPlan())
+            for seq in (node.children(), node.innerChildren()):
+                for i in range(seq.size()):
+                    if is_plan(seq.apply(i)):
+                        stack.append(seq.apply(i))
+
+    return walk
+
+
+@pytest.fixture(scope="session")
 def duck(sf_dir):
     con = duckdb.connect()
     for t in TABLES:

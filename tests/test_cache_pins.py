@@ -20,53 +20,17 @@ from etl_template_spark.queries import REGISTRY
 # query -> names of the frames it pins, in persist order
 PINS = {
     "q_dedup_fuzzy": ("mins", "sh"),
-    "q_dedup_ngram": ("kept", "sh"),
+    "q_dedup_ngram": ("sh", "kept"),
     "q_dedup_containment": ("sh", "kept"),
     "q_sim_search_ivf": ("cents",),
     "q_sim_search_pq": ("books", "sub"),
 }
 
-# Known dead pin: q_dedup_ngram pins ``sh`` AFTER the pruned index
-# ``kept`` (the helper pins ``kept`` first), so ``kept``'s cached plan
-# reads the raw shingle lineage and nothing ever reads ``sh`` from the
-# cache — the shingle generator runs twice when ``kept`` is built.
-# Pinning ``sh`` first (as q_dedup_containment does) revives it but
-# changes the headline plan, so it is left for a measured change.
-DEAD = {("q_dedup_ngram", "sh")}
-
-def _is_spark_plan(spark, node) -> bool:
-    cls = spark._jvm.java.lang.Class.forName("org.apache.spark.sql.execution.SparkPlan")
-    return cls.isInstance(node)
-
-
-def _scanned_caches(spark, plan) -> list:
-    """Cache builders of every InMemoryTableScan under ``plan``."""
-    out, stack = [], [plan]
-    while stack:
-        node = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            stack.append(node.executedPlan())
-            continue
-        if name.endswith("QueryStageExec"):
-            stack.append(node.plan())
-            continue
-        if name == "InMemoryTableScanExec":
-            builder = node.relation().cacheBuilder()
-            out.append(builder)
-            stack.append(builder.cachedPlan())
-        for seq in (node.children(), node.innerChildren()):
-            for i in range(seq.size()):
-                child = seq.apply(i)
-                if _is_spark_plan(spark, child):
-                    stack.append(child)
-    return out
-
 
 _RUNS: dict = {}
 
 
-def _pins_scanned(spark, sf_dir, name) -> dict:
+def _pins_scanned(spark, sf_dir, plan_nodes, name) -> dict:
     """Build + execute ``name`` once; {pin: read by an InMemoryTableScan}."""
     if name in _RUNS:
         return _RUNS[name]
@@ -84,7 +48,11 @@ def _pins_scanned(spark, sf_dir, name) -> dict:
             assert entry.isDefined(), f"{name}: pinned frame {pin} is not cached"
             builders[pin] = entry.get().cachedRepresentation().cacheBuilder()
         df.write.format("noop").mode("overwrite").save()
-        scanned = _scanned_caches(spark, df._jdf.queryExecution().executedPlan())
+        scanned = [
+            node.relation().cacheBuilder()
+            for node in plan_nodes(df._jdf.queryExecution().executedPlan())
+            if node.getClass().getSimpleName() == "InMemoryTableScanExec"
+        ]
         _RUNS[name] = {
             pin: any(b.equals(s) for s in scanned) for pin, b in builders.items()
         }
@@ -93,22 +61,9 @@ def _pins_scanned(spark, sf_dir, name) -> dict:
     return _RUNS[name]
 
 
-@pytest.mark.parametrize(
-    "name,pin",
-    [
-        pytest.param(
-            n,
-            p,
-            marks=[pytest.mark.xfail(strict=True, reason="known dead pin")]
-            if (n, p) in DEAD
-            else [],
-        )
-        for n in sorted(PINS)
-        for p in PINS[n]
-    ],
-)
-def test_pinned_frame_is_scanned(spark, sf_dir, name, pin):
-    assert _pins_scanned(spark, sf_dir, name)[pin], (
+@pytest.mark.parametrize("name,pin", [(n, p) for n in sorted(PINS) for p in PINS[n]])
+def test_pinned_frame_is_scanned(spark, sf_dir, plan_nodes, name, pin):
+    assert _pins_scanned(spark, sf_dir, plan_nodes, name)[pin], (
         f"{name}: no InMemoryTableScan reads pinned frame {pin}"
     )
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_template_spark.io import claim_next_version, latest_version
@@ -16,7 +17,7 @@ from etl_template_spark.operators.dedup import (
     minhash_signature,
     ngram_jaccard_pairs,
     shingles_col,
-    tokens_col,
+    shingles_sql,
     verified_jaccard,
 )
 from etl_template_spark.operators.sessionize import sessionize
@@ -146,7 +147,7 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
         spark, [(1, base), (2, near), (3, far)], "doc_id int, text string"
     )
     sh = docs.select(
-        "doc_id", F.explode(shingles_col(tokens_col("text"), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     sig = minhash_signature(sh)
     cands = lsh_candidate_pairs(sig)
@@ -172,7 +173,7 @@ def test_verified_jaccard_threshold_is_inclusive(spark):
         "doc_id int, text string",
     )
     sh = docs.select(
-        "doc_id", F.explode(shingles_col(tokens_col("text"), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     pairs = _df(spark, [(1, 2)], "d1 int, d2 int")
     out = {(r["d1"], r["d2"]): r["jaccard"] for r in
@@ -199,7 +200,7 @@ def test_lsh_probe_mode_equals_self_join_restricted_to_probe(spark):
         "doc_id int, text string",
     )
     sh = docs.select(
-        "doc_id", F.explode(shingles_col(tokens_col("text"), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     sig = minhash_signature(sh)
     full = {
@@ -223,7 +224,7 @@ def test_ngram_jaccard_df_cap_prunes_stopword_shingles(spark):
         "doc_id int, text string",
     )
     sh = docs.select(
-        "doc_id", F.explode(shingles_col(tokens_col("text"), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     assert ngram_jaccard_pairs(sh, threshold=0.1, df_cap=3).count() == 0
 
@@ -240,6 +241,81 @@ def test_dedup_idempotent(spark):
         r["keep_id"] for r in once.collect()
     )
 
+
+
+# The shingle contract's corner cases: tokens are exactly
+# split(text, ' ', -1), so empty tokens from doubled, leading and
+# trailing spaces count, and only ' ' separates.
+SHINGLE_EDGE_TEXTS = [
+    "",
+    "a",                                # fewer than k tokens
+    "a b",
+    "a  b  c d",                        # doubled spaces: empty tokens
+    " a b c d",                         # leading space
+    "a b c d ",                         # trailing space
+    "  a b  ",
+    "   ",                              # spaces only
+    " ",
+    "a\nb c\td e f",                    # newline and tab inside tokens
+    "x y x y x y x y",                  # repeated shingles
+    "héllo wörld 日本 語 🎉 ok 🎉 x",   # unicode, incl. non-BMP
+    "the quick brown fox jumps over the lazy dog",
+    None,
+]
+
+
+def _ref_shingles(text, k):
+    """Pure-Python reference: k-token windows over ``str.split(' ')``."""
+    if text is None:
+        return None
+    toks = text.split(" ")
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+def test_shingles_col_matches_split_window_reference(spark):
+    """Order and repeats kept (q_ngram_freq, q_quality_repetition and
+    q_ngram_pmi count occurrences), NULL text gives NULL, k < 1 raises."""
+    docs = _df(spark, list(enumerate(SHINGLE_EDGE_TEXTS)), "doc_id int, text string")
+    for k in (1, 2, 3, 5):
+        got = dict(docs.select("doc_id", shingles_col("text", k)).collect())
+        want = {i: _ref_shingles(t, k) for i, t in enumerate(SHINGLE_EDGE_TEXTS)}
+        assert got == want, k
+    with pytest.raises(ValueError):
+        shingles_sql("text", 0)
+
+
+def _doc_shingle_sets(sh) -> dict:
+    out: dict = {}
+    for r in sh.collect():
+        out.setdefault(r["doc_id"], set()).add(r["s"])
+    return out
+
+
+def test_doc_shingles_match_split_window_reference(spark, sf_dir, tmp_path):
+    """``_doc_shingles`` yields each document's DISTINCT reference
+    shingles, and none for NULL or short texts — on the edge cases and
+    on every document of the test SF."""
+    from etl_template_spark.io import load_table
+    from etl_template_spark.queries.llm_text import _doc_shingles
+
+    edge = str(tmp_path)
+    docs = _df(spark, list(enumerate(SHINGLE_EDGE_TEXTS)), "doc_id int, text string")
+    docs.write.parquet(f"{edge}/documents.parquet")
+    for k in (1, 2, 3, 5):
+        want = {
+            i: set(_ref_shingles(t, k))
+            for i, t in enumerate(SHINGLE_EDGE_TEXTS)
+            if _ref_shingles(t, k)
+        }
+        assert _doc_shingle_sets(_doc_shingles(spark, edge, k=k)) == want, k
+
+    texts = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    want = {
+        r["doc_id"]: set(_ref_shingles(r["text"], 3))
+        for r in texts
+        if _ref_shingles(r["text"], 3)
+    }
+    assert want and _doc_shingle_sets(_doc_shingles(spark, sf_dir, k=3)) == want
 
 # ---------------------------------------------------------------- skew ----
 
@@ -517,9 +593,8 @@ def test_ngram_prefix_filter_identical_to_full_join(spark):
         ],
         "doc_id long, text string",
     )
-    from etl_template_spark.operators.dedup import shingles_col, tokens_col
     sh = docs.select(
-        "doc_id", F.explode(shingles_col(tokens_col(), 3)).alias("s")
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
     ).distinct()
     full = sorted(map(tuple, ngram_jaccard_pairs(sh, 0.5).collect()))
     pref = sorted(map(tuple, ngram_jaccard_pairs_prefix(sh, 0.5).collect()))

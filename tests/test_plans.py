@@ -787,3 +787,43 @@ def test_shingle_build_single_shuffle_feeds_minhash(spark, sf_dir):
     sh = _doc_shingles(spark, sf_dir, k=3)  # no persist: lineage visible
     p = minhash_signature(sh)._jdf.queryExecution().explainString(mode)
     assert node_count(p, "Exchange") == 1
+
+
+# Physical nodes that ship rows to a Python worker.
+PYTHON_EXEC_NODES = {
+    "MapInArrow",
+    "PythonMapInArrow",
+    "MapInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_dedup_fuzzy",
+        "q_dedup_ngram",
+        "q_dedup_containment",
+        "q_fingerprint",
+        "q_ngram_freq",
+    ],
+)
+def test_shingle_queries_run_without_python_workers(spark, sf_dir, plan_nodes, name):
+    """Shingling is one built-in expression (operators/dedup.shingles_sql):
+    no shingle query may hand rows to a Python worker, whose start-up
+    the first shingle query of a session would pay."""
+    from etl_template_spark.caching import release_tracked
+
+    release_tracked()
+    try:
+        df = REGISTRY[name].build(spark, sf_dir)
+        df.collect()
+        names = {
+            node.getClass().getSimpleName().removesuffix("Exec")
+            for node in plan_nodes(df._jdf.queryExecution().executedPlan())
+        }
+    finally:
+        release_tracked()
+    assert not names & PYTHON_EXEC_NODES, (name, sorted(names & PYTHON_EXEC_NODES))
+    assert "Generate" in names  # the walk reached the shingle explode
