@@ -24,13 +24,15 @@ handle does NOT unpersist the JVM blocks, so holding the handle until
 ``release_tracked`` is the only way to free deterministically.
 
 Scope caveat: the registry is PROCESS-GLOBAL with no thread scoping.
-That fits the current callers (bench loop, correctness harness,
-sequential pipeline steps — all single-threaded build→materialize→
-release cycles).  Concurrent builders sharing the process (e.g. a
-hypothetical ``Pipeline.run`` with parallel steps) would release each
-other's intermediates — harmless for correctness (lazy plans recompute)
-but a silent performance cliff; key tracking per-thread/session before
-adopting parallel callers.
+That fits the single-threaded build→materialize→release callers (bench
+loop, correctness harness, serial pipeline steps).  Concurrent builders
+sharing the process would release each other's intermediates — harmless
+for correctness (lazy plans recompute) but a silent performance cliff.
+``Pipeline.run(parallel=True)`` is such a caller today and works around
+it: its steps skip the per-step release, and it releases once per
+dependency level, at the barrier where no step is in flight (see
+``Pipeline.run`` in pipeline.py).  Scoping the tracking per build, so
+that special case can go, is ROADMAP item 3.
 """
 
 from __future__ import annotations

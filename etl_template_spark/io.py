@@ -107,20 +107,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Resolved handles are memoized per (session, dir, table) — see
     ``_TABLE_HANDLES`` above.
 
-    ``events.ts`` has shipped with two physical types across driver
-    fixture generations, and this reader normalizes both to
-    TIMESTAMP_NTZ (naive wall-clock, matching how the other tables'
-    timestamps load and how the DuckDB oracle sees them):
-
-    - TIMESTAMP(MICROS) (round-4 fixtures): scans directly (Spark 4
-      infers TIMESTAMP_NTZ for unadjusted micros); instant-typed scans
-      cast losslessly under the UTC session zone.
-    - TIMESTAMP(NANOS, isAdjustedToUTC=false) (earlier fixtures), which
-      Spark 4 refuses to scan as a timestamp (PARQUET_TYPE_ILLEGAL):
-      retried under ``spark.sql.legacy.parquet.nanosAsLong`` so the
-      column arrives as a raw nanos-since-epoch long; those fixture
-      values are whole microseconds (verified: nanos % 1000 == 0), so
-      ``ts div 1000`` → ``timestamp_micros`` is lossless.
+    ``events.ts`` is normalized to TIMESTAMP_NTZ (naive wall-clock,
+    matching how the other tables' timestamps load and how the DuckDB
+    oracle sees them).  TIMESTAMP(MICROS), the type of every current
+    fixture, scans directly (Spark 4 infers TIMESTAMP_NTZ for
+    unadjusted micros); instant-typed scans cast losslessly under the
+    UTC session zone.  A TIMESTAMP(NANOS) ``ts`` (the round-1..3 fixture
+    generation), which Spark 4 refuses to scan as a timestamp
+    (PARQUET_TYPE_ILLEGAL), raises ``ValueError`` naming the file and
+    its ``ts`` type; rewrite such a file with microsecond timestamps.
+    No session conf is changed to read it.
     """
     ensure_engine_conf(spark)
     try:
@@ -157,43 +153,24 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
             df = spark.read.parquet(path)
             df.schema  # force analysis so an illegal nanos type fails HERE
         except Exception as exc:
-            # Only the illegal-nanos AnalysisException gets the legacy
-            # retry; anything else (missing file, corrupt footer,
-            # permissions) re-raises as the ORIGINAL error instead of a
-            # confusing second failure under the legacy conf.
+            # Only the illegal-nanos AnalysisException is translated;
+            # anything else (missing file, corrupt footer, permissions)
+            # re-raises as the ORIGINAL error.
             msg = str(exc)
             if (
                 "PARQUET_TYPE_ILLEGAL" not in msg
                 and "illegal parquet type" not in msg.lower()
             ):
                 raise
-            # TIMESTAMP(NANOS) fixture: rescan with the legacy conf,
-            # scoped to this one read — Spark resolves the parquet schema
-            # at DataFrame *definition* time, so the conf is restored
-            # immediately after; leaving it set session-wide would make
-            # every later TIMESTAMP(NANOS) scan silently return raw
-            # longs instead of failing loudly.
-            try:
-                prev: str | None = spark.conf.get(
-                    "spark.sql.legacy.parquet.nanosAsLong"
-                )
-            except Exception:
-                prev = None
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            try:
-                df = spark.read.parquet(path)
-                df.schema  # force analysis while the conf is in effect
-            finally:
-                if prev is None:
-                    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-                else:
-                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # nanosAsLong raw longs
-            df = df.withColumn(
-                "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
-            )
-        elif ts_type != "timestamp_ntz":  # instant-typed; UTC session zone
+            import pyarrow.parquet as pq
+
+            ts_type = pq.read_schema(path).field("ts").type
+            raise ValueError(
+                f"load_table: {path} stores events.ts as {ts_type} "
+                "(Parquet TIMESTAMP(NANOS)), which Spark cannot scan as a "
+                "timestamp; rewrite the file with microsecond timestamps"
+            ) from exc
+        if dict(df.dtypes)["ts"] != "timestamp_ntz":  # instant-typed; UTC zone
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
     return spark.read.parquet(path)
@@ -974,20 +951,33 @@ def compact_merged_log(
     contains — so run it in the same serial maintenance window as the
     log's writers.  ``min_claim_age`` passes through to
     ``prune_versions``'s concurrent-claim grace."""
+    return _fold_and_prune(
+        spark, root, step, lambda merged: merged.drop("_version"), min_claim_age
+    )
+
+
+def _fold_and_prune(
+    spark: SparkSession,
+    root: str,
+    step: str,
+    fold: Callable[[DataFrame], DataFrame],
+    min_claim_age: float,
+) -> int:
+    """The delta-log compaction protocol shared by ``compact_merged_log``
+    and ``operators.graph.compact_edge_log``: list the versions, read
+    their merged view pinned to that listing, commit ``fold(merged)`` as
+    one version marked as summarizing them, then prune the history.
+    Returns the number of versions pruned."""
     if latest_version(root, step) is None:
-        raise FileNotFoundError(
-            f"compact_merged_log: no {step!r} log under {root!r}"
-        )
+        raise FileNotFoundError(f"no {step!r} log under {root!r} to compact")
     folded_ids = list_versions(root, step)
     # pin the fold to the SAME snapshot the marker will list: a delta
     # committing between this listing and the fold's read must be
     # neither folded nor marked (it stays a live delta), or a crash
     # before prune would double-count it — folded into the data yet
     # not excluded by the marker
-    merged = read_versioned_merged(
-        spark, root, step, versions=folded_ids
-    ).drop("_version")
-    write_versioned(merged, root, step, summarizes=folded_ids)
+    merged = read_versioned_merged(spark, root, step, versions=folded_ids)
+    write_versioned(fold(merged), root, step, summarizes=folded_ids)
     return len(
         prune_versions(root, step, keep_last=1, min_claim_age=min_claim_age)
     )

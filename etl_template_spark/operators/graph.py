@@ -2,6 +2,14 @@
 curation (authority-weight documents by their link graph, rank users by
 interaction graph) beyond what connected components (cluster.py) gives.
 
+One kernel: ``pagerank_weighted`` holds the package's only PageRank
+iteration loop, and ``pagerank`` (simple-graph semantics) is its call
+on the DISTINCT (src, dst) pairs.  Every pair then has multiplicity
+w = 1 and weighted out-degree equals out-degree, so the weighted
+contribution ``(2R·w + wdeg) div (2·wdeg)`` is the simple one
+``(2R + deg) div (2·deg)`` bit for bit; the q_pagerank and
+q_pagerank_weighted oracles check each flavor independently.
+
 Design constraints, in the engine's house style:
 
 - **Fixed iteration count, not convergence-to-epsilon.**  A fixed
@@ -16,13 +24,17 @@ Design constraints, in the engine's house style:
   double→decimal rounding (round 9: the weighted operator's sf0.1 soak
   caught decimal-cast ties resolving differently across engines).
   With ``R = round(rank·1e9)`` exact per round, each contribution is
-  the nearest-nano integer ``(2R + deg) div (2·deg)`` — round-half-up
-  of the exact rational R/deg — and inflow/dangling mass are plain
-  integer sums, making every iteration — and therefore the final
+  the nearest-nano integer ``(2R·w + wdeg) div (2·wdeg)`` — round-half-
+  up of the exact rational R·w/wdeg — and inflow/dangling mass are
+  plain integer sums, making every iteration — and therefore the final
   ranks — bit-identical at any parallelism and reproducible in DuckDB.
 - **Dangling mass redistributed uniformly** (the standard correction):
   nodes with no out-edges leak their rank to all nodes equally;
   without this, total rank drains and scores depend on graph plumbing.
+  The node frame carries a ``dangling`` flag, computed once from the
+  checkpointed edge list, so each round's dangling mass is a filtered
+  integer sum over the rank frame rather than an anti-join against
+  out-degrees re-derived from the raw edges.
 - **Bounded-lineage truncation** with ``localCheckpoint(eager=True)``
   every THIRD round (the cluster.py lesson: the plan, not the data,
   becomes the bottleneck by round ~15 otherwise; every-round
@@ -35,8 +47,8 @@ Design constraints, in the engine's house style:
 Scale shape per iteration: one equi-join of ranks onto the out-degree-
 annotated edge list (both keyed by node — co-partitioned after the
 first round), one hash aggregate with map-side partial combine, one
-1-row dangling-mass aggregate broadcast back.  State is one row per
-node.  O(iters) rounds, each a single shuffle — the textbook
+1-row filtered dangling-mass aggregate broadcast back.  State is one
+row per node.  O(iters) rounds, each a single shuffle — the textbook
 MapReduce PageRank, declared in DataFrames.
 """
 
@@ -65,9 +77,11 @@ def pagerank(
     Multigraph semantics (r7 ADVICE): parallel edges are DEDUPLICATED
     (``.distinct()``) — the graph is treated as unweighted and simple,
     so ten links from A to B contribute exactly what one link would.
-    Weighted PageRank (contribution proportional to edge multiplicity)
-    is a different operator; pre-aggregate edges to (src, dst, weight)
-    and divide by weighted out-degree if that is what you want.
+    That distinct edge set is then handed to ``pagerank_weighted``,
+    where every pair has weight 1: this function is the distinct-edge
+    call of the one PageRank kernel, not a second loop.  For
+    contribution proportional to edge multiplicity, call
+    ``pagerank_weighted`` on the raw edges instead.
 
     Raises ``ValueError`` on an empty edge frame: there are no nodes,
     so no rank distribution exists (and the teleport term would divide
@@ -84,26 +98,85 @@ def pagerank(
     new nodes start at the uniform 1/n — a warm START, not an exact
     delta algorithm; convergence, not equality, is the contract when
     the graph changed)."""
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
+    return pagerank_weighted(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
+        iters=iters,
+        damping=damping,
+        init_ranks=init_ranks,
+    )
+
+
+def pagerank_weighted(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    weight: str | None = None,
+    iters: int = 10,
+    damping: float = 0.85,
+    init_ranks: DataFrame | None = None,
+) -> DataFrame:
+    """Weighted PageRank (round 9) and the package's one PageRank
+    kernel: contribution proportional to edge WEIGHT, out-flow
+    normalized by the source's weighted out-degree — ten links from A
+    to B carry ten times one link's rank, the multigraph semantics
+    ``pagerank`` collapses by calling this on distinct edges.
+
+    ``weight=None`` uses parallel-edge MULTIPLICITY (``count(*)`` per
+    (src, dst) pair); a named column is summed per pair.  Weights are
+    cast to long — integral multiplicities keep the weighted out-degree
+    an exact integer sum.
+
+    Contribution arithmetic is PURE INTEGER (round 9 — the sf0.1 soak
+    caught the float formulation flipping 324/21000 ranks by one nano
+    between engines): with ``R = round(rank·1e9)`` (exact — rank is a
+    scale-9 decimal), the per-edge contribution is the nearest-nano
+    integer ``(2·R·w + wdeg) div (2·wdeg)`` (round-half-up of the exact
+    rational ``R·w/wdeg`` — no double division, no double→decimal cast
+    whose tie can resolve differently per engine), and the dangling
+    mass is the integer sum of the dangling ``R``.  Only the final
+    per-round update touches doubles (``teleport + d·(inflow_nano/1e9 +
+    mass_nano/1e9/n)``, then round-9) — bit-identical given identical
+    integer inputs.  Overflow bound: ``2·R·w + wdeg`` must fit int64,
+    i.e. per-pair weight < ~4.6e9 — any real multiplicity.
+
+    Raises ``ValueError`` on an empty edge frame: there are no nodes,
+    so no rank distribution exists (and the teleport term would divide
+    by zero).
+
+    RESUMABLE AS DATA (late round 9): the per-round rank vector is a
+    scale-9 decimal, exactly representable, so
+    ``pagerank_weighted(e, iters=a+b)`` equals the ``init_ranks``
+    continuation bit-for-bit (tests assert it) — what both flavors of
+    ``pagerank_incremental`` warm-start from.
+    """
+    cols = [F.col(src).alias("s"), F.col(dst).alias("t")]
+    if weight is not None:
+        cols.append(F.col(weight).cast("long").alias("_w"))
+    w_expr = (
+        F.count(F.lit(1)).alias("w")
+        if weight is None
+        else F.sum(F.col("_w")).alias("w")
+    )
+    e = edges.select(*cols).groupBy("s", "t").agg(w_expr)
+    outdeg = e.groupBy(F.col("s").alias("id")).agg(F.sum("w").alias("wdeg"))
+    # edges annotated with the source's out-degree, checkpointed once
+    e_deg = (
+        e.join(outdeg, e["s"] == outdeg["id"])
+        .select("s", "t", "w", "wdeg")
+        .localCheckpoint(eager=True)
+    )
+    # every node once, flagged when it has no out-edges (see the module
+    # docstring's dangling-mass note)
     nodes = (
-        e.select(F.col("s").alias("id"))
-        .union(e.select(F.col("t").alias("id")))
-        .distinct()
+        e_deg.select(F.col("s").alias("id"), F.lit(False).alias("dangling"))
+        .union(e_deg.select(F.col("t").alias("id"), F.lit(True).alias("dangling")))
+        .groupBy("id")
+        .agg(F.bool_and("dangling").alias("dangling"))
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()  # scalar: fixes the teleport term
     if n_nodes == 0:
-        raise ValueError("pagerank: empty edge frame — no nodes to rank")
-    outdeg = e.groupBy(F.col("s").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    # edges annotated with the source's out-degree, checkpointed once
-    e_deg = (
-        e.join(outdeg, e["s"] == outdeg["id"])
-        .select("s", "t", "deg")
-        .localCheckpoint(eager=True)
-    )
-
+        raise ValueError("pagerank_weighted: empty edge frame — no nodes to rank")
     if init_ranks is None:
         ranks = nodes.withColumn("rank", F.lit(1.0) / F.lit(float(n_nodes)))
     else:
@@ -113,6 +186,7 @@ def pagerank(
             nodes.join(init_ranks.select("id", "rank"), "id", "left")
             .select(
                 "id",
+                "dangling",
                 F.coalesce(
                     F.col("rank"), F.lit(1.0) / F.lit(float(n_nodes))
                 ).alias("rank"),
@@ -126,30 +200,29 @@ def pagerank(
             e_deg.join(ranks.withColumnRenamed("id", "s"), "s")
             .select(
                 F.col("t").alias("id"),
-                # nearest-nano of the exact rational R/deg, ties up —
+                # nearest-nano of the exact rational R*w/wdeg, ties up —
                 # pure integer ops (round-9 fix: the float rank/deg +
                 # decimal-cast sum carried a double→decimal tie that
                 # can resolve differently per engine; the weighted
                 # operator's sf0.1 soak caught that class flipping
                 # ranks by one nano)
                 F.expr(
-                    "(2 * cast(round(rank * 1e9) as bigint) + deg)"
-                    " div (2 * deg)"
+                    "(2 * cast(round(rank * 1e9) as bigint) * w + wdeg)"
+                    " div (2 * wdeg)"
                 ).alias("contrib_nano"),
             )
             .groupBy("id")
             .agg(F.sum("contrib_nano").alias("inflow_nano"))
         )
         # dangling mass: rank held by nodes with no out-edges
-        dangling = ranks.join(outdeg, "id", "left_anti").agg(
-            F.sum(nano).alias("mass_nano")
-        )
+        dangling = ranks.where("dangling").agg(F.sum(nano).alias("mass_nano"))
         d_mass = F.broadcast(dangling)
         ranks = (
             nodes.join(contribs, "id", "left")
             .crossJoin(d_mass)
             .select(
                 "id",
+                "dangling",
                 # the round-9 rounding makes each round's rank vector
                 # exactly representable — the resume-as-data identity
                 F.round(
@@ -168,134 +241,6 @@ def pagerank(
         )
         # truncate lineage every third round (and at the end) — see the
         # module docstring's A/B for why not every round
-        if (i + 1) % 3 == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", F.round(F.col("rank"), _SCALE).alias("rank"))
-
-
-def pagerank_weighted(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str | None = None,
-    iters: int = 10,
-    damping: float = 0.85,
-    init_ranks: DataFrame | None = None,
-) -> DataFrame:
-    """Weighted PageRank (round 9 — the operator ``pagerank``'s
-    docstring names as distinct): contribution proportional to edge
-    WEIGHT, out-flow normalized by the source's weighted out-degree —
-    ten links from A to B carry ten times one link's rank, the
-    multigraph semantics the simple-graph operator deliberately
-    collapses.
-
-    ``weight=None`` uses parallel-edge MULTIPLICITY (``count(*)`` per
-    (src, dst) pair); a named column is summed per pair.  Weights are
-    cast to long — integral multiplicities keep the weighted out-degree
-    an exact integer sum.
-
-    Contribution arithmetic is PURE INTEGER (round 9 — the sf0.1 soak
-    caught the float formulation flipping 324/21000 ranks by one nano
-    between engines): with ``R = round(rank·1e9)`` (exact — rank is a
-    scale-9 decimal), the per-edge contribution is the nearest-nano
-    integer ``(2·R·w + wdeg) div (2·wdeg)`` (round-half-up of the exact
-    rational ``R·w/wdeg`` — no double division, no double→decimal cast
-    whose tie can resolve differently per engine), and the dangling
-    mass is the integer sum of the dangling ``R``.  Only the final
-    per-round update touches doubles (``teleport + d·(inflow_nano/1e9 +
-    mass_nano/1e9/n)``, then round-9) — bit-identical given identical
-    integer inputs, the same shape ``pagerank``'s soaks have proven.
-    Overflow bound: ``2·R·w + wdeg`` must fit int64, i.e. per-pair
-    weight < ~4.6e9 — any real multiplicity.  Dangling redistribution,
-    scale-9 per-round rounding, lineage-truncation cadence, and the
-    empty-graph guard all mirror ``pagerank``; per-iteration cost is
-    identical (the weight rides the same equi-join).
-
-    RESUMABLE AS DATA, like ``pagerank`` (late round 9): the per-round
-    rank vector is a scale-9 decimal, exactly representable, so
-    ``pagerank_weighted(e, iters=a+b)`` equals the ``init_ranks``
-    continuation bit-for-bit (tests assert it) — what the weighted
-    flavor of ``pagerank_incremental`` warm-starts from.
-    """
-    cols = [F.col(src).alias("s"), F.col(dst).alias("t")]
-    if weight is not None:
-        cols.append(F.col(weight).cast("long").alias("_w"))
-    w_expr = (
-        F.count(F.lit(1)).alias("w")
-        if weight is None
-        else F.sum(F.col("_w")).alias("w")
-    )
-    e = edges.select(*cols).groupBy("s", "t").agg(w_expr)
-    nodes = (
-        e.select(F.col("s").alias("id"))
-        .union(e.select(F.col("t").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        raise ValueError("pagerank_weighted: empty edge frame — no nodes to rank")
-    outdeg = e.groupBy(F.col("s").alias("id")).agg(F.sum("w").alias("wdeg"))
-    e_deg = (
-        e.join(outdeg, e["s"] == outdeg["id"])
-        .select("s", "t", "w", "wdeg")
-        .localCheckpoint(eager=True)
-    )
-    if init_ranks is None:
-        ranks = nodes.withColumn("rank", F.lit(1.0) / F.lit(float(n_nodes)))
-    else:
-        # warm start, mirroring ``pagerank``: carried ranks for known
-        # nodes, uniform for new ones, departed nodes drop via the join
-        ranks = (
-            nodes.join(init_ranks.select("id", "rank"), "id", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.col("rank"), F.lit(1.0) / F.lit(float(n_nodes))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    teleport = (1.0 - damping) / n_nodes
-    nano = F.expr("cast(round(rank * 1e9) as bigint)")  # exact: rank is scale-9
-    for i in range(iters):
-        contribs = (
-            e_deg.join(ranks.withColumnRenamed("id", "s"), "s")
-            .select(
-                F.col("t").alias("id"),
-                # nearest-nano of the exact rational R*w/wdeg, ties up —
-                # integer ops only, bit-identical in any engine
-                F.expr(
-                    "(2 * cast(round(rank * 1e9) as bigint) * w + wdeg)"
-                    " div (2 * wdeg)"
-                ).alias("contrib_nano"),
-            )
-            .groupBy("id")
-            .agg(F.sum("contrib_nano").alias("inflow_nano"))
-        )
-        dangling = ranks.join(outdeg, "id", "left_anti").agg(
-            F.sum(nano).alias("mass_nano")
-        )
-        d_mass = F.broadcast(dangling)
-        ranks = (
-            nodes.join(contribs, "id", "left")
-            .crossJoin(d_mass)
-            .select(
-                "id",
-                F.round(
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow_nano"), F.lit(0)).cast("double")
-                        / F.lit(1.0e9)
-                        + F.coalesce(F.col("mass_nano"), F.lit(0)).cast("double")
-                        / F.lit(1.0e9)
-                        / F.lit(float(n_nodes))
-                    ),
-                    _SCALE,
-                ).alias("rank"),
-            )
-        )
         if (i + 1) % 3 == 0 or i == iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("id", F.round(F.col("rank"), _SCALE).alias("rank"))
@@ -463,6 +408,10 @@ def compact_edge_log(
     small-file/many-version economics ``io.compact_versioned`` states,
     applied to log semantics it cannot know.
 
+    This function supplies only the fold; the list / pinned merged
+    read / marked write / prune protocol is the one
+    ``io.compact_merged_log`` runs too (``io._fold_and_prune``).
+
     Crash-atomicity and concurrent readers (r9 ADVICE — this closes
     what the r9 review flagged as the weighted log's double-count
     window): the folded version commits WITH a ``_SUMMARIZES`` marker
@@ -478,36 +427,15 @@ def compact_edge_log(
     refreshes.  ``min_claim_age`` passes through to
     ``prune_versions``'s concurrent-claim grace.
     """
-    from ..io import (
-        latest_version,
-        list_versions,
-        prune_versions,
-        read_versioned,
-        read_versioned_merged,
-        write_versioned,
-    )
+    from ..io import _fold_and_prune
 
-    edges_step = f"{step}_edges"
-    if latest_version(root, edges_step) is None:
-        raise FileNotFoundError(
-            f"compact_edge_log: no {edges_step!r} log under {root!r}"
-        )
-    folded_ids = list_versions(root, edges_step)
-    # same-snapshot pin as io.compact_merged_log: the marker must list
-    # EXACTLY what the fold read, so a delta committing between this
-    # listing and the fold stays a live (unfolded, unmarked) delta
-    merged = read_versioned_merged(spark, root, edges_step, versions=folded_ids)
-    if "w" in merged.columns:
-        folded = (
-            merged.groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-            .where(F.col("w") != 0)
-        )
-    else:
-        folded = merged.select("src", "dst").distinct()
-    write_versioned(folded, root, edges_step, summarizes=folded_ids)
-    return len(
-        prune_versions(
-            root, edges_step, keep_last=1, min_claim_age=min_claim_age
-        )
-    )
+    def fold(merged: DataFrame) -> DataFrame:
+        if "w" in merged.columns:
+            return (
+                merged.groupBy("src", "dst")
+                .agg(F.sum("w").alias("w"))
+                .where(F.col("w") != 0)
+            )
+        return merged.select("src", "dst").distinct()
+
+    return _fold_and_prune(spark, root, f"{step}_edges", fold, min_claim_age)

@@ -5,7 +5,9 @@ operators/graph.py).
 Fixture graph: the part→supplier bipartite digraph from lineitem —
 ``2*l_partkey → 2*l_suppkey + 1`` (parity encoding keeps the two key
 spaces disjoint; both are bigints).  Parallel edges collapse (the
-operator's documented simple-graph semantics), suppliers have no
+operator's documented simple-graph semantics: ``pagerank`` is the
+distinct-edge call of ``pagerank_weighted``, the package's one PageRank
+loop, so every surviving edge carries weight 1), suppliers have no
 out-edges, so the ENTIRE supplier side is dangling — every iteration
 exercises the uniform dangling-mass redistribution, not just the happy
 path.  At sf0.01 that is ~52k distinct edges over ~2.1k nodes; at

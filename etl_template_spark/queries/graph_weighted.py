@@ -23,6 +23,11 @@ engine.  Only the final per-round update touches doubles (the shape
 q_pagerank's soaks have proven); literals carry ``::DOUBLE`` casts as
 ever.
 
+Plan note: the operator is also q_pagerank's kernel (``pagerank`` is
+its call on distinct edges), and flags dangling nodes once on its node
+frame, so each round's dangling mass is a filtered sum with no
+anti-join.  Ranks are unchanged bit for bit.
+
 Reference parity: the reference engine has no graph operators
 (tools.go); declared engine surface per SURVEY §2B.
 """

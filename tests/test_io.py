@@ -572,9 +572,10 @@ def test_register_versioned_table_quotes_non_identifier_names(
 
 def test_load_table_events_handles_both_timestamp_generations(spark, tmp_path):
     """Driver fixtures have shipped events.ts as TIMESTAMP(NANOS) (r1-3)
-    and TIMESTAMP(MICROS) (r4+); load_table must normalize BOTH to the
-    same TIMESTAMP_NTZ values.  Writes one fixture in each physical type
-    and asserts identical loads."""
+    and TIMESTAMP(MICROS) (r4+).  A micros file loads as TIMESTAMP_NTZ
+    with its values intact; a nanos file fails loudly with a
+    ``ValueError`` naming the file and its ``ts`` type, and leaves the
+    session's ``nanosAsLong`` conf unset (no session-global retry)."""
     import datetime
 
     import pyarrow as pa
@@ -598,12 +599,18 @@ def test_load_table_events_handles_both_timestamp_generations(spark, tmp_path):
         pq.write_table(table, os.path.join(d, "events.parquet"))
 
     micros = load_table(spark, str(tmp_path / "micros"), "events")
-    nanos = load_table(spark, str(tmp_path / "nanos"), "events")
     assert dict(micros.dtypes)["ts"] == "timestamp_ntz"
-    assert dict(nanos.dtypes)["ts"] == "timestamp_ntz"
-    assert sorted(map(tuple, micros.collect())) == sorted(map(tuple, nanos.collect()))
     got_ts = sorted(r["ts"] for r in micros.collect())
     assert got_ts == ts
+
+    nanos_conf = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(nanos_conf, None) is None
+    nanos_path = os.path.join(str(tmp_path / "nanos"), "events.parquet")
+    with pytest.raises(ValueError) as err:
+        load_table(spark, str(tmp_path / "nanos"), "events")
+    assert nanos_path in str(err.value)
+    assert "timestamp[ns]" in str(err.value)
+    assert spark.conf.get(nanos_conf, None) is None
 
 
 def test_load_table_handle_cache_replaces_stale_entry(spark, tmp_path):
@@ -943,6 +950,28 @@ def test_compact_merged_log_crash_between_commit_and_prune(spark, tmp_path):
         for r in read_versioned_merged(spark, root, "log").collect()
     )
     assert got == sorted(rows)
+
+
+@pytest.mark.parametrize(
+    "compactor, step, log_step",
+    [("compact_merged_log", "log", "log"), ("compact_edge_log", "g", "g_edges")],
+)
+def test_compaction_of_missing_log_names_the_step(
+    spark, tmp_path, compactor, step, log_step
+):
+    """Both delta-log compactors refuse a step that has no log yet, with
+    a ``FileNotFoundError`` naming the missing step, and write nothing."""
+    from etl_template_spark import io
+    from etl_template_spark.operators import graph
+
+    compact = {
+        "compact_merged_log": io.compact_merged_log,
+        "compact_edge_log": graph.compact_edge_log,
+    }[compactor]
+    root = str(tmp_path)
+    with pytest.raises(FileNotFoundError, match=repr(log_step)):
+        compact(spark, root, step)
+    assert os.listdir(root) == []
 
 
 def test_compact_edge_log_weighted_crash_window_no_double_count(
