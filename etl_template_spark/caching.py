@@ -23,16 +23,12 @@ Strong references are intentional: a garbage-collected Python DataFrame
 handle does NOT unpersist the JVM blocks, so holding the handle until
 ``release_tracked`` is the only way to free deterministically.
 
-Scope caveat: the registry is PROCESS-GLOBAL with no thread scoping.
-That fits the single-threaded build→materialize→release callers (bench
-loop, correctness harness, serial pipeline steps).  Concurrent builders
-sharing the process would release each other's intermediates — harmless
-for correctness (lazy plans recompute) but a silent performance cliff.
-``Pipeline.run(parallel=True)`` is such a caller today and works around
-it: its steps skip the per-step release, and it releases once per
-dependency level, at the barrier where no step is in flight (see
-``Pipeline.run`` in pipeline.py).  Scoping the tracking per build, so
-that special case can go, is ROADMAP item 3.
+Scope: the registry is one PROCESS-GLOBAL list with no thread scoping.
+That is sound because every caller builds, materializes and releases on
+one thread (bench loop, correctness harness, ``Pipeline.run``'s steps)
+and the package has no concurrent caller.  Concurrent builders sharing
+the process would release each other's intermediates — harmless for
+correctness (lazy plans recompute) but a silent performance cliff.
 """
 
 from __future__ import annotations
@@ -56,9 +52,9 @@ def release_tracked() -> int:
     n = 0
     while True:
         # pop-then-handle, no check-then-pop (r10 review): list.pop() is
-        # atomic under the GIL, so concurrent releasers (parallel
-        # pipeline levels) race safely — the loser's pop raises
-        # IndexError here instead of propagating out of a pipeline step
+        # atomic under the GIL, so even a second releaser racing this
+        # loop ends it with IndexError here rather than raising out of
+        # the caller
         try:
             df = _TRACKED.pop()
         except IndexError:

@@ -36,7 +36,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
 import traceback
 from collections.abc import Callable
@@ -46,7 +45,8 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .io import read_versioned, write_versioned
+from .caching import release_tracked
+from .io import read_versioned, register_versioned_table, write_versioned
 
 STATUS_PENDING = "Pending"
 STATUS_RUNNING = "Running"
@@ -121,9 +121,6 @@ class PipelineRun:
         if self.run_id is None:
             # wall-clock run id, as the reference does (tools.go:87)
             self.run_id = time.strftime("%Y%m%d-%H%M%S") + f"-{_now_millis() % 1000:03d}"
-        # manifest writes may come from several step threads (parallel
-        # run mode); the lock serializes the read-modify-write
-        self._status_lock = threading.RLock()
 
     # -- status manifest ----------------------------------------------------
 
@@ -137,14 +134,12 @@ class PipelineRun:
 
     def save_status(self) -> None:
         """Persist the manifest (tools.go:233-250); atomic rename so a
-        crash mid-write never leaves a truncated manifest (and a lock so
-        concurrent step threads never interleave a write)."""
-        with self._status_lock:
-            os.makedirs(os.path.dirname(self.status_path) or ".", exist_ok=True)
-            tmp = f"{self.status_path}.tmp.{os.getpid()}-{threading.get_ident()}"
-            with open(tmp, "w") as f:
-                json.dump(self.to_json(), f, indent=2)
-            os.replace(tmp, self.status_path)
+        crash mid-write never leaves a truncated manifest."""
+        os.makedirs(os.path.dirname(self.status_path) or ".", exist_ok=True)
+        tmp = f"{self.status_path}.tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(self.to_json(), f, indent=2)
+        os.replace(tmp, self.status_path)
 
     @classmethod
     def load_status(cls, name: str, status_path: str) -> "PipelineRun | None":
@@ -275,13 +270,13 @@ class Pipeline:
         self.steps: list[Step] = []
 
     def step(self, name: str, fn, input_step: str | None = None, **kw) -> "Pipeline":
-        # validate the reference NOW (r10 review): _levels() used to
-        # default an unknown/forward input_step to level 0, so in
-        # parallel mode the consumer ran concurrently with (or before)
-        # its producer — FileNotFoundError on a fresh root, or silently
-        # reading the PREVIOUS run's committed version on a reused one.
-        # A typo'd or later-declared dependency fails at declaration.
-        declared = {s.name for s in self.steps}
+        # a consumer reads the version its producer recorded in THIS run;
+        # an unknown or later-declared producer has none yet
+        # (output_version=None), so the read would fall back to the latest
+        # committed version — FileNotFoundError on a fresh root, or
+        # silently the PREVIOUS run's output on a reused one.  A typo'd or
+        # forward dependency therefore fails at declaration.
+        declared = {s.name: s for s in self.steps}
         if input_step is not None and input_step not in declared:
             raise ValueError(
                 f"step {name!r}: input_step {input_step!r} is not a "
@@ -290,134 +285,87 @@ class Pipeline:
             )
         if name in declared:
             raise ValueError(f"duplicate step name {name!r}")
+        # the consumer's read is parquet: a JSON read needs a schema that
+        # a Step does not carry, so only leaf steps may write JSON
+        if input_step is not None and declared[input_step].fmt != "parquet":
+            raise ValueError(
+                f"step {name!r}: input_step {input_step!r} writes "
+                f"{declared[input_step].fmt!r}; only parquet steps can feed "
+                "another step"
+            )
         self.steps.append(Step(name=name, fn=fn, input_step=input_step, **kw))
         return self
 
-    def _levels(self) -> list[list[Step]]:
-        """Topological levels of the step DAG: a step depends on
-        ``input_step`` when that name is produced by an earlier declared
-        step; level N steps only read outputs of levels < N, so each
-        level's steps are mutually independent."""
-        produced: dict[str, int] = {}
-        levels: list[list[Step]] = []
-        for s in self.steps:
-            dep_level = produced.get(s.input_step, -1) if s.input_step else -1
-            lvl = dep_level + 1
-            while len(levels) <= lvl:
-                levels.append([])
-            levels[lvl].append(s)
-            produced[s.name] = lvl
-        return levels
-
-    def run(
-        self,
-        spark: SparkSession,
-        resume: bool = False,
-        parallel: bool = False,
-        max_workers: int = 4,
-    ) -> PipelineRun:
-        """Execute the pipeline.  ``parallel=True`` runs each dependency
-        LEVEL's independent steps concurrently (thread pool → concurrent
-        Spark job submission; the scheduler interleaves their stages
-        across the cluster) with a barrier between levels — on a large
-        cluster this keeps executors busy while a sibling step waits on
-        its own shuffle.  Fail-fast is preserved: a failing step stops
-        later levels; its level's siblings finish (their writes are
-        versioned and resumable either way)."""
+    def run(self, spark: SparkSession, resume: bool = False) -> PipelineRun:
+        """Execute the steps one at a time, in declaration order, fail-fast
+        (etl.go:146-159): the first step that still fails after its retries
+        marks the run Failed, leaves every later step Pending and raises
+        ``StepFailed``.  Parallelism lives inside each step's Spark jobs.
+        With ``resume=True`` steps the previous run completed are skipped."""
         prev = PipelineRun.load_status(self.name, self.status_path) if resume else None
         run = PipelineRun(name=self.name, status_path=self.status_path)
         for s in self.steps:
             run.steps[s.name] = StepStatus(s.name)
             run.step_order.append(s.name)
 
-        def _run_one(s: Step) -> None:
-            done = (
-                prev is not None
-                and s.name in prev.steps
-                and prev.steps[s.name].status == STATUS_COMPLETED
-                and prev.steps[s.name].output_version is not None
-            )
-            if done:
-                # step-level checkpoint hit: carry the prior result forward
-                run.steps[s.name] = prev.steps[s.name]
-                run.steps[s.name].message = "skipped (resume: already completed)"
-                return
-
-            def _body(s: Step = s) -> int:
-                # pin the input to the version THIS run recorded for the
-                # producer (r10 review): on resume, a skipped producer
-                # carries its original output_version forward, and
-                # reading "latest" instead could consume a version some
-                # OTHER writer committed since — the manifest would then
-                # assert a provenance that never happened.  Fresh runs
-                # pin the version the producer just wrote (identical to
-                # latest under the single-writer contract, but stated).
-                if s.input_step:
-                    in_ver = run.steps[s.input_step].output_version
-                    df_in = read_versioned(
-                        spark, self.data_root, s.input_step, version=in_ver
-                    )
-                else:
-                    df_in = None
-                df_out = s.fn(spark, df_in)
-                # R19 parity (LoopProgressManager, tools.go:891-951): the
-                # output row count rides the write job as an observed
-                # metric — no second scan of the written data.
-                obs = Observation(f"{self.name}.{s.name}.rows")
-                df_out = df_out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
-                version, _ = write_versioned(
-                    df_out, self.data_root, s.name, fmt=s.fmt, partition_by=s.partition_by
-                )
-                run.steps[s.name].output_version = version
-                run.steps[s.name].rows_out = obs.get["rows_out"]
-                if s.register_stats and s.fmt == "parquet":
-                    from .io import register_versioned_table
-
-                    register_versioned_table(
-                        spark, self.data_root, s.name, version=version
-                    )
-                # the write materialized df_out; any intermediates its
-                # builder persisted (caching.persist_tracked) are now
-                # dead weight — drop them before the next step runs.
-                # SERIAL mode only (r10 review): the registry is
-                # process-global, so a parallel sibling calling this
-                # would unpersist frames a still-running step depends on
-                # (lazy plans recompute — correct but a silent perf
-                # cliff); parallel mode releases once per LEVEL instead,
-                # at the barrier, when no step is in flight.
-                if not parallel:
-                    from .caching import release_tracked
-
-                    release_tracked()
-                return version
-
-            run.execute_step(
-                s.name,
-                _body,
-                max_retries=s.max_retries,
-                retry_delay_seconds=s.retry_delay_seconds,
-            )
-
         try:
-            if not parallel:
-                for s in self.steps:
-                    _run_one(s)
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                from .caching import release_tracked
-
-                for level in self._levels():
-                    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                        futures = [pool.submit(_run_one, s) for s in level]
-                    # level barrier: nothing is in flight, so releasing
-                    # the process-global persist registry here cannot
-                    # pull a live sibling's intermediates out from under
-                    # it (the per-step release is serial-mode only)
-                    release_tracked()
-                    errors = [f.exception() for f in futures if f.exception()]
-                    if errors:
-                        raise errors[0]
+            for s in self.steps:
+                done = (
+                    prev is not None
+                    and s.name in prev.steps
+                    and prev.steps[s.name].status == STATUS_COMPLETED
+                    and prev.steps[s.name].output_version is not None
+                )
+                if done:
+                    # step-level checkpoint hit: carry the prior result forward
+                    run.steps[s.name] = prev.steps[s.name]
+                    run.steps[s.name].message = "skipped (resume: already completed)"
+                    continue
+                run.execute_step(
+                    s.name,
+                    lambda s=s: self._attempt(spark, run, s),
+                    max_retries=s.max_retries,
+                    retry_delay_seconds=s.retry_delay_seconds,
+                )
         finally:
             run.stow()
         return run
+
+    def _attempt(self, spark: SparkSession, run: PipelineRun, s: Step) -> int:
+        """One attempt at step ``s``: read its input, apply ``fn``, write
+        the next version; returns the version written."""
+        try:
+            # pin the input to the version THIS run recorded for the
+            # producer: on resume, a skipped producer carries its original
+            # output_version forward, and reading "latest" instead could
+            # consume a version some OTHER writer committed since — the
+            # manifest would then assert a provenance that never happened.
+            # Fresh runs pin the version the producer just wrote (identical
+            # to latest under the single-writer contract, but stated).
+            if s.input_step:
+                in_ver = run.steps[s.input_step].output_version
+                df_in = read_versioned(
+                    spark, self.data_root, s.input_step, version=in_ver
+                )
+            else:
+                df_in = None
+            df_out = s.fn(spark, df_in)
+            # R19 parity (LoopProgressManager, tools.go:891-951): the
+            # output row count rides the write job as an observed
+            # metric — no second scan of the written data.
+            obs = Observation(f"{self.name}.{s.name}.rows")
+            df_out = df_out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
+            version, _ = write_versioned(
+                df_out, self.data_root, s.name, fmt=s.fmt, partition_by=s.partition_by
+            )
+            run.steps[s.name].output_version = version
+            run.steps[s.name].rows_out = obs.get["rows_out"]
+            if s.register_stats and s.fmt == "parquet":
+                register_versioned_table(spark, self.data_root, s.name, version=version)
+            return version
+        finally:
+            # the write materialized df_out, so any intermediates its
+            # builder persisted (caching.persist_tracked) are dead
+            # weight — and so are a failed attempt's, so retries never
+            # pile up pins.  Drop them before the next attempt or step.
+            release_tracked()

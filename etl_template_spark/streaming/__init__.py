@@ -9,7 +9,6 @@ from .jobs import (  # noqa: F401
     dedup_stream_within_watermark,
     distinct_users_stream,
     funnel_stream,
-    funnel_tws_stream,
     interval_join_fold,
     interval_join_tws_stream,
     heavy_hitters_tws_stream,
@@ -19,7 +18,6 @@ from .jobs import (  # noqa: F401
     retention_stream,
     run_available_now,
     running_totals_stream,
-    running_totals_tws_stream,
     session_agg_stream,
     sliding_agg_stream,
     transitions_stream,

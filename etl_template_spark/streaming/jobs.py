@@ -194,65 +194,6 @@ def running_totals_stream(
     )
 
 
-def running_totals_tws_stream(
-    events: DataFrame, watermark: str = "1 hour", state_ttl_ms: int | None = None
-) -> DataFrame:
-    """``running_totals_stream`` on the Spark 4 ``transformWithState``
-    API: named TYPED state variables (ValueState here; ListState/
-    MapState available), per-key timers, and optional state TTL — the
-    successor to ``applyInPandasWithState``'s single untyped tuple.
-
-    TTL is the 100 TB lever the old API lacks: idle keys age out of the
-    store automatically instead of growing it forever.  Requires the
-    RocksDB state store provider (``ROCKSDB_STATE_CONF``).
-
-    Runtime gate: Spark's transformWithState Python workers speak
-    protobuf to the state server; in environments without
-    ``google.protobuf`` the query fails at stream start (plan
-    construction is fine).  ``applyInPandasWithState``
-    (``running_totals_stream``) is the dependency-free fallback."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n bigint, s double", ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].fillna(0.0).sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Totals(),
-            outputStructType="user_id bigint, n_events bigint, sum_value double",
-            outputMode="Update",
-            # TTL'd state REQUIRES a time mode (r10 review: the
-            # hardcoded "None" made Spark's handle validation reject
-            # the ttlDurationMs at stream start — the documented TTL
-            # path could never run); same conditional as the sibling
-            # tws operators
-            timeMode="ProcessingTime" if state_ttl_ms is not None else "None",
-        )
-    )
-
-
 def join_streams(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -507,16 +448,12 @@ def _duration_ms(duration: str) -> int:
 
 def funnel_fold(state_triple, rows_df):
     """The per-user monotone funnel transition (view → click →
-    purchase), factored out of ``funnel_stream`` AND
-    ``funnel_tws_stream`` so both carry ONE stage machine (the
-    attribution_fold pattern, r10 review — the fold was previously
-    duplicated verbatim and a tie-rule fix to one copy would silently
-    diverge the other; this is also the protobuf-free unit-test seam
-    for the tws variant).  Given the carried (t_view, t_click,
-    t_purchase) and one micro-batch pandas frame of this user's rows,
-    return the advanced triple: batch rows fold in event-time order,
-    stages never regress, and each stage timestamp must be STRICTLY
-    after its predecessor's."""
+    purchase) that ``funnel_stream`` folds each micro-batch through,
+    factored out as the Spark-free unit-test seam (the attribution_fold
+    pattern).  Given the carried (t_view, t_click, t_purchase) and one
+    micro-batch pandas frame of this user's rows, return the advanced
+    triple: batch rows fold in event-time order, stages never regress,
+    and each stage timestamp must be STRICTLY after its predecessor's."""
     tv, tc, tp = state_triple
     if len(rows_df):
         srt = rows_df.sort_values("ts")
@@ -599,106 +536,6 @@ def funnel_stream(
                 if ttl_ms is not None
                 else GroupStateTimeout.NoTimeout
             ),
-        )
-    )
-
-
-def funnel_tws_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    idle_ttl: str | None = None,
-) -> DataFrame:
-    """``funnel_stream`` on the Spark 4 ``transformWithState`` API:
-    the same view→click→purchase monotone stage machine, with the state
-    as a named TYPED ValueState and idle eviction as an explicit per-key
-    processing-time TIMER instead of the old API's blanket
-    ``setTimeoutDuration``.
-
-    Why timers beat the old timeout for this operator: the timer is a
-    first-class, inspectable piece of state (``listTimers``), it re-arms
-    per key on every update (`registerTimer` after `deleteTimer` — one
-    live timer per key, so eviction fires exactly ``idle_ttl`` after the
-    LAST event), and expiry runs a dedicated ``handleExpiredTimer``
-    callback that can clean up MULTIPLE state variables atomically —
-    the shape every session-like operator needs once state stops being
-    one tuple.  Eviction CLEARS the funnel rather than emitting a
-    tombstone: a returning evicted user restarts at stage 1, identical
-    to ``funnel_stream``'s TTL contract (test_streaming proves eviction
-    shrinks the RocksDB store for the old API; this one follows the
-    same protocol).
-
-    At 100 TB-scale streams: state is three timestamps + one timer per
-    user key in RocksDB (``ROCKSDB_STATE_CONF``), output is Update-mode
-    deltas, and timer expiry batches by key-group — no scan of the full
-    store.  Runtime gate (same as ``running_totals_tws_stream``): the
-    transformWithState Python workers need ``google.protobuf``; plan
-    construction is dependency-free and ``funnel_stream`` is the
-    fallback with identical semantics."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl_ms = _duration_ms(idle_ttl) if idle_ttl is not None else None
-
-    class _Funnel(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._funnel = handle.getValueState(
-                "funnel", "tv timestamp, tc timestamp, tp timestamp"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            tv, tc, tp = (
-                self._funnel.get() if self._funnel.exists() else (None, None, None)
-            )
-            pdfs = list(rows)
-            batch = pd.concat(pdfs) if pdfs else pd.DataFrame()
-            # the ONE shared stage machine (funnel_fold) — semantics
-            # identical to funnel_stream by construction, not by copy
-            tv, tc, tp = funnel_fold((tv, tc, tp), batch)
-            self._funnel.update((tv, tc, tp))
-            if ttl_ms is not None:
-                # exactly one live timer per key, re-armed on every
-                # update so it fires idle_ttl after the LAST event
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + ttl_ms
-                )
-            if tv is not None:
-                stage = 3 if tp is not None else (2 if tc is not None else 1)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "t_view": [tv],
-                        "t_click": [tc],
-                        "t_purchase": [tp],
-                        "stage": [stage],
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # idle eviction: drop the funnel state (the timer that fired
-            # is already consumed); a returning user restarts at stage 1
-            self._funnel.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Funnel(),
-            outputStructType=(
-                "user_id bigint, t_view timestamp, t_click timestamp, "
-                "t_purchase timestamp, stage int"
-            ),
-            outputMode="Update",
-            timeMode="ProcessingTime" if ttl_ms is not None else "None",
         )
     )
 
@@ -1345,8 +1182,8 @@ def heavy_hitters_tws_stream(
 ) -> DataFrame:
     """Streaming heavy hitters: q_heavy_hitters' incremental twin on
     ``transformWithState`` with typed MAP STATE — the r8 new state
-    primitive (the other tws operators carry ValueState/ListState; a
-    frequency sketch is the canonical map-shaped state).
+    primitive (the other tws operators carry ListState; a frequency
+    sketch is the canonical map-shaped state).
 
     Sharding IS the correctness architecture: items group by
     ``pmod(hash(item), n_shards)``, so every occurrence of a given item

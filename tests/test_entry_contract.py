@@ -13,196 +13,208 @@ both fresh and still describes the code it certifies.
 
 from __future__ import annotations
 
+import json
+import os
+
 import __spark_entry__ as entry_mod
 from etl_template_spark.queries import REGISTRY
 
-# The intended round-3 correctness window: the fixed q_agg_approx_percentile
-# first (its round-2 row was an `err`), then the oracle-backed queries that
-# have no official row yet, in registry order.
-ROUND3_WINDOW = [
-    "q_agg_approx_percentile",
-    "q_tpch_q16", "q_tpch_q6", "q_tpch_q2", "q_tpch_q8", "q_tpch_q9",
-    "q_tpch_q11", "q_tpch_q13", "q_tpch_q15", "q_tpch_q17", "q_tpch_q19",
-    "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
-    "q_win_rank", "q_win_analytic", "q_win_frame", "q_topk_per_group",
-    "q_win_distribution",
-    "q_sort_limit", "q_union", "q_union_distinct", "q_intersect", "q_except",
-    "q_distinct",
-    "q_fn_string", "q_fn_date", "q_fn_math", "q_fn_cond", "q_fn_array",
-    "q_fn_map_json",
-    "q_udf_pandas", "q_udaf_pandas", "q_udf_apply_in_pandas",
-    "q_udtf_explode", "q_udtf_mapinpandas", "q_udtf_python",
-    "q_win_dedup", "q_merge_upsert", "q_scd2", "q_agg_skew_salted",
-    "q_sample_hash",
-    "q_events_funnel", "q_events_retention",
-    "q_dedup_exact", "q_dedup_fuzzy", "q_dedup_cluster",
-    "q_dedup_incremental", "q_dedup_ngram", "q_dedup_simhash",
-]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The correctness window each round's build predicted, one row per round:
+# the front 50 names of ``queries()`` the harness was expected to record.
+WINDOWS = {
+    # r5: the two r04 hash-FAIL fixes, the eight new phase-7 queries, then invalidated modules
+    5: [
+        'q_token_type_ratio', 'q_pack_sequences', 'q_sample_weighted',
+        'q_sample_stratified', 'q_sample_reservoir', 'q_sample_cluster',
+        'q_sample_budget', 'q_lateral_topk', 'q_recluster_zorder',
+        'q_cross_encoder_score', 'q_scan_parquet', 'q_scan_jsonl', 'q_scan_csv',
+        'q_scan_orc', 'q_sink_partitioned', 'q_sink_versioned', 'q_scan_pyds',
+        'q_scan_text', 'q_compact_versioned', 'q_sink_zorder', 'q_delete_versioned',
+        'q_scan_versioned_merged', 'q_agg_group', 'q_agg_global', 'q_agg_distinct',
+        'q_agg_having', 'q_agg_approx', 'q_rollup', 'q_cube', 'q_grouping_sets',
+        'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup', 'q_agg_approx_percentile',
+        'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding', 'q_knn_join_blocked',
+        'q_sim_search_ivf', 'q_sim_search_pq', 'q_multimodal_meta',
+        'q_multimodal_features', 'q_multimodal_frames', 'q_pii_scrub', 'q_ngram_freq',
+        'q_chunk_documents', 'q_sink_hilbert', 'q_project', 'q_filter', 'q_join_inner',
+    ],
+    # r6: six new queries, sixteen invalidated, then the r2-stale tail and the r3 tail's head
+    6: [
+        'q_lateral_outer', 'q_recluster_hilbert', 'q_bm25_rank', 'q_dedup_url',
+        'q_version_diff', 'q_dedup_bloom', 'q_win_rank', 'q_win_analytic',
+        'q_win_frame', 'q_topk_per_group', 'q_win_distribution', 'q_sim_search',
+        'q_sim_search_lsh', 'q_dedup_embedding', 'q_knn_join_blocked',
+        'q_sim_search_ivf', 'q_sim_search_pq', 'q_multimodal_meta',
+        'q_multimodal_features', 'q_multimodal_frames', 'q_lateral_topk',
+        'q_recluster_zorder', 'q_join_left', 'q_join_right', 'q_join_full',
+        'q_join_semi', 'q_join_anti', 'q_join_broadcast', 'q_join_multi',
+        'q_join_theta', 'q_join_asof', 'q_join_promo_share', 'q_join_range',
+        'q_tpch_q3', 'q_tpch_q18', 'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q10', 'q_tpch_q12',
+        'q_tpch_q16', 'q_tpch_q6', 'q_tpch_q2', 'q_tpch_q8', 'q_tpch_q9', 'q_tpch_q11',
+        'q_tpch_q13', 'q_tpch_q15', 'q_tpch_q17', 'q_tpch_q19', 'q_tpch_q20',
+    ],
+    # r7: sixteen new queries, seven invalidated, then the whole 27-query r3-stale tail
+    7: [
+        'q_changelog_apply', 'q_shuffle_interleave', 'q_dedup_semantic',
+        'q_incremental_agg', 'q_timeseries_gapfill', 'q_profile_table',
+        'q_distribution_drift', 'q_quality_repetition', 'q_entity_resolution',
+        'q_index_inverted', 'q_anomaly_mad', 'q_ngram_pmi', 'q_locf_impute',
+        'q_agg_hll', 'q_attribution_linear', 'q_scd2_lookup', 'q_sample_weighted',
+        'q_sample_stratified', 'q_sample_reservoir', 'q_sample_cluster',
+        'q_sample_budget', 'q_bm25_rank', 'q_dedup_url', 'q_tpch_q21', 'q_tpch_q22',
+        'q_sort_limit', 'q_union', 'q_union_distinct', 'q_intersect', 'q_except',
+        'q_distinct', 'q_fn_string', 'q_fn_date', 'q_fn_math', 'q_fn_cond',
+        'q_fn_array', 'q_fn_map_json', 'q_udf_pandas', 'q_udaf_pandas',
+        'q_udf_apply_in_pandas', 'q_udtf_explode', 'q_udtf_mapinpandas',
+        'q_udtf_python', 'q_win_dedup', 'q_merge_upsert', 'q_scd2', 'q_agg_skew_salted',
+        'q_sample_hash', 'q_events_funnel', 'q_events_retention',
+    ],
+    # r8: nine new queries, 14 invalidated llm_text entries, the r4-stale tail, six r5 scans
+    8: [
+        'q_pagerank', 'q_rank_metrics', 'q_rolling_stats', 'q_train_test_split',
+        'q_dataset_mixture', 'q_constraint_check', 'q_dedup_containment',
+        'q_dedup_prefix', 'q_quantile_sketch', 'q_dedup_exact', 'q_dedup_fuzzy',
+        'q_dedup_cluster', 'q_dedup_incremental', 'q_dedup_ngram', 'q_dedup_simhash',
+        'q_text_stats', 'q_lang_id', 'q_quality_score', 'q_token_count',
+        'q_fingerprint', 'q_tfidf', 'q_heavy_hitters', 'q_corpus_curation',
+        'q_subquery_scalar', 'q_subquery_in', 'q_subquery_correlated', 'q_agg_stats',
+        'q_agg_percentile', 'q_string_agg', 'q_stream_tumbling', 'q_stream_sliding',
+        'q_sessionize', 'q_stream_dedup_late', 'q_stream_join', 'q_sessionize_native',
+        'q_stream_distinct_users', 'q_agg_mode', 'q_agg_minmax_by', 'q_agg_cond_count',
+        'q_histogram', 'q_events_transitions', 'q_dedup_keep_best',
+        'q_contamination_check', 'q_ngram_novelty', 'q_scan_parquet', 'q_scan_jsonl',
+        'q_scan_csv', 'q_scan_orc', 'q_sink_partitioned', 'q_sink_versioned',
+    ],
+    # r9: three new queries, two invalidated, the r5-stale block, then the 17 stalest r6
+    9: [
+        'q_quantile_rollup', 'q_pagerank_weighted', 'q_stream_join_outer', 'q_pagerank',
+        'q_quantile_sketch', 'q_scan_pyds', 'q_scan_text', 'q_compact_versioned',
+        'q_sink_zorder', 'q_delete_versioned', 'q_scan_versioned_merged', 'q_project',
+        'q_filter', 'q_join_inner', 'q_agg_group', 'q_agg_global', 'q_agg_distinct',
+        'q_agg_having', 'q_agg_approx', 'q_agg_approx_percentile', 'q_rollup', 'q_cube',
+        'q_grouping_sets', 'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup',
+        'q_pii_scrub', 'q_ngram_freq', 'q_token_type_ratio', 'q_chunk_documents',
+        'q_pack_sequences', 'q_sink_hilbert', 'q_cross_encoder_score', 'q_join_left',
+        'q_join_right', 'q_join_full', 'q_join_semi', 'q_join_anti', 'q_join_broadcast',
+        'q_join_multi', 'q_join_theta', 'q_join_asof', 'q_join_promo_share',
+        'q_join_range', 'q_tpch_q3', 'q_tpch_q18', 'q_tpch_q4', 'q_tpch_q7',
+        'q_tpch_q10', 'q_tpch_q12',
+    ],
+    # r10: q_tpch_q5, the remaining r6-stale block, then the 18 stalest r7 entries
+    10: [
+        'q_tpch_q5', 'q_tpch_q16', 'q_tpch_q6', 'q_tpch_q2', 'q_tpch_q8', 'q_tpch_q9',
+        'q_tpch_q11', 'q_tpch_q13', 'q_tpch_q15', 'q_tpch_q17', 'q_tpch_q19',
+        'q_tpch_q20', 'q_win_rank', 'q_win_analytic', 'q_win_frame', 'q_topk_per_group',
+        'q_win_distribution', 'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding',
+        'q_knn_join_blocked', 'q_sim_search_ivf', 'q_sim_search_pq',
+        'q_multimodal_meta', 'q_multimodal_features', 'q_multimodal_frames',
+        'q_lateral_topk', 'q_lateral_outer', 'q_recluster_zorder',
+        'q_recluster_hilbert', 'q_version_diff', 'q_dedup_bloom', 'q_tpch_q21',
+        'q_tpch_q22', 'q_sort_limit', 'q_union', 'q_union_distinct', 'q_intersect',
+        'q_except', 'q_distinct', 'q_fn_string', 'q_fn_date', 'q_fn_math', 'q_fn_cond',
+        'q_fn_array', 'q_fn_map_json', 'q_udf_pandas', 'q_udaf_pandas',
+        'q_udf_apply_in_pandas', 'q_udtf_explode',
+    ],
+    # r11: 22 invalidated by the round's perf edits, then the 28 stalest valid entries
+    11: [
+        'q_dedup_exact', 'q_dedup_fuzzy', 'q_dedup_cluster', 'q_dedup_incremental',
+        'q_dedup_ngram', 'q_dedup_simhash', 'q_text_stats', 'q_lang_id',
+        'q_quality_score', 'q_token_count', 'q_fingerprint', 'q_tfidf',
+        'q_heavy_hitters', 'q_corpus_curation', 'q_dedup_containment', 'q_dedup_prefix',
+        'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding', 'q_knn_join_blocked',
+        'q_sim_search_ivf', 'q_sim_search_pq', 'q_udtf_mapinpandas', 'q_udtf_python',
+        'q_win_dedup', 'q_merge_upsert', 'q_scd2', 'q_agg_skew_salted', 'q_sample_hash',
+        'q_events_funnel', 'q_events_retention', 'q_sample_weighted',
+        'q_sample_stratified', 'q_sample_reservoir', 'q_sample_cluster',
+        'q_sample_budget', 'q_bm25_rank', 'q_dedup_url', 'q_changelog_apply',
+        'q_shuffle_interleave', 'q_dedup_semantic', 'q_incremental_agg',
+        'q_timeseries_gapfill', 'q_profile_table', 'q_distribution_drift',
+        'q_quality_repetition', 'q_entity_resolution', 'q_index_inverted',
+        'q_anomaly_mad', 'q_ngram_pmi',
+    ],
+    # r12: pure staleness rotation (4 r7, all 32 r8, 14 stalest r9), nothing invalidated
+    12: [
+        'q_locf_impute', 'q_agg_hll', 'q_attribution_linear', 'q_scd2_lookup',
+        'q_scan_parquet', 'q_scan_jsonl', 'q_scan_csv', 'q_scan_orc',
+        'q_sink_partitioned', 'q_sink_versioned', 'q_subquery_scalar', 'q_subquery_in',
+        'q_subquery_correlated', 'q_agg_stats', 'q_agg_percentile', 'q_string_agg',
+        'q_stream_tumbling', 'q_stream_sliding', 'q_sessionize', 'q_stream_dedup_late',
+        'q_stream_join', 'q_sessionize_native', 'q_stream_distinct_users', 'q_agg_mode',
+        'q_agg_minmax_by', 'q_agg_cond_count', 'q_histogram', 'q_events_transitions',
+        'q_dedup_keep_best', 'q_contamination_check', 'q_ngram_novelty',
+        'q_rank_metrics', 'q_rolling_stats', 'q_train_test_split', 'q_dataset_mixture',
+        'q_constraint_check', 'q_scan_pyds', 'q_scan_text', 'q_compact_versioned',
+        'q_sink_zorder', 'q_delete_versioned', 'q_scan_versioned_merged', 'q_project',
+        'q_filter', 'q_join_inner', 'q_join_left', 'q_join_right', 'q_join_full',
+        'q_join_semi', 'q_join_anti',
+    ],
+    # r13: the first 50 of 75 entries invalidated by the round's optimization edits
+    13: [
+        'q_join_broadcast', 'q_join_multi', 'q_join_theta', 'q_join_asof',
+        'q_join_promo_share', 'q_join_range', 'q_agg_group', 'q_agg_global',
+        'q_agg_distinct', 'q_agg_having', 'q_agg_approx', 'q_agg_approx_percentile',
+        'q_rollup', 'q_cube', 'q_grouping_sets', 'q_agg_pivot', 'q_unpivot',
+        'q_agg_sketch_rollup', 'q_tpch_q3', 'q_tpch_q18', 'q_tpch_q4', 'q_tpch_q7',
+        'q_tpch_q10', 'q_tpch_q12', 'q_tpch_q16', 'q_tpch_q6', 'q_tpch_q2', 'q_tpch_q8',
+        'q_tpch_q9', 'q_tpch_q11', 'q_tpch_q13', 'q_tpch_q15', 'q_tpch_q17',
+        'q_tpch_q19', 'q_tpch_q20', 'q_tpch_q21', 'q_tpch_q22', 'q_tpch_q5',
+        'q_events_funnel', 'q_events_retention', 'q_dedup_exact', 'q_dedup_fuzzy',
+        'q_dedup_cluster', 'q_dedup_incremental', 'q_dedup_ngram', 'q_dedup_simhash',
+        'q_text_stats', 'q_lang_id', 'q_quality_score', 'q_token_count',
+    ],
+    # r14: the first 50 of 75 entries invalidated by the SQL-text build rework
+    14: [
+        'q_fingerprint', 'q_tfidf', 'q_heavy_hitters', 'q_corpus_curation',
+        'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding', 'q_knn_join_blocked',
+        'q_sim_search_ivf', 'q_sim_search_pq', 'q_dedup_semantic', 'q_anomaly_mad',
+        'q_join_inner', 'q_join_left', 'q_join_right', 'q_join_full', 'q_join_semi',
+        'q_join_anti', 'q_subquery_scalar', 'q_subquery_in', 'q_subquery_correlated',
+        'q_agg_stats', 'q_agg_percentile', 'q_string_agg', 'q_stream_tumbling',
+        'q_stream_sliding', 'q_sessionize', 'q_stream_dedup_late', 'q_stream_join',
+        'q_sessionize_native', 'q_stream_distinct_users', 'q_rank_metrics',
+        'q_agg_group', 'q_agg_global', 'q_agg_distinct', 'q_agg_having', 'q_agg_approx',
+        'q_agg_approx_percentile', 'q_rollup', 'q_cube', 'q_grouping_sets',
+        'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup', 'q_tpch_q3', 'q_tpch_q18',
+        'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q10', 'q_tpch_q12',
+    ],
+}
 
 
-# The intended round-5 correctness window, pinned at the end of the
-# round-5 build: the two r04 hash-FAIL fixes lead, then the eight new
-# phase-7 queries, then the invalidated modules (scans/aggregates/
-# similarity/multimodal/curation — all edited this round)
-# stalest-recording-first, then the head of the valid r2 tail.
-ROUND5_WINDOW = [
-    "q_token_type_ratio", "q_pack_sequences", "q_sample_weighted", "q_sample_stratified",
-    "q_sample_reservoir", "q_sample_cluster", "q_sample_budget", "q_lateral_topk",
-    "q_recluster_zorder", "q_cross_encoder_score", "q_scan_parquet", "q_scan_jsonl",
-    "q_scan_csv", "q_scan_orc", "q_sink_partitioned", "q_sink_versioned",
-    "q_scan_pyds", "q_scan_text", "q_compact_versioned", "q_sink_zorder",
-    "q_delete_versioned", "q_scan_versioned_merged", "q_agg_group", "q_agg_global",
-    "q_agg_distinct", "q_agg_having", "q_agg_approx", "q_rollup",
-    "q_cube", "q_grouping_sets", "q_agg_pivot", "q_unpivot",
-    "q_agg_sketch_rollup", "q_agg_approx_percentile", "q_sim_search", "q_sim_search_lsh",
-    "q_dedup_embedding", "q_knn_join_blocked", "q_sim_search_ivf", "q_sim_search_pq",
-    "q_multimodal_meta", "q_multimodal_features", "q_multimodal_frames", "q_pii_scrub",
-    "q_ngram_freq", "q_chunk_documents", "q_sink_hilbert", "q_project",
-    "q_filter", "q_join_inner",
-]
+def _window_tripwire(rnd: int):
+    def test():
+        """Window-drift tripwire for one round.  BEFORE its recording
+        lands, the live exposure order must start with exactly the pinned
+        prediction; AFTER ``CORRECTNESS_rNN.json`` exists, the names the
+        harness actually recorded must match a prefix of it — a window
+        that drifted between pinning and recording fails the round it
+        happened, not two rounds later."""
+        window = WINDOWS[rnd]
+        path = os.path.join(REPO, f"CORRECTNESS_r{rnd:02d}.json")
+        if not os.path.exists(path):
+            assert list(entry_mod.queries())[:50] == window
+            return
+        with open(path) as f:
+            recorded = list(json.load(f))
+        assert set(recorded) == set(window[: len(recorded)]), (
+            f"r{rnd:02d} recorded a different window than the round-{rnd} "
+            "build predicted"
+        )
+
+    test.__name__ = test.__qualname__ = f"test_round{rnd}_window_matches_prediction"
+    return test
 
 
-# The intended round-6 correctness window, pinned at the end of the
-# round-6 build: the six new queries lead (fresh, oracle-backed:
-# LATERAL OUTER, Hilbert re-clustering, retrieval family, version diff,
-# bloom-prefiltered dedup — registry order), then the sixteen
-# invalidated queries (similarity — the IVF/PQ oracle upgrade touched
-# the module — multimodal's NULL-text oracle fix, lateral's and
-# recluster's new siblings, and the windows family, whose q_win_frame
-# gained a total-order tiebreaker after a 10x-scale soak exposed a
-# fixture PK violation), then the entire 17-query r2-stale tail (joins
-# family + early TPC-H shapes) and the head of the r3 tail.
-ROUND6_WINDOW = [
-    "q_lateral_outer", "q_recluster_hilbert", "q_bm25_rank", "q_dedup_url",
-    "q_version_diff", "q_dedup_bloom", "q_win_rank", "q_win_analytic",
-    "q_win_frame", "q_topk_per_group", "q_win_distribution", "q_sim_search",
-    "q_sim_search_lsh", "q_dedup_embedding", "q_knn_join_blocked", "q_sim_search_ivf",
-    "q_sim_search_pq", "q_multimodal_meta", "q_multimodal_features", "q_multimodal_frames",
-    "q_lateral_topk", "q_recluster_zorder", "q_join_left", "q_join_right",
-    "q_join_full", "q_join_semi", "q_join_anti", "q_join_broadcast",
-    "q_join_multi", "q_join_theta", "q_join_asof", "q_join_promo_share",
-    "q_join_range", "q_tpch_q3", "q_tpch_q18", "q_tpch_q4",
-    "q_tpch_q7", "q_tpch_q10", "q_tpch_q12", "q_tpch_q16",
-    "q_tpch_q6", "q_tpch_q2", "q_tpch_q8", "q_tpch_q9",
-    "q_tpch_q11", "q_tpch_q13", "q_tpch_q15", "q_tpch_q17",
-    "q_tpch_q19", "q_tpch_q20",
-]
-
-
-# The intended round-7 correctness window, pinned at the end of the
-# round-7 build: the sixteen new queries lead (registry order — the
-# CDC/interleave/semantic-dedup/IVM/gapfill/profiling slice, the
-# repetition/linkage/index/anomaly/PMI/LOCF slice, then the
-# HLL/attribution/PIT-lookup slice), then the seven invalidated
-# entries (sampling family — module edited this round — plus
-# bm25/url-dedup, touched by the round-6 ADVICE literal fix), then
-# the entire 27-query r3-stale tail (tpch q21/q22, set ops,
-# scalar-function and UDF families, ETL ops, events) — 16+7+27 = 50
-# exactly; growth for this round stopped here precisely so no r3-stale
-# entry fell out of the window.
-ROUND7_WINDOW = [
-    'q_changelog_apply', 'q_shuffle_interleave', 'q_dedup_semantic', 'q_incremental_agg',
-    'q_timeseries_gapfill', 'q_profile_table', 'q_distribution_drift', 'q_quality_repetition',
-    'q_entity_resolution', 'q_index_inverted', 'q_anomaly_mad', 'q_ngram_pmi',
-    'q_locf_impute', 'q_agg_hll', 'q_attribution_linear', 'q_scd2_lookup',
-    'q_sample_weighted', 'q_sample_stratified', 'q_sample_reservoir', 'q_sample_cluster',
-    'q_sample_budget', 'q_bm25_rank', 'q_dedup_url', 'q_tpch_q21',
-    'q_tpch_q22', 'q_sort_limit', 'q_union', 'q_union_distinct',
-    'q_intersect', 'q_except', 'q_distinct', 'q_fn_string',
-    'q_fn_date', 'q_fn_math', 'q_fn_cond', 'q_fn_array',
-    'q_fn_map_json', 'q_udf_pandas', 'q_udaf_pandas', 'q_udf_apply_in_pandas',
-    'q_udtf_explode', 'q_udtf_mapinpandas', 'q_udtf_python', 'q_win_dedup',
-    'q_merge_upsert', 'q_scd2', 'q_agg_skew_salted', 'q_sample_hash',
-    'q_events_funnel', 'q_events_retention',
-]
-
-
-def test_round7_window_matches_prediction():
-    """Window-drift tripwire, round-7 edition (same pattern as r5/r6).
-    BEFORE the round-7 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r07.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r07 = os.path.join(repo, "CORRECTNESS_r07.json")
-    if not os.path.exists(r07):
-        assert list(entry_mod.queries())[:50] == ROUND7_WINDOW
-        return
-    with open(r07) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND7_WINDOW[: len(recorded)]), (
-        "r07 recorded a different window than the round-7 build predicted"
-    )
-
-
-def test_round6_window_matches_prediction():
-    """Window-drift tripwire, round-6 edition (the r5 pin pattern).
-    BEFORE the round-6 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r06.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r06 = os.path.join(repo, "CORRECTNESS_r06.json")
-    if not os.path.exists(r06):
-        assert list(entry_mod.queries())[:50] == ROUND6_WINDOW
-        return
-    with open(r06) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND6_WINDOW[: len(recorded)]), (
-        "r06 recorded a different window than the round-6 build predicted"
-    )
-
-
-def test_round5_window_matches_prediction():
-    """Window-drift tripwire (r4 VERDICT item 8).  BEFORE the round-5
-    recording lands, the live exposure order must start with exactly the
-    pinned prediction; AFTER CORRECTNESS_r05.json exists, the names the
-    driver actually recorded must be a prefix of that prediction — if
-    they aren't, the window drifted between pinning and recording and
-    this fails the round it happened, not two rounds later."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r05 = os.path.join(repo, "CORRECTNESS_r05.json")
-    if not os.path.exists(r05):
-        assert list(entry_mod.queries())[:50] == ROUND5_WINDOW
-        return
-    with open(r05) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND5_WINDOW[: len(recorded)]), (
-        "r05 recorded a different window than the round-5 build predicted"
-    )
+# one test per table row, named test_round<N>_window_matches_prediction
+for _rnd in WINDOWS:
+    globals()[f"test_round{_rnd}_window_matches_prediction"] = _window_tripwire(_rnd)
 
 
 def test_exposure_covers_registry_exactly():
     qs = entry_mod.queries()
     assert set(qs) == set(REGISTRY)
     assert len(qs) == len(REGISTRY)
-
-
-def test_round3_window_is_pinned():
-    """The first 50 exposed queries are exactly the intended round-3
-    correctness window, in order.  If this fails after adding a query,
-    register it in a module imported late enough (or extend the pin
-    deliberately) so it doesn't evict a window entry.  Once round-3
-    results land (CORRECTNESS_r03.json), the exposure order re-ranks
-    itself from the files and this static pin retires — the invariant
-    tests below keep holding."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if os.path.exists(os.path.join(repo, "CORRECTNESS_r03.json")):
-        import pytest
-
-        pytest.skip("round-3 results recorded; window re-ranked from files")
-    assert list(entry_mod.queries())[:50] == ROUND3_WINDOW
 
 
 def test_exposure_promotes_unrecorded_queries():
@@ -335,11 +347,12 @@ def test_oracles_follow_exposure_order():
 
 
 def test_window_queries_are_oracle_backed():
-    """Window slots are scarce: every slot after the percentile fix must
+    """Window slots are scarce: every name in every pinned window must
     carry the strong hash check, not a rows-only fallback."""
     osql = entry_mod.oracle_sql()
-    for name in ROUND3_WINDOW[1:]:
-        assert name in osql, f"{name} burns a window slot without an oracle"
+    for rnd, window in WINDOWS.items():
+        for name in window:
+            assert name in osql, f"{name} burns an r{rnd} window slot without an oracle"
 
 
 def test_every_query_has_a_docstring():
@@ -371,367 +384,3 @@ def test_documented_query_counts_match_registry():
     survey = open(os.path.join(repo, "SURVEY.md")).read()
     claims = re.findall(r"(\d+)/(\d+), rows-only set empty", survey)
     assert claims and all(a == b == str(n) for a, b in claims), claims
-
-
-# The intended round-8 correctness window, pinned at the end of the
-# round-8 build: the nine new queries lead (registry order — pagerank,
-# rank-metrics, rolling stats, split/mixture, DQ checks, containment
-# dedup, prefix-filter exact Jaccard, the decimal quantile sketch),
-# then the 14 INVALIDATED llm_text
-# entries (the r8-review refactor moved the shared DF-capped candidate
-# pipeline into operators/dedup.py, editing their defining module),
-# then the remaining 21-query r4-stale tail (subquery family,
-# agg_stats/percentile/string_agg, streaming batch twins, extensions),
-# then the six stalest r5 scan/sink entries — 9+14+21+6 = 50 exactly.
-# The invalidation costs NO slots (every invalidated entry was already
-# in the window as r4-stale); the ninth fresh query displaces one r5
-# scan entry (q_scan_pyds) to the r9 window head.
-ROUND8_WINDOW = [
-    'q_pagerank', 'q_rank_metrics', 'q_rolling_stats', 'q_train_test_split',
-    'q_dataset_mixture', 'q_constraint_check', 'q_dedup_containment', 'q_dedup_prefix',
-    'q_quantile_sketch', 'q_dedup_exact', 'q_dedup_fuzzy', 'q_dedup_cluster',
-    'q_dedup_incremental', 'q_dedup_ngram', 'q_dedup_simhash', 'q_text_stats',
-    'q_lang_id', 'q_quality_score', 'q_token_count', 'q_fingerprint',
-    'q_tfidf', 'q_heavy_hitters', 'q_corpus_curation', 'q_subquery_scalar',
-    'q_subquery_in', 'q_subquery_correlated', 'q_agg_stats', 'q_agg_percentile',
-    'q_string_agg', 'q_stream_tumbling', 'q_stream_sliding', 'q_sessionize',
-    'q_stream_dedup_late', 'q_stream_join', 'q_sessionize_native', 'q_stream_distinct_users',
-    'q_agg_mode', 'q_agg_minmax_by', 'q_agg_cond_count', 'q_histogram',
-    'q_events_transitions', 'q_dedup_keep_best', 'q_contamination_check', 'q_ngram_novelty',
-    'q_scan_parquet', 'q_scan_jsonl', 'q_scan_csv', 'q_scan_orc',
-    'q_sink_partitioned', 'q_sink_versioned',
-]
-
-
-# The intended round-9 correctness window, pinned at the end of the
-# round-9 build: the three new queries lead (registry order — the
-# quantile-sketch UNION rollup, weighted PageRank, and the left-outer
-# stream-join batch twin), then the two INVALIDATED entries
-# (q_pagerank — its oracle moved to the r9 integer-contribution
-# formulation after the sf0.1 soak caught the float one flipping
-# weighted ranks by a nano; q_quantile_sketch — the r9 ADVICE
-# domain-guard edit to ddsketch.py), then the ENTIRE remaining
-# r5-stale block (28 queries: scans/sinks, projection, agg/rollup
-# family, curation, cross-encoder — headed by q_scan_pyds, displaced
-# from the r8 window), then the stalest 17 of the r6 block (join
-# family + tpch head) — 3+2+28+17 = 50 exactly.
-# The intended round-12 correctness window, pinned at the start of the
-# round-12 build per the r11 VERDICT rotation directive: zero fresh,
-# zero invalidated (the 22 r11 re-recordings were stamped at round
-# start — invalidated_names() empty), so the window is purely the
-# staleness rotation: the 4 remaining r7-recorded entries
-# (q_locf_impute, q_agg_hll, q_attribution_linear, q_scd2_lookup —
-# the r7 tail displaced from the r11 window by the 22 invalidations),
-# then ALL 32 r8-recorded entries (the scans/sinks pair displaced from
-# r11, the subquery/advanced-SQL block, the agg family, the streaming
-# batch-twins, the rank/rolling/splits/mixture/constraint/contamination
-# tail), then the 14 stalest r9-recorded entries (q_scan_pyds through
-# the join family) — 4+32+14 = 50 exactly, matching the r11 VERDICT's
-# recomputed prediction name-for-name.
-ROUND12_WINDOW = [
-    'q_locf_impute', 'q_agg_hll', 'q_attribution_linear', 'q_scd2_lookup',
-    'q_scan_parquet', 'q_scan_jsonl', 'q_scan_csv', 'q_scan_orc',
-    'q_sink_partitioned', 'q_sink_versioned', 'q_subquery_scalar',
-    'q_subquery_in', 'q_subquery_correlated', 'q_agg_stats',
-    'q_agg_percentile', 'q_string_agg', 'q_stream_tumbling',
-    'q_stream_sliding', 'q_sessionize', 'q_stream_dedup_late',
-    'q_stream_join', 'q_sessionize_native', 'q_stream_distinct_users',
-    'q_agg_mode', 'q_agg_minmax_by', 'q_agg_cond_count', 'q_histogram',
-    'q_events_transitions', 'q_dedup_keep_best', 'q_contamination_check',
-    'q_ngram_novelty', 'q_rank_metrics', 'q_rolling_stats',
-    'q_train_test_split', 'q_dataset_mixture', 'q_constraint_check',
-    'q_scan_pyds', 'q_scan_text', 'q_compact_versioned', 'q_sink_zorder',
-    'q_delete_versioned', 'q_scan_versioned_merged', 'q_project',
-    'q_filter', 'q_join_inner', 'q_join_left', 'q_join_right',
-    'q_join_full', 'q_join_semi', 'q_join_anti',
-]
-
-
-def test_round12_window_matches_prediction():
-    """Window-drift tripwire, round-12 edition (same pattern as r5-r11).
-    BEFORE the round-12 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r12.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r12 = os.path.join(repo, "CORRECTNESS_r12.json")
-    if not os.path.exists(r12):
-        assert list(entry_mod.queries())[:50] == ROUND12_WINDOW
-        return
-    with open(r12) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND12_WINDOW[: len(recorded)]), (
-        "r12 recorded a different window than the round-12 build predicted"
-    )
-
-
-# The intended round-13 correctness window, RE-PINNED mid-round: round
-# 13 is the first OPTIMIZATION round, and its plan work rewrote query
-# modules across the similarity/dedup/tpch/agg/joins/events families
-# plus compat.py (whose hash feeds every importing module's stamp), so
-# 75 recorded queries are now INVALIDATED — their old green rows no
-# longer certify the current code.  The exposure order puts invalidated
-# entries ahead of validly-recorded ones (stalest recording first,
-# registry order tiebreak), which is exactly the re-verification
-# priority an optimization round wants: every slot of the 50-wide
-# window goes to a query whose module changed this round.  (The
-# original r12-VERDICT prediction assumed zero invalidations; that
-# assumption was true only until the first optimization commit.)
-ROUND13_WINDOW = [
-    'q_join_broadcast', 'q_join_multi', 'q_join_theta', 'q_join_asof',
-    'q_join_promo_share', 'q_join_range', 'q_agg_group', 'q_agg_global',
-    'q_agg_distinct', 'q_agg_having', 'q_agg_approx',
-    'q_agg_approx_percentile', 'q_rollup', 'q_cube', 'q_grouping_sets',
-    'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup', 'q_tpch_q3',
-    'q_tpch_q18', 'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q10', 'q_tpch_q12',
-    'q_tpch_q16', 'q_tpch_q6', 'q_tpch_q2', 'q_tpch_q8', 'q_tpch_q9',
-    'q_tpch_q11', 'q_tpch_q13', 'q_tpch_q15', 'q_tpch_q17',
-    'q_tpch_q19', 'q_tpch_q20', 'q_tpch_q21', 'q_tpch_q22', 'q_tpch_q5',
-    'q_events_funnel', 'q_events_retention', 'q_dedup_exact',
-    'q_dedup_fuzzy', 'q_dedup_cluster', 'q_dedup_incremental',
-    'q_dedup_ngram', 'q_dedup_simhash', 'q_text_stats', 'q_lang_id',
-    'q_quality_score', 'q_token_count',
-]
-
-
-def test_round13_window_matches_prediction():
-    """Window-drift tripwire, round-13 edition (same pattern as r5-r12).
-    BEFORE the round-13 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r13.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r13 = os.path.join(repo, "CORRECTNESS_r13.json")
-    if not os.path.exists(r13):
-        assert list(entry_mod.queries())[:50] == ROUND13_WINDOW
-        return
-    with open(r13) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND13_WINDOW[: len(recorded)]), (
-        "r13 recorded a different window than the round-13 build predicted"
-    )
-
-
-# The intended round-14 correctness window, pinned after the round's
-# optimization edits settled (r13-VERDICT item 8 asked for the
-# staleness rotation "unless r14 edits again invalidate broadly" —
-# they do: the SQL-text build rework touched similarity/llm_text/
-# aggregates/tpch_full/tpch_shapes, leaving 75 recorded queries
-# invalidated).  The window is exactly the mechanism's output:
-# invalidated entries stalest-recorded-first (the r12-era
-# joins/streams/subquery/sessionize blocks that r13 invalidated but
-# never re-recorded, then the r13-era agg/tpch blocks), no
-# hand-picking — with ONE principled addition: PLAN NOTE docstrings in
-# advanced_sql.py/anomaly.py invalidate q_agg_percentile and
-# q_anomaly_mad, whose executed plans changed through the shared
-# percentile operator (operators/percentiles.py, commit 2dbbea3) that
-# the defining-module content hash cannot see — the same blind spot
-# r11 closed for q_dedup_containment/q_dedup_prefix.  25 invalidated
-# entries do not fit the 50-slot window (the q_dedup_* family,
-# q_events_*, and the tpch_full tail q_tpch_q16/q6/q2/q8/q9 among
-# them); their current content is covered by the bit-exact snapshot
-# equality gates, the local 180/180 DuckDB differential, and the
-# committed plan artifacts (plans/r14/).
-ROUND14_WINDOW = [
-    'q_fingerprint', 'q_tfidf', 'q_heavy_hitters', 'q_corpus_curation',
-    'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding',
-    'q_knn_join_blocked', 'q_sim_search_ivf', 'q_sim_search_pq',
-    'q_dedup_semantic', 'q_anomaly_mad', 'q_join_inner', 'q_join_left',
-    'q_join_right', 'q_join_full', 'q_join_semi', 'q_join_anti',
-    'q_subquery_scalar', 'q_subquery_in', 'q_subquery_correlated',
-    'q_agg_stats', 'q_agg_percentile', 'q_string_agg',
-    'q_stream_tumbling', 'q_stream_sliding', 'q_sessionize',
-    'q_stream_dedup_late', 'q_stream_join', 'q_sessionize_native',
-    'q_stream_distinct_users', 'q_rank_metrics', 'q_agg_group',
-    'q_agg_global', 'q_agg_distinct', 'q_agg_having', 'q_agg_approx',
-    'q_agg_approx_percentile', 'q_rollup', 'q_cube', 'q_grouping_sets',
-    'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup', 'q_tpch_q3',
-    'q_tpch_q18', 'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q10', 'q_tpch_q12',
-]
-
-
-def test_round14_window_matches_prediction():
-    """Window-drift tripwire, round-14 edition (same pattern as
-    r5-r13).  BEFORE the round-14 recording lands, the live exposure
-    order must start with exactly the pinned prediction; AFTER
-    CORRECTNESS_r14.json exists, the names the driver actually recorded
-    must match a prefix of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r14 = os.path.join(repo, "CORRECTNESS_r14.json")
-    if not os.path.exists(r14):
-        assert list(entry_mod.queries())[:50] == ROUND14_WINDOW
-        return
-    with open(r14) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND14_WINDOW[: len(recorded)]), (
-        "r14 recorded a different window than the round-14 build predicted"
-    )
-
-
-# The intended round-11 correctness window, pinned at the start of the
-# round-11 build per the r10 VERDICT rotation directive: zero fresh and
-# re-pinned mid-round (r11): the round's perf edits deliberately
-# invalidate 22 stamps — llm_text.py's 14 (the _doc_shingles
-# repartition(doc_id) single-shuffle change, A/B-measured and
-# plan-pinned), q_dedup_containment and q_dedup_prefix (PLANS changed
-# through shared helpers the defining-module content hash cannot see;
-# explicit invalidating plan notes, r11 review finding), and
-# similarity.py's 6 (the IVF centroid persist — A/B-measured, same
-# multi-consumer class).  The 22 lead the window (stalest first,
-# registry order within a round: the r8 llm_text block, then the
-# containment/prefix pair, then the r10-recorded similarity module),
-# followed by the 28 stalest valid entries (the r7 block headed by
-# the UDF-surface tail, through q_ngram_pmi) — 22+28 = 50 exactly.
-# Displaced to the r12 window head: the r7 tail from q_locf_impute
-# through the sinks, and the r8 subquery/advanced-SQL block.
-ROUND11_WINDOW = [
-    'q_dedup_exact', 'q_dedup_fuzzy', 'q_dedup_cluster',
-    'q_dedup_incremental', 'q_dedup_ngram', 'q_dedup_simhash',
-    'q_text_stats', 'q_lang_id', 'q_quality_score', 'q_token_count',
-    'q_fingerprint', 'q_tfidf', 'q_heavy_hitters', 'q_corpus_curation',
-    'q_dedup_containment', 'q_dedup_prefix',
-    'q_sim_search', 'q_sim_search_lsh', 'q_dedup_embedding',
-    'q_knn_join_blocked', 'q_sim_search_ivf', 'q_sim_search_pq',
-    'q_udtf_mapinpandas', 'q_udtf_python', 'q_win_dedup', 'q_merge_upsert',
-    'q_scd2', 'q_agg_skew_salted', 'q_sample_hash', 'q_events_funnel',
-    'q_events_retention', 'q_sample_weighted', 'q_sample_stratified',
-    'q_sample_reservoir', 'q_sample_cluster', 'q_sample_budget', 'q_bm25_rank',
-    'q_dedup_url', 'q_changelog_apply', 'q_shuffle_interleave',
-    'q_dedup_semantic', 'q_incremental_agg', 'q_timeseries_gapfill',
-    'q_profile_table', 'q_distribution_drift', 'q_quality_repetition',
-    'q_entity_resolution', 'q_index_inverted', 'q_anomaly_mad', 'q_ngram_pmi',
-]
-
-
-def test_round11_window_matches_prediction():
-    """Window-drift tripwire, round-11 edition (same pattern as r5-r10).
-    BEFORE the round-11 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r11.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r11 = os.path.join(repo, "CORRECTNESS_r11.json")
-    if not os.path.exists(r11):
-        assert list(entry_mod.queries())[:50] == ROUND11_WINDOW
-        return
-    with open(r11) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND11_WINDOW[: len(recorded)]), (
-        "r11 recorded a different window than the round-11 build predicted"
-    )
-
-
-# The intended round-10 correctness window, pinned at the start of the
-# round-10 build per the r9 VERDICT rotation directive: the ONE new
-# query leads (q_tpch_q5 — the cyclic 6-way join, the round's only
-# growth item; zero invalidated entries this round), then the ENTIRE
-# remaining r6-stale block (31 queries: tpch mid/tail, windows,
-# similarity/ANN, multimodal, lateral, recluster, version_diff,
-# dedup_bloom), then the stalest 18 of the r7 block (tpch q21/q22,
-# setops, scalar functions, UDF surface head) — 1+31+18 = 50 exactly.
-ROUND10_WINDOW = [
-    'q_tpch_q5', 'q_tpch_q16', 'q_tpch_q6', 'q_tpch_q2', 'q_tpch_q8',
-    'q_tpch_q9', 'q_tpch_q11', 'q_tpch_q13', 'q_tpch_q15', 'q_tpch_q17',
-    'q_tpch_q19', 'q_tpch_q20', 'q_win_rank', 'q_win_analytic', 'q_win_frame',
-    'q_topk_per_group', 'q_win_distribution', 'q_sim_search', 'q_sim_search_lsh',
-    'q_dedup_embedding', 'q_knn_join_blocked', 'q_sim_search_ivf', 'q_sim_search_pq',
-    'q_multimodal_meta', 'q_multimodal_features', 'q_multimodal_frames',
-    'q_lateral_topk', 'q_lateral_outer', 'q_recluster_zorder', 'q_recluster_hilbert',
-    'q_version_diff', 'q_dedup_bloom', 'q_tpch_q21', 'q_tpch_q22',
-    'q_sort_limit', 'q_union', 'q_union_distinct', 'q_intersect',
-    'q_except', 'q_distinct', 'q_fn_string', 'q_fn_date',
-    'q_fn_math', 'q_fn_cond', 'q_fn_array', 'q_fn_map_json',
-    'q_udf_pandas', 'q_udaf_pandas', 'q_udf_apply_in_pandas', 'q_udtf_explode',
-]
-
-
-def test_round10_window_matches_prediction():
-    """Window-drift tripwire, round-10 edition (same pattern as r5-r9).
-    BEFORE the round-10 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r10.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r10 = os.path.join(repo, "CORRECTNESS_r10.json")
-    if not os.path.exists(r10):
-        assert list(entry_mod.queries())[:50] == ROUND10_WINDOW
-        return
-    with open(r10) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND10_WINDOW[: len(recorded)]), (
-        "r10 recorded a different window than the round-10 build predicted"
-    )
-
-
-ROUND9_WINDOW = [
-    'q_quantile_rollup', 'q_pagerank_weighted', 'q_stream_join_outer',
-    'q_pagerank', 'q_quantile_sketch', 'q_scan_pyds', 'q_scan_text',
-    'q_compact_versioned', 'q_sink_zorder', 'q_delete_versioned',
-    'q_scan_versioned_merged', 'q_project', 'q_filter', 'q_join_inner',
-    'q_agg_group', 'q_agg_global', 'q_agg_distinct', 'q_agg_having',
-    'q_agg_approx', 'q_agg_approx_percentile', 'q_rollup', 'q_cube',
-    'q_grouping_sets', 'q_agg_pivot', 'q_unpivot', 'q_agg_sketch_rollup',
-    'q_pii_scrub', 'q_ngram_freq', 'q_token_type_ratio', 'q_chunk_documents',
-    'q_pack_sequences', 'q_sink_hilbert', 'q_cross_encoder_score', 'q_join_left',
-    'q_join_right', 'q_join_full', 'q_join_semi', 'q_join_anti',
-    'q_join_broadcast', 'q_join_multi', 'q_join_theta', 'q_join_asof',
-    'q_join_promo_share', 'q_join_range', 'q_tpch_q3', 'q_tpch_q18',
-    'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q10', 'q_tpch_q12',
-]
-
-
-def test_round9_window_matches_prediction():
-    """Window-drift tripwire, round-9 edition (same pattern as r5-r8).
-    BEFORE the round-9 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r09.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r09 = os.path.join(repo, "CORRECTNESS_r09.json")
-    if not os.path.exists(r09):
-        assert list(entry_mod.queries())[:50] == ROUND9_WINDOW
-        return
-    with open(r09) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND9_WINDOW[: len(recorded)]), (
-        "r09 recorded a different window than the round-9 build predicted"
-    )
-
-
-def test_round8_window_matches_prediction():
-    """Window-drift tripwire, round-8 edition (same pattern as r5-r7).
-    BEFORE the round-8 recording lands, the live exposure order must
-    start with exactly the pinned prediction; AFTER CORRECTNESS_r08.json
-    exists, the names the driver actually recorded must match a prefix
-    of the prediction."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r08 = os.path.join(repo, "CORRECTNESS_r08.json")
-    if not os.path.exists(r08):
-        assert list(entry_mod.queries())[:50] == ROUND8_WINDOW
-        return
-    with open(r08) as f:
-        recorded = list(json.load(f))
-    assert set(recorded) == set(ROUND8_WINDOW[: len(recorded)]), (
-        "r08 recorded a different window than the round-8 build predicted"
-    )

@@ -12,6 +12,7 @@ import json
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from etl_template_spark.io import latest_version, list_versions, read_versioned
@@ -169,83 +170,54 @@ def test_knoll_wipes_scratch(tmp_path):
     assert os.path.isdir(scratch) and os.listdir(scratch) == []
 
 
-def test_parallel_run_levels_and_results(spark, tmp_path):
-    """parallel=True: independent steps run concurrently within a
-    level, dependent steps still see their input's committed version,
-    and the manifest ends Completed with every step accounted for."""
-    import threading
+def test_failed_step_releases_its_persisted_frames(spark, tmp_path):
+    """A step that persists an intermediate (caching.persist_tracked)
+    and then raises must not leave it pinned: every attempt releases on
+    the way out, so retries do not pile up cached frames either."""
+    from etl_template_spark import caching
 
-    from pyspark.sql import functions as F
+    pinned = []
 
-    from etl_template_spark.io import read_versioned
-    from etl_template_spark.pipeline import Pipeline
+    def persist_then_fail(sp, _df):
+        pinned.append(caching.persist_tracked(sp.range(10)))
+        raise RuntimeError("after persist")
 
-    root = str(tmp_path / "data")
-    concurrency = {"active": 0, "peak": 0}
-    lock = threading.Lock()
-
-    def _tracked(fn):
-        def wrapped(spark_, df_in):
-            with lock:
-                concurrency["active"] += 1
-                concurrency["peak"] = max(concurrency["peak"], concurrency["active"])
-            try:
-                import time as _t
-
-                _t.sleep(0.5)  # hold the slot so siblings overlap
-                return fn(spark_, df_in)
-            finally:
-                with lock:
-                    concurrency["active"] -= 1
-
-        return wrapped
-
-    p = (
-        Pipeline("par", root)
-        .step("a", _tracked(lambda sp, _: sp.range(0, 10).select(F.col("id"))))
-        .step("b", _tracked(lambda sp, _: sp.range(10, 20).select(F.col("id"))))
-        .step(
-            "c",
-            lambda sp, df: df.select((F.col("id") * 2).alias("id")),
-            input_step="a",
-        )
+    p = Pipeline("etl_pins", str(tmp_path / "data")).step(
+        "Pins", persist_then_fail, max_retries=2
     )
-    run = p.run(spark, parallel=True)
-    assert run.overall_status == "Completed"
-    assert concurrency["peak"] >= 2  # a and b overlapped
-    assert sorted(
-        r["id"] for r in read_versioned(spark, root, "c").collect()
-    ) == [i * 2 for i in range(10)]
+    with pytest.raises(StepFailed):
+        p.run(spark)
+    assert len(pinned) == 3  # one frame per attempt
+    assert caching._TRACKED == []
+    assert not any(df.is_cached for df in pinned)
+    assert all(df.storageLevel == StorageLevel.NONE for df in pinned)
 
 
-def test_parallel_run_fail_fast_skips_later_levels(spark, tmp_path):
-    """A level-1 failure must stop level 2 but still stow a manifest
-    with the failure recorded."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from etl_template_spark.pipeline import Pipeline, StepFailed
-
-    root = str(tmp_path / "data")
-
-    def _boom(sp, df):
-        raise RuntimeError("boom")
-
-    p = (
-        Pipeline("parfail", root)
-        .step("a", lambda sp, _: sp.range(0, 5).select(F.col("id")))
-        .step("b", _boom, input_step="a")
-        .step("c", lambda sp, df: df, input_step="b")
-    )
-    with _pytest.raises(StepFailed):
-        p.run(spark, parallel=True)
-    import json as _json
-
-    manifest = _json.load(open(p.status_path))
-    by_name = {st["StepName"]: st["Status"] for st in manifest["Steps"]}
-    assert by_name["a"] == "Completed"
-    assert by_name["b"] == "Failed"
-    assert by_name["c"] == "Pending"
+@pytest.mark.parametrize(
+    "declare, match",
+    [
+        # a consumer's read is parquet; a JSON read needs a schema
+        pytest.param(
+            lambda p: p.step("a", _extract, fmt="json").step("b", _transform, input_step="a"),
+            "writes 'json'",
+            id="json_producer",
+        ),
+        # a forward (or misspelt) producer has no version in this run
+        pytest.param(
+            lambda p: p.step("b", _transform, input_step="a").step("a", _extract),
+            "not a previously declared step",
+            id="forward_input_step",
+        ),
+        pytest.param(
+            lambda p: p.step("a", _extract).step("a", _extract),
+            "duplicate step name",
+            id="duplicate_name",
+        ),
+    ],
+)
+def test_step_declaration_rejects(tmp_path, declare, match):
+    with pytest.raises(ValueError, match=match):
+        declare(Pipeline("etl_decl", str(tmp_path / "data")))
 
 
 def test_worked_example_runs(spark, tmp_path, monkeypatch):

@@ -187,41 +187,9 @@ def _protobuf_available() -> bool:
         return False
 
 
-def test_transform_with_state_plan_constructs(spark, events_dir):
-    """transformWithStateInPandas plan construction is environment-free:
-    the unstarted streaming DataFrame must carry the declared output
-    schema (execution needs protobuf — gated test below)."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-
-    totals = running_totals_tws_stream(read_events_stream(spark, events_dir))
-    assert totals.isStreaming
-    assert [f.name for f in totals.schema.fields] == [
-        "user_id", "n_events", "sum_value",
-    ]
-
-
-def test_tws_ttl_selects_processing_time_mode(spark, events_dir):
-    """r10 review: TTL'd state REQUIRES a time mode — with the old
-    hardcoded timeMode="None", Spark's handle validation rejected the
-    ttlDurationMs at stream start, so the operator's documented TTL
-    path could never run.  The analyzed plan must carry ProcessingTime
-    exactly when a TTL is requested."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-
-    stream = read_events_stream(spark, events_dir)
-    with_ttl = running_totals_tws_stream(stream, state_ttl_ms=3_600_000)
-    without = running_totals_tws_stream(stream)
-    assert "ProcessingTime" in with_ttl._jdf.queryExecution().analyzed().toString()
-    assert (
-        "ProcessingTime"
-        not in without._jdf.queryExecution().analyzed().toString()
-    )
-
-
 def test_funnel_fold_is_the_shared_stage_machine():
-    """r10 review: the monotone view→click→purchase fold used to be
-    duplicated verbatim in funnel_stream and funnel_tws_stream; it is
-    now ONE function.  Pin its two subtle rules: stage timestamps are
+    """funnel_stream's monotone view→click→purchase fold, tested
+    without Spark.  Pin its two subtle rules: stage timestamps are
     STRICTLY increasing (a click at the view's exact instant does not
     advance), and stages never regress on replayed/late rows."""
     import pandas as pd
@@ -282,51 +250,6 @@ def test_attribution_fold_null_user_credits_direct():
     )
     assert out == [(7, None, "direct", 50.0, 0)]
     assert touches == []
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container; package installation is prohibited here — "
-    "see pyproject [streaming-state] extra); running_totals_stream covers the same "
-    "semantics on applyInPandasWithState",
-)
-def test_transform_with_state_running_totals(spark, events_dir, tmp_path):
-    """transformWithStateInPandas (typed ValueState on RocksDB): the
-    per-user totals must equal both the batch aggregation and the
-    applyInPandasWithState implementation's output."""
-    from etl_template_spark.streaming import running_totals_tws_stream
-    from etl_template_spark.streaming.jobs import ROCKSDB_STATE_CONF
-
-    old = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        stream = read_events_stream(spark, events_dir)
-        totals = running_totals_tws_stream(stream)
-        run_available_now(
-            totals, "tws_totals_out", str(tmp_path / "ckpt_tws"), output_mode="update"
-        )
-        final = {}
-        for r in spark.table("tws_totals_out").collect():
-            final[r["user_id"]] = (r["n_events"], r["sum_value"])
-        batch = (
-            spark.read.schema(
-                "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-                "value double, props string"
-            )
-            .json(events_dir)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        )
-        expect = {r["user_id"]: (r["n"], r["s"]) for r in batch.collect()}
-        assert final == expect
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_stream_stream_join_matches_batch_twin(spark, tmp_path):
@@ -783,76 +706,6 @@ def test_retention_stream_idle_ttl_evicts_state_rows(spark, tmp_path):
     assert shrunk_to == 0, (
         f"idle users were not evicted (peak={peak}, after-TTL={shrunk_to})"
     )
-
-
-def test_funnel_tws_plan_constructs(spark, events_dir):
-    """funnel_tws_stream plan construction is environment-free (both
-    with and without the timer-armed TTL path): the unstarted streaming
-    frame must carry the declared output schema."""
-    from etl_template_spark.streaming import funnel_tws_stream
-
-    for ttl in (None, "90 days"):
-        out = funnel_tws_stream(
-            read_events_stream(spark, events_dir), idle_ttl=ttl
-        )
-        assert out.isStreaming
-        assert [f.name for f in out.schema.fields] == [
-            "user_id", "t_view", "t_click", "t_purchase", "stage",
-        ]
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState Python workers require google.protobuf "
-    "(absent in this container); funnel_stream covers the same "
-    "semantics on applyInPandasWithState",
-)
-def test_funnel_tws_matches_batch_twin_over_backlog(spark, tmp_path):
-    """The typed-state/timer funnel must land on the same final
-    per-user stages as funnel_stream over the same bounded backlog
-    (update mode: keep each user's LAST emission)."""
-    from etl_template_spark.streaming import funnel_tws_stream
-    from etl_template_spark.streaming.jobs import ROCKSDB_STATE_CONF
-
-    rows = [
-        (1, "2024-01-01 10:00:00", 1, "view", 0.0),
-        (2, "2024-01-01 10:10:00", 1, "click", 0.0),
-        (3, "2024-01-01 10:20:00", 1, "purchase", 5.0),
-        (4, "2024-01-01 09:00:00", 2, "click", 0.0),
-        (5, "2024-01-01 10:00:00", 2, "view", 0.0),
-        (6, "2024-01-01 11:00:00", 3, "view", 0.0),
-        (7, "2024-01-01 11:30:00", 3, "click", 0.0),
-        (8, "2024-01-01 12:00:00", 4, "purchase", 9.0),
-    ]
-    path = str(tmp_path / "ev_jsonl")
-    os.makedirs(path)
-    with open(os.path.join(path, "part-0.json"), "w") as f:
-        for e in rows:
-            f.write(json.dumps({
-                "event_id": e[0], "ts": e[1], "user_id": e[2],
-                "event_type": e[3], "value": e[4], "props": "{}",
-            }) + "\n")
-
-    old = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        out = funnel_tws_stream(
-            read_events_stream(spark, path), idle_ttl="90 days"
-        )
-        run_available_now(out, "funnel_tws_out", str(tmp_path / "ckpt"),
-                          output_mode="update")
-        got = {
-            r["user_id"]: r["stage"]
-            for r in spark.table("funnel_tws_out").collect()
-        }
-        assert got == {1: 3, 2: 1, 3: 2}
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_attribution_tws_plan_constructs(spark, events_dir):
