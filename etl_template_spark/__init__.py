@@ -25,7 +25,6 @@ Layout:
 __version__ = "0.2.0"
 
 from .io import (  # noqa: F401,E402
-    analyze_versioned,
     compact_merged_log,
     compact_versioned,
     delete_versioned,
@@ -43,7 +42,6 @@ from .session import get_spark  # noqa: F401,E402
 
 __all__ = [
     "Pipeline",
-    "analyze_versioned",
     "compact_merged_log",
     "compact_versioned",
     "delete_versioned",

@@ -22,21 +22,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _quoted(table: str) -> str:
-    """Backtick-quote each dot-separated identifier part in the SQL
-    strings below (the io.py register_versioned_table pattern).
-    DEFENSIVE under default configs, verified by the r10 mutation
-    pass: Spark's default parser accepts keywords (even ``order``) as
-    identifiers in both SQL text and the DataFrame API paths, and
-    names the CATALOG rejects (``line-items``) fail either way with
-    INVALID_SCHEMA_OR_RELATION_NAME.  The quoting matters when a
-    deployment enables ``spark.sql.ansi.enforceReservedKeywords``,
-    where unquoted reserved words stop parsing — cheap insurance
-    against a config this module cannot see."""
-    return ".".join(
-        "`" + part.replace("`", "``") + "`" for part in table.split(".")
-    )
+from .io import _quoted
 
 
 def _drop_stale(spark: SparkSession, table: str) -> None:

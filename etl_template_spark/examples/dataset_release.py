@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 
 from .. import Pipeline, get_spark
 from ..io import load_table
-from ..queries.splits import _MIX_TARGETS, _TRAIN_PCT, _VAL_PCT, _hash_bucket
+from ..queries.sampling import hash_bucket
+from ..queries.splits import _MIX_TARGETS, _TRAIN_PCT, _VAL_PCT
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -111,7 +112,7 @@ def split(spark: SparkSession, selected: DataFrame) -> DataFrame:
     """Content-hash split assignment over the selected corpus — the
     column a real release writes as its partition key
     (write_versioned(..., partition_by=['split']))."""
-    bucket = _hash_bucket()
+    bucket = hash_bucket(F.col("doc_id"), 100).cast("int")
     return selected.select(
         "doc_id",
         "lang",

@@ -77,10 +77,6 @@ TABLE_DDL: dict[str, str] = {
 TABLES = tuple(TABLE_DDL)
 
 
-def table_schema(name: str) -> T.StructType:
-    return T.StructType.fromDDL(TABLE_DDL[name])
-
-
 # Per-session cache of resolved fixture-table DataFrame handles (r13
 # optimization).  Every ``spark.read.parquet`` pays a driver-side
 # resolution round (file listing + footer schema, ~100 ms measured), and
@@ -430,50 +426,82 @@ def read_versioned(
     raise ValueError(f"unsupported format: {fmt}")
 
 
+def _quoted(table: str) -> str:
+    """Backtick-quote each dot-separated identifier part of a table
+    name for SQL text, so a database-qualified name ('appdb.suppliers')
+    keeps addressing the database rather than becoming one identifier
+    with a literal dot.  DEFENSIVE under default configs, verified by
+    the r10 mutation pass: Spark's default parser accepts keywords
+    (even ``order``) as identifiers, and names the CATALOG rejects
+    (``line-items``) fail either way with
+    INVALID_SCHEMA_OR_RELATION_NAME.  The quoting matters when a
+    deployment enables ``spark.sql.ansi.enforceReservedKeywords``,
+    where unquoted reserved words stop parsing."""
+    return ".".join(
+        "`" + part.replace("`", "``") + "`" for part in table.split(".")
+    )
+
+
 def register_versioned_table(
     spark: SparkSession,
     root: str,
     step: str,
     version: int | None = None,
     table: str | None = None,
-    analyze: bool = True,
+    columns: list[str] | None = None,
 ) -> str:
-    """Register a versioned output as a catalog table and collect table
-    + column statistics, so CBO join-reordering and broadcast selection
-    see versioned datasets the same way they see bucketed tables
-    (bucketing.py::write_bucketed does this at write; versioned writes
-    are path-based, and Spark's CBO only reads statistics from the
-    catalog — a bare ``spark.read.parquet(path)`` gets file-size
-    estimates only, no row counts or NDVs).
+    """Register a COMMITTED version as an external catalog table and
+    collect cost-based-optimizer statistics on it (SURVEY §4.2's "collect
+    stats on versioned outputs" row), returning the (unquoted) table
+    name.  ``columns=None`` analyzes every column; a non-empty list
+    analyzes table-level stats plus those columns only.
 
-    Call after ``write_versioned`` on datasets that downstream joins
-    will consume.  The table name defaults to ``<step>_v<N>`` so each
-    immutable version carries its own immutable stats; re-registering
-    the same version is idempotent (drop + recreate + re-analyze).
-    Naming: Spark's session catalog only accepts ``[A-Za-z0-9_]``
-    table names, so the default name sanitizes every other character in
-    the step name to ``_`` (a hyphenated step registers fine); the name
-    is additionally backtick-quoted into each statement rather than
-    interpolated raw.  Registration lands in the session's current
+    Why it matters at 100 TB: a path-based parquet read carries only
+    file SIZE, and Spark's CBO only reads statistics from the catalog,
+    so Catalyst cannot estimate what a selective filter leaves — a
+    post-filter dimension that would fit in a broadcast is still costed
+    at full scan size and falls back to a sort-merge join, and
+    multi-way join reorder has no row counts to order by.  With
+    rowCount + per-column NDV/min/max recorded here, CBO's filter
+    estimation shrinks the estimate and flips those decisions
+    (test_plans.py asserts the broadcast flip).  bucketing.py's
+    ``write_bucketed`` does the same for bucketed tables at write.
+    ``spark.sql.cbo.enabled`` must be on for planners to USE the stats.
+
+    Call right after ``write_versioned`` commits.  An uncommitted claim
+    (no ``_SUCCESS``) is refused with ``FileNotFoundError``: its stats
+    would describe data no reader can see.  The table name defaults to
+    ``<step>_v<N>`` so each immutable version carries its own immutable
+    stats.  Re-registering drops and recreates the table: two roots can
+    share a (step, version) pair (tests, reprocessing runs), and keeping
+    an existing table would record stats against the FIRST root's data.
+    The table is external, so the drop touches metadata only.  Naming:
+    Spark's session catalog only accepts ``[A-Za-z0-9_]`` table names,
+    so the default name sanitizes every other character in the step
+    name to ``_``, and the name is backtick-quoted into each statement.
+    The version path travels to the catalog as a parameter, never as
+    interpolated LOCATION DDL, so a root containing a quote cannot break
+    the statement.  Registration lands in the session's current
     database, so concurrent pipelines sharing a metastore should pass
-    an app-scoped ``table`` (or set their own database) to avoid name
-    collisions.  Returns the (unquoted) table name."""
-    if version is None:
-        version = latest_version(root, step)
-        if version is None:
-            raise FileNotFoundError(f"no versions for step {step!r} under {root!r}")
-    path = os.path.join(_step_dir(root, step), f"v={version}")
-    table = table or re.sub(r"[^A-Za-z0-9_]", "_", f"{step}_v{version}")
-    # quote each dot-separated part, so explicitly passed
-    # database-qualified names ('appdb.suppliers') keep addressing the
-    # database rather than becoming one identifier with a literal dot
-    quoted = ".".join(
-        "`" + part.replace("`", "``") + "`" for part in table.split(".")
-    )
+    an app-scoped ``table`` to avoid name collisions.  With the default
+    in-memory catalog the stats live for the SESSION; a metastore-backed
+    catalog persists them unchanged (plain ANALYZE DDL)."""
+    v = latest_version(root, step) if version is None else version
+    if v is None or not _version_committed(_step_dir(root, step), v):
+        raise FileNotFoundError(
+            f"no committed v={version!r} for step {step!r} under {root!r}"
+        )
+    path = os.path.join(_step_dir(root, step), f"v={v}")
+    table = table or re.sub(r"[^A-Za-z0-9_]", "_", f"{step}_v{v}")
+    quoted = _quoted(table)
     spark.sql(f"DROP TABLE IF EXISTS {quoted}")
     spark.catalog.createTable(quoted, path=path, source="parquet")
-    if analyze:
-        spark.sql(f"ANALYZE TABLE {quoted} COMPUTE STATISTICS FOR ALL COLUMNS")
+    scope = (
+        "ALL COLUMNS"
+        if columns is None
+        else "COLUMNS " + ", ".join(f"`{c}`" for c in columns)
+    )
+    spark.sql(f"ANALYZE TABLE {quoted} COMPUTE STATISTICS FOR {scope}")
     return table
 
 
@@ -693,67 +721,6 @@ def read_versioned_merged(
         .parquet(*paths)
         .withColumnRenamed("v", "_version")
     )
-
-
-def analyze_versioned(
-    spark: SparkSession,
-    root: str,
-    step: str,
-    version: int | None = None,
-    columns: list[str] | None = None,
-    database: str = "etl_stats",
-) -> str:
-    """Collect cost-based-optimizer statistics for a committed version
-    (round 9 — the SURVEY §4.2 "enable spark.sql.cbo.enabled, collect
-    stats on versioned outputs" row): registers the version directory
-    as an external catalog table and runs ``ANALYZE TABLE`` (table-level
-    always; column-level for ``columns``), returning the table name.
-
-    Why it matters at 100 TB: a path-based parquet read carries only
-    file SIZE, so Catalyst cannot estimate what a selective filter
-    leaves — a post-filter dimension that would fit in a broadcast is
-    still costed at full scan size and falls back to a sort-merge join,
-    and multi-way join reorder has no row counts to order by.  With
-    rowCount + per-column NDV/min/max recorded here, CBO's filter
-    estimation shrinks the estimate and flips those decisions
-    (test_plans.py asserts the broadcast flip), and
-    ``spark.sql.cbo.joinReorder.enabled`` gets real cardinalities.
-
-    Run it where a real deployment would: right after
-    ``write_versioned`` commits, while the files are hot in page cache.
-    Versions are immutable, so stats never go stale for their version —
-    a new version gets its own table (``{database}.{step}_v{N}``).
-    Scope caveat: the default in-memory catalog holds these stats for
-    the SESSION; persistence across sessions needs a metastore-backed
-    catalog, to which this helper ports unchanged (it is plain ANALYZE
-    DDL).  ``spark.sql.cbo.enabled`` must be on for planners to USE the
-    stats; the helper only records them."""
-    v = latest_version(root, step) if version is None else version
-    if v is None or not _version_committed(_step_dir(root, step), v):
-        raise FileNotFoundError(
-            f"analyze_versioned: no committed v={version!r} for step {step!r}"
-        )
-    path = os.path.join(_step_dir(root, step), f"v={v}")
-    safe_db = re.sub(r"[^A-Za-z0-9_]", "_", database)
-    safe_step = re.sub(r"[^A-Za-z0-9_]", "_", step)
-    table = f"{safe_db}.{safe_step}_v{v}"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {safe_db}")
-    # drop-and-recreate rather than IF NOT EXISTS: two roots can share a
-    # (step, version) pair (tests, reprocessing runs), and IF NOT EXISTS
-    # would silently keep the FIRST root's location — stats computed
-    # against the wrong data.  The table is external (explicit
-    # LOCATION), so the drop touches metadata only.
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # catalog API, not interpolated LOCATION DDL: the path travels as a
-    # parameter, so a root/step containing a quote cannot break (or
-    # escape) the statement (r9 ADVICE; register_versioned_table
-    # already did it this way)
-    spark.catalog.createTable(table, path=path, source="parquet")
-    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-    if columns:
-        col_list = ", ".join(f"`{c}`" for c in columns)
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {col_list}")
-    return table
 
 
 def _tree_is_stale(top: str, now: float, grace: float) -> bool:

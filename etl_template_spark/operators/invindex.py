@@ -149,7 +149,6 @@ def bm25_search(
     k1: float = _K1,
     b: float = _B,
     topk: int = 20,
-    prune_lengths: bool = True,
 ) -> DataFrame:
     """(doc_id, bm25, n_hit) top-k over the standing index — the
     served-from-postings twin of ``retrieval.bm25_rank`` (identical
@@ -164,11 +163,7 @@ def bm25_search(
     10⁹ docs every length row shuffles per query.  The pruning build
     side is the broadcast DISTINCT matched-id set (≤ Σ df over the |Q|
     query terms — hit-sized, not corpus-sized), so the length log is
-    streamed, never shuffled, and query cost tracks hit count.  For a
-    pathological query whose terms match most of the corpus (stop-word
-    scale df) that broadcast is itself corpus-sized — pass
-    ``prune_lengths=False`` there to fall back to the plain shuffle
-    join, which is the right plan when hits ≈ N anyway."""
+    streamed, never shuffled, and query cost tracks hit count."""
     from ..io import read_versioned_merged
 
     log = read_versioned_merged(spark, root, f"{step}_post").drop("_version")
@@ -182,9 +177,8 @@ def bm25_search(
     )
     qpost = log.where(F.col("term").isin(*terms))
     df = qpost.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if prune_lengths:
-        hit_ids = qpost.select("doc_id").distinct()
-        dl = dl.join(F.broadcast(hit_ids), "doc_id", "semi")
+    hit_ids = qpost.select("doc_id").distinct()
+    dl = dl.join(F.broadcast(hit_ids), "doc_id", "semi")
 
     avgdl = F.col("n_tokens") * 1.0 / F.col("n_docs")
     idf = F.log(

@@ -3,71 +3,30 @@
 Spark's built-in ``percentile`` aggregate collects every group's values
 into an in-memory ObjectHashAggregate buffer that cannot spill: one
 giant group = one un-splittable OOM-prone task.  This operator computes
-the identical interpolated result through spillable primitives, with
-TWO ranking shapes selected by input size (r13 optimization):
+the identical interpolated result through spillable primitives: one
+pinned key-hash repartition of the measure columns, then per measure a
+``row_number`` over a per-group value sort (``_ranked_window``), pruned
+to the <=2 ranks each target percentile can touch, interpolated as
+``lo + frac * (hi - lo)`` at 0-based position ``(n-1) * p`` — exactly
+DuckDB ``quantile_cont`` / numpy ``linear`` arithmetic, property-tested
+to produce identical results.
 
-- **window-rank** (small inputs): ``row_number`` over a per-group value
-  sort.  Spillable, minimal constant overhead, but sort parallelism
-  equals the number of groups — a 3-group percentile sorts in 3 tasks
-  and a global median in ONE, the straggler shape of guide §2.5/2.6.
-- **range-rank** (large inputs): rows are RANGE-partitioned by
-  (key, value) so every shuffle partition holds a contiguous slice of
-  the sort order and sorts locally; the global rank is reconstructed
-  from a tiny per-(key, partition) layout frame.  Parallelism is the
-  shuffle partition count regardless of group cardinality.
-
-Both shapes then prune rows to the <=2 ranks each target percentile
-can touch and interpolate ``lo + frac * (hi - lo)`` with 0-based
-position ``(n-1) * p`` — exactly DuckDB ``quantile_cont`` / numpy
-``linear`` arithmetic, property-tested to produce identical results.
-
-The switch is the Catalyst size estimate of the filtered input against
-``SPARK_GRAFT_PERCENTILE_RANGE_MIN_BYTES`` (default 4 GiB): below it
-the per-group sort is at worst a few seconds of one core and the
-range shape's extra passes (layout aggregate + rank join + pinned
-materialization) cost more than they save — A/B at sf0.1: 1.75 s vs
-2.9 s median for q_agg_percentile; above it per-group sorting
-serializes onto #groups cores and the range shape is the one that
-finishes.  ``q_agg_percentile`` (queries/advanced_sql.py) is the
-oracle-checked instantiation; the t-digest ``approx_percentile``
-remains the estimate-tolerant fast path.
+Limit: sort parallelism per measure equals the number of groups — a
+3-group percentile sorts in 3 tasks and a global median in ONE.  Each
+task's sort spills, so a large group is slow, not an OOM.
+``q_agg_percentile`` (queries/advanced_sql.py) is the oracle-checked
+instantiation; the t-digest ``approx_percentile`` remains the path for
+unbounded group sizes and estimate-tolerant callers.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Default threshold for switching the ranking shape.  4 GiB ≈ the point
-# where a single-task per-group sort (the window shape's worst case:
-# one group) stops being "a few seconds on one core"; override via env
-# for clusters with different task-size targets.
-_RANGE_MIN_BYTES_ENV = "SPARK_GRAFT_PERCENTILE_RANGE_MIN_BYTES"
-_RANGE_MIN_BYTES_DEFAULT = 4 * 1024**3
-# Explicit shape override (r13 ADVICE): "window" / "range" skip the
-# size estimate entirely.  This is the documented escape hatch for
-# Spark Connect sessions, where ``_estimated_bytes`` cannot reach the
-# classic-mode queryExecution internals and every call would otherwise
-# pin to the heavier range shape regardless of input size.
-_SHAPE_ENV = "SPARK_GRAFT_PERCENTILE_SHAPE"
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for ``df`` (best-effort; falls back to
-    'large' so the scalable shape is chosen when the estimate is
-    unavailable — e.g. under Spark Connect, where ``_jdf`` does not
-    exist; set ``SPARK_GRAFT_PERCENTILE_SHAPE=window`` there for small
-    inputs).  Costs one analyze/optimize pass, so callers compute it
-    ONCE per query, not once per measure column (r13 ADVICE)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 1 << 62
+from ..caching import persist_tracked
 
 
 def _ranked_window(vals: DataFrame, keys: list[str], col: str) -> DataFrame:
@@ -98,62 +57,6 @@ def _ranked_window(vals: DataFrame, keys: list[str], col: str) -> DataFrame:
     )
 
 
-def _ranked_range(vals: DataFrame, keys: list[str], col: str) -> DataFrame:
-    """Distributed rank selection: range-partition by (key, value),
-    sort each partition locally, and reconstruct the global rank from a
-    tiny per-(key, partition) layout frame:
-    rank = (rows of this key in earlier partitions)
-         + (local index within the key's block) + 1.
-
-    Determinism: the layout frame and the ranked rows both read the
-    SAME materialized partitioning (``persist_tracked`` below), so the
-    range boundaries — which come from sampling and are not stable
-    across separate executions — cannot diverge between the two
-    consumers.  Within a block of EQUAL values row order is arbitrary,
-    but every rank inside such a block maps to the same value, so the
-    selected percentile inputs are deterministic (property-tested vs
-    numpy linear).  Callers run under the engine's per-query
-    ``release_tracked`` discipline, which frees the pin.
-
-    The layout join carries one row per (group, partition); it is NOT
-    hint-broadcast (r10's driver-OOM concern at 10⁸ groups stands) —
-    AQE broadcasts it when small and falls back to a spillable shuffle
-    join when not."""
-    from ..caching import persist_tracked
-
-    loc = persist_tracked(
-        vals.repartitionByRange(*keys, F.col(col))
-        .sortWithinPartitions(*keys, F.col(col))
-        .select(
-            *keys,
-            col,
-            F.spark_partition_id().alias("__pid"),
-            F.monotonically_increasing_id()
-            .bitwiseAND(F.lit((1 << 33) - 1))
-            .alias("__lidx"),
-        )
-    )
-    layout = loc.groupBy(*keys, "__pid").agg(
-        F.count(F.lit(1)).alias("__cnt"), F.min("__lidx").alias("__lstart")
-    )
-    w_off = (
-        Window.partitionBy(*keys)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy(*keys)
-    layout = layout.select(
-        *keys,
-        "__pid",
-        "__lstart",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__cnt").over(w_tot).alias("__n"),
-    )
-    return loc.join(layout, [*keys, "__pid"]).withColumn(
-        "__rn", F.col("__off") + (F.col("__lidx") - F.col("__lstart")) + 1
-    )
-
-
 def exact_group_percentiles(
     df: DataFrame,
     key: str | Sequence[str],
@@ -166,9 +69,9 @@ def exact_group_percentiles(
     comparison boundary).
 
     NULL semantics (matching DuckDB ``quantile_cont`` / numpy over
-    dropped NaNs): NULL measure values are EXCLUDED — filtered before
-    ranking and absent from each column's count — so they neither shift
-    interpolated positions nor sort first; a group whose measure is
+    dropped NaNs): NULL measure values are EXCLUDED — ranked below
+    every value and absent from each column's count — so they neither
+    shift interpolated positions nor sort first; a group whose measure is
     entirely NULL yields NULL for that column's targets.  Rows with a
     NULL group key are excluded entirely (SQL GROUP BY would keep a
     NULL group; callers needing that should coalesce keys to a
@@ -182,48 +85,19 @@ def exact_group_percentiles(
             raise ValueError(f"percentile fraction out of range: {p}")
         by_col.setdefault(col, []).append((alias, p))
 
-    shape = os.environ.get(_SHAPE_ENV, "").strip().lower()
-    if shape not in ("window", "range"):
-        # ONE analyze/optimize pass per query, not one per measure
-        # column (r13 ADVICE): the estimate of the key-filtered frame
-        # upper-bounds every per-column vals frame (each only adds an
-        # isNotNull filter), and both shapes return identical rows
-        # (property-pinned), so the shared estimate can only move the
-        # switch point, never the result.
-        range_min_bytes = int(
-            os.environ.get(_RANGE_MIN_BYTES_ENV, _RANGE_MIN_BYTES_DEFAULT)
-        )
-        shape = (
-            "range" if _estimated_bytes(df) >= range_min_bytes else "window"
-        )
-    if shape == "window":
-        # r14 (guide §2.4): ONE key-hash repartition of the measure
-        # table, PINNED, shared by the group list and EVERY per-column
-        # window sort — each window requires hash(keys) distribution
-        # and its value sort sits above the cache.  Without the pin
-        # the n+1 consumers each re-plan their own scan+shuffle:
-        # per-consumer column pruning (and, before r14, the per-column
-        # NULL filter — now neutralized by rank arithmetic inside
-        # _ranked_window) specializes each repartition subtree, so
-        # exchange reuse NEVER fires (verified: 3 full lineitem
-        # scans+shuffles in q_agg_percentile's final plan).  Same
-        # MEMORY_AND_DISK + caller-release discipline as the range
-        # shape's layout pin below and the dedup kept-index.
-        from ..caching import persist_tracked
-
-        base = persist_tracked(
-            df.select(*keys, *by_col).repartition(*keys)
-        )
-        out = base.select(*keys).distinct()
-    else:
-        base = df
-        out = df.select(*keys).distinct()
+    # r14 (guide §2.4): ONE key-hash repartition of the measure table,
+    # PINNED, shared by the group list and EVERY per-column window
+    # sort — each window requires hash(keys) distribution and its value
+    # sort sits above the cache.  Without the pin the n+1 consumers
+    # each re-plan their own scan+shuffle: per-consumer column pruning
+    # specializes each repartition subtree, so exchange reuse NEVER
+    # fires (verified: 3 full lineitem scans+shuffles in
+    # q_agg_percentile's final plan).  Callers free the pin through
+    # the engine's per-query ``release_tracked`` discipline.
+    base = persist_tracked(df.select(*keys, *by_col).repartition(*keys))
+    out = base.select(*keys).distinct()
     for col, col_targets in by_col.items():
-        if shape == "range":
-            vals = base.select(*keys, col).where(F.col(col).isNotNull())
-            ranked = _ranked_range(vals, keys, col)
-        else:
-            ranked = _ranked_window(base.select(*keys, col), keys, col)
+        ranked = _ranked_window(base.select(*keys, col), keys, col)
         pos = {
             a: (F.col("__n") - F.lit(1)).cast("double") * F.lit(p)
             for a, p in col_targets
@@ -244,7 +118,7 @@ def exact_group_percentiles(
                 F.max(pos[a] - F.floor(pos[a])).alias(f"__{a}_frac"),
             ]
         interp = ranked.where(keep).groupBy(*keys).agg(*aggs)
-        # left join: a group whose measure is entirely NULL has no
+        # left join: a group whose measure is entirely NULL can keep no
         # ranked rows — it stays in the output with NULL targets,
         # matching quantile_cont over an all-NULL group
         out = out.join(

@@ -119,11 +119,9 @@ def top_k_per_group(
     order_cols: Sequence[Column],
     k: int,
     rank_col: str = "rnk",
-    method: str = "row_number",
 ) -> DataFrame:
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    rank_fn = {"row_number": F.row_number, "rank": F.rank, "dense_rank": F.dense_rank}[method]
     return (
-        df.withColumn(rank_col, rank_fn().over(w))
+        df.withColumn(rank_col, F.row_number().over(w))
         .where(F.col(rank_col) <= k)
     )

@@ -3,7 +3,7 @@
 One module per operator family from SURVEY.md §2B.
 """
 
-from ..registry import REGISTRY, Query, queries_by_tag  # noqa: F401
+from ..registry import REGISTRY, Query  # noqa: F401
 
 from . import (  # noqa: F401,E402
     scans,
@@ -65,4 +65,4 @@ from . import (  # noqa: F401,E402
     tpch_q5,
 )
 
-__all__ = ["REGISTRY", "Query", "queries_by_tag"]
+__all__ = ["REGISTRY", "Query"]

@@ -67,12 +67,12 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``|score| > 3`` flag as anomalies.  ``mad_score`` is NULL when the
     MAD degenerates to 0 (constant series) — both engines agree.
 
-    PLAN NOTE (r14): both exact-median passes changed plan through the
-    shared percentile operator's r14 rework (shared pinned key-shuffle,
-    rank-arithmetic NULL handling — commit 2dbbea3) without this
-    module's content changing; this note invalidates the recorded stamp
-    so the r14 window re-certifies the current plan (r11 blind-spot
-    precedent)."""
+    PLAN NOTE: both passes run the percentile operator's one window
+    kernel.  The MAD pass's input (a cross join with the broadcast
+    median) carries a Catalyst size estimate of ~6 GB on a 30-row frame
+    at sf0.01, which used to select the operator's range shape at sf0.01
+    and above; this note invalidates the recorded stamp so the window
+    re-certifies the current plan (r11 blind-spot precedent)."""
     ev = load_table(spark, sf_dir, "events")
     # The daily series feeds THREE consumers (median pass, MAD pass,
     # final scoring); without a persist each one re-aggregates the fact

@@ -230,11 +230,11 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus keeps the identical prior rows).  No shuffle at all: the
     plan is scan → project → filter, fully pushdown-friendly at 100 TB.
     """
+    # local import: sampling registers after this module (registry order)
+    from .sampling import hash_bucket
+
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    ).cast("int")
+    bucket = hash_bucket(F.col("doc_id"), 100).cast("int")
     rate = F.when(F.col("lang") == "en", 10).otherwise(50)
     return (
         d.select("doc_id", "lang", "source", "n_chars", bucket.alias("bucket"))

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import register
+from .sampling import hash_rank_key
 
 _SEED = 42       # epoch seed: reshuffling an epoch = bumping this
 _SHARDS = 8      # contiguous output shards (thousands in production)
@@ -50,13 +51,7 @@ def shuffle_key(seed: int, col: Column) -> Column:
     """Seeded 32-bit shuffle key for a row: first 8 hex chars of
     sha256(seed ':' key) as bigint — the q_sample_hash formula with the
     seed prefixed, so distinct seeds give independent permutations."""
-    return F.conv(
-        F.substring(
-            F.sha2(F.concat(F.lit(f"{seed}:"), col.cast("string")), 256), 1, 8
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    return hash_rank_key(F.concat(F.lit(f"{seed}:"), col.cast("string")))
 
 
 def _shuffle_sql(seed: int, key: str = "doc_id") -> str:

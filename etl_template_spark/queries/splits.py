@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..registry import register
+from .sampling import hash_bucket
 
 _TRAIN_PCT = 80  # buckets [0, 80) → train
 _VAL_PCT = 10  # buckets [80, 90) → val; rest → test
@@ -53,16 +54,6 @@ _VAL_PCT = 10  # buckets [80, 90) → val; rest → test
 # target document counts per language for the mixture (integer targets,
 # not float shares — no floor(share*budget) float edge to reason about)
 _MIX_TARGETS: dict[str, int] = {"en": 120, "de": 45, "es": 45, "fr": 45, "zh": 45}
-
-
-def _hash_bucket():
-    """sha2(doc_id) first 8 hex digits as int % 100 — the engine's
-    deterministic bucket (identical in the oracle via sha256/substr)."""
-    return (
-        F.conv(F.substring(F.sha2(F.col("doc_id").cast("string"), 256), 1, 8), 16, 10)
-        .cast("bigint")
-        % 100
-    ).cast("int")
 
 
 @register(
@@ -97,7 +88,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps, and corpus appends (new docs land in splits; old docs never
     move)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = _hash_bucket()
+    bucket = hash_bucket(F.col("doc_id"), 100).cast("int")
     split = (
         F.when(bucket < _TRAIN_PCT, "train")
         .when(bucket < _TRAIN_PCT + _VAL_PCT, "val")

@@ -54,6 +54,3 @@ def register(
 
     return deco
 
-
-def queries_by_tag(tag: str) -> list[Query]:
-    return [q for q in REGISTRY.values() if tag in q.tags]

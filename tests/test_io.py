@@ -570,6 +570,27 @@ def test_register_versioned_table_quotes_non_identifier_names(
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
 
 
+def test_register_versioned_table_refuses_uncommitted_claim(spark, tmp_path):
+    """A claimed version directory that already holds data files but no
+    ``_SUCCESS`` (a writer mid-commit, or a crash remnant) is invisible
+    to readers; registering it would publish stats on rows no reader
+    can see, so the registration must refuse and leave no table."""
+    import shutil
+
+    from etl_template_spark.io import register_versioned_table, write_versioned
+
+    root = str(tmp_path / "out")
+    write_versioned(spark.range(3).selectExpr("id"), root, "s")
+    claim = os.path.join(root, "s", "v=2")
+    shutil.copytree(os.path.join(root, "s", "v=1"), claim)
+    os.remove(os.path.join(claim, "_SUCCESS"))
+    assert any(f.endswith(".parquet") for f in os.listdir(claim))
+    spark.sql("DROP TABLE IF EXISTS s_v2")
+    with pytest.raises(FileNotFoundError, match="v=2"):
+        register_versioned_table(spark, root, "s", version=2)
+    assert not spark.catalog.tableExists("s_v2")
+
+
 def test_load_table_events_handles_both_timestamp_generations(spark, tmp_path):
     """Driver fixtures have shipped events.ts as TIMESTAMP(NANOS) (r1-3)
     and TIMESTAMP(MICROS) (r4+).  A micros file loads as TIMESTAMP_NTZ

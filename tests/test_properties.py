@@ -1046,39 +1046,3 @@ def test_stage_pin_roundtrips_rows_and_types(spark, tmp_path_factory, rows):
         ]
     finally:
         release()
-
-
-def test_exact_group_percentiles_range_path_identical(spark, monkeypatch):
-    """The scale shape (range-partitioned rank selection, chosen above
-    SPARK_GRAFT_PERCENTILE_RANGE_MIN_BYTES) must return exactly the
-    window shape's rows — including duplicate-value tie blocks that
-    span range-partition boundaries, the multi-keys-per-partition
-    offset arithmetic, and NULL semantics (r13 optimization)."""
-    from etl_template_spark.caching import release_tracked
-    from etl_template_spark.operators import percentiles
-
-    rows = (
-        [("a", float(v % 7)) for v in range(500)]      # heavy ties
-        + [("b", float(v)) for v in range(333)]        # distinct run
-        + [("c", 1.0)]                                 # n=1 group
-        + [("d", None), ("a", None), (None, 9.9)]      # null semantics
-    )
-    df = spark.createDataFrame(rows, "g string, x double")
-    targets = [("p0", "x", 0.0), ("p37", "x", 0.37), ("p50", "x", 0.5),
-               ("p99", "x", 0.99), ("p100", "x", 1.0)]
-
-    def run():
-        out = sorted(
-            tuple(r) for r in percentiles.exact_group_percentiles(
-                df, "g", targets
-            ).collect()
-        )
-        release_tracked()
-        return out
-
-    monkeypatch.setenv(percentiles._RANGE_MIN_BYTES_ENV, str(1 << 62))
-    window_rows = run()
-    monkeypatch.setenv(percentiles._RANGE_MIN_BYTES_ENV, "0")
-    range_rows = run()
-    assert range_rows == window_rows
-    assert {r[0] for r in window_rows} == {"a", "b", "c", "d"}

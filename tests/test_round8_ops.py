@@ -50,6 +50,7 @@ def test_split_assignment_stable_under_append(spark, monkeypatch):
     """The leakage guarantee: a document's split is a pure function of
     its id, so appending new docs must not move ANY existing doc."""
     import etl_template_spark.queries.splits as sp
+    from etl_template_spark.queries.sampling import hash_bucket
 
     def docs(n):
         return spark.createDataFrame(
@@ -57,7 +58,7 @@ def test_split_assignment_stable_under_append(spark, monkeypatch):
             "doc_id long, text string, lang string, source string, n_chars long",
         )
 
-    bucket = sp._hash_bucket()
+    bucket = hash_bucket(F.col("doc_id"), 100).cast("int")
 
     def assign(df):
         split = (
