@@ -1,4 +1,26 @@
-"""Persist lifecycle discipline.
+"""Persist lifecycle discipline, and the engine's two pins.
+
+The engine pins intermediate data in exactly two ways:
+
+- ``persist_tracked`` (below) is for RECOMPUTABLE reuse: two consumers
+  of one plan share a frame, and a lost or evicted block is simply
+  recomputed from its lineage.  It is released per step or per query
+  by ``release_tracked``.
+- ``localCheckpoint(eager=True)`` is for a SNAPSHOT taken before a
+  write to the store the frame's plan reads — e.g. an ingest delta
+  anti-joined against the versioned log it is about to append to,
+  which then feeds an emptiness probe, the write and a count.  The
+  snapshot runs the log-sized plan once and cuts the lineage, so
+  nothing after it re-reads the log: a lost block fails the job
+  loudly instead of recomputing against log versions that a later
+  compaction may have folded away.  (A merged read lists its versions
+  when it is built, so a recompute would not see the new version; the
+  pin buys one execution and independence from the log's later
+  state.)  There is no release handle: Spark's context cleaner drops
+  the blocks once the frame is unreachable.  The ingests are
+  redelivery-idempotent, so re-running a failed job is the recovery.
+  The same mechanism truncates the lineage of the iterative PageRank
+  and connected-components rounds.
 
 Several query builders persist shared intermediates (shingle tables,
 MinHash signatures, PQ codebooks) because two downstream branches of the
@@ -26,9 +48,11 @@ handle does NOT unpersist the JVM blocks, so holding the handle until
 Scope: the registry is one PROCESS-GLOBAL list with no thread scoping.
 That is sound because every caller builds, materializes and releases on
 one thread (bench loop, correctness harness, ``Pipeline.run``'s steps)
-and the package has no concurrent caller.  Concurrent builders sharing
-the process would release each other's intermediates — harmless for
-correctness (lazy plans recompute) but a silent performance cliff.
+and the package has no concurrent caller: it starts no threads, and
+``tests/test_plans.py::test_package_starts_no_threads`` keeps it so.
+Concurrent builders sharing the process would release each other's
+intermediates — harmless for correctness (lazy plans recompute) but a
+silent performance cliff.
 """
 
 from __future__ import annotations

@@ -61,7 +61,6 @@ from ..io import (
     load_table,
     prune_versions,
     read_versioned_merged,
-    stage_pin,
     write_versioned,
 )
 from ..operators.cluster import connected_components_incremental
@@ -100,62 +99,48 @@ def night_pairs(
     store's commit protocol: no crash can leave shingles without their
     signature (or vice versa) for a redelivery to double-index.  Same
     design as the incremental BM25 index's length-sentinel rows."""
-    release = None
     if latest_version(data_root, f"{STEP}_index") is not None:
         seen = read_versioned_merged(
             spark, data_root, f"{STEP}_index"
         ).select("doc_id").distinct()
-        # stage_pin (r10 review; durable per the r10 VERDICT): the
-        # anti-join scans the FULL merged index, and new_docs feeds
-        # three consumers (the shingle explode, the LSH probe below,
-        # and — through sh_new/sig_new — the isEmpty probe plus the
-        # versioned write); without the materialization each one
-        # re-runs the index-sized anti-join.  The pin is night-sized
-        # by contract and lives on the job's own data_root, so an
-        # executor loss mid-night degrades to re-reading the staged
-        # file.  Both return paths below materialize eagerly
-        # (localCheckpoint), so releasing in finally is safe.
-        new_docs, release = stage_pin(
-            new_docs.join(seen, "doc_id", "left_anti"),
-            data_root,
-            f"{STEP}_index",
+        # pin the anti-joined night (ingest snapshot, see the caching
+        # module docstring): the anti-join scans the FULL merged index,
+        # and new_docs feeds three consumers (the shingle explode, the
+        # LSH probe below, and — through sh_new/sig_new — the isEmpty
+        # probe plus the versioned write); without the materialization
+        # each one re-runs the index-sized anti-join.
+        new_docs = new_docs.join(seen, "doc_id", "left_anti").localCheckpoint(
+            eager=True
         )
-    try:
-        sh_new = new_docs.select(
-            "doc_id", F.explode(shingles_col("text", 3)).alias("s")
-        ).distinct()
-        sig_new = minhash_signature(sh_new)
-        if sig_new.isEmpty():  # fully-redelivered night: nothing to index
-            return sig_new.select(
-                F.col("doc_id").alias("d1"),
-                F.col("doc_id").alias("d2"),
-                F.lit(1.0).alias("jaccard"),
-            ).limit(0).localCheckpoint()
-        write_versioned(
-            sh_new.unionByName(sig_new, allowMissingColumns=True),
-            data_root,
-            f"{STEP}_index",
-        )
-        merged = read_versioned_merged(spark, data_root, f"{STEP}_index").drop(
-            "_version"
-        )
-        all_sh = merged.where(F.col("s").isNotNull()).select("doc_id", "s")
-        all_sig = merged.where(F.col("s").isNull()).drop("s")
-        candidates = lsh_candidate_pairs(
-            all_sig, probe=all_sig.join(new_docs.select("doc_id"), "doc_id")
-        )
-        # localCheckpoint the verified pairs: run() probes isEmpty and
-        # the CC fold consumes them — two executions of the whole LSH +
-        # exact-Jaccard pipeline without it.  Pair count is night-
-        # bounded, and the eager materialization doubles as the last
-        # read of the pinned frame (a compute-result pin, not an ingest
-        # delta, so the durable stage_pin discipline does not apply).
-        return verified_jaccard(
-            candidates, all_sh, THRESHOLD, sizes=all_sig.select("doc_id", "n_sh")
-        ).localCheckpoint()
-    finally:
-        if release is not None:
-            release()
+    sh_new = new_docs.select(
+        "doc_id", F.explode(shingles_col("text", 3)).alias("s")
+    ).distinct()
+    sig_new = minhash_signature(sh_new)
+    if sig_new.isEmpty():  # fully-redelivered night: nothing to index
+        return sig_new.select(
+            F.col("doc_id").alias("d1"),
+            F.col("doc_id").alias("d2"),
+            F.lit(1.0).alias("jaccard"),
+        ).limit(0).localCheckpoint()
+    write_versioned(
+        sh_new.unionByName(sig_new, allowMissingColumns=True),
+        data_root,
+        f"{STEP}_index",
+    )
+    merged = read_versioned_merged(spark, data_root, f"{STEP}_index").drop(
+        "_version"
+    )
+    all_sh = merged.where(F.col("s").isNotNull()).select("doc_id", "s")
+    all_sig = merged.where(F.col("s").isNull()).drop("s")
+    candidates = lsh_candidate_pairs(
+        all_sig, probe=all_sig.join(new_docs.select("doc_id"), "doc_id")
+    )
+    # localCheckpoint the verified pairs: run() probes isEmpty and the
+    # CC fold consumes them — two executions of the whole LSH +
+    # exact-Jaccard pipeline without it.  Pair count is night-bounded.
+    return verified_jaccard(
+        candidates, all_sh, THRESHOLD, sizes=all_sig.select("doc_id", "n_sh")
+    ).localCheckpoint()
 
 
 def run(data_root: str | None = None, sf_dir: str = SF_DIR):

@@ -726,10 +726,9 @@ def read_versioned_merged(
 def _tree_is_stale(top: str, now: float, grace: float) -> bool:
     """True when EVERY mtime under ``top`` (the directory entry itself,
     nested subdirectories, and files) is at least ``grace`` seconds
-    old — the shared liveness oracle for the two scratch sweeps in
-    :func:`prune_versions` (uncommitted ``v=N`` claims and stage_pin's
-    ``_pin-*`` dirs).  Tree-wide max, not the top dir's own mtime:
-    Spark streams task output into nested ``_temporary/`` subtrees
+    old — the liveness oracle for :func:`prune_versions`'s sweep of
+    uncommitted ``v=N`` claims.  Tree-wide max, not the top dir's own
+    mtime: Spark streams task output into nested ``_temporary/`` subtrees
     whose writes never touch the top-level directory entry (r9
     ADVICE).  One fresh-enough mtime already proves the tree alive, so
     the walk stops statting there — a live writer's tree can hold a
@@ -832,25 +831,6 @@ def prune_versions(
             doomed.append(n)
     for n in sorted(set(doomed)):
         shutil.rmtree(os.path.join(step_dir, f"v={n}"), ignore_errors=True)
-    # _pin-* ingest scratch (io.stage_pin): released by the ingest on
-    # every non-crash path, so one still present is either a crash
-    # leftover or a LIVE ingest between its pin and its versioned
-    # write — the same ambiguity as an uncommitted claim, resolved by
-    # the same staleness walk.  A live pin stays provably alive here
-    # no matter how long the ingest runs: stage_pin's heartbeat
-    # thread (r11 ADVICE) touches _HEARTBEAT inside the pin dir every
-    # 60 s by default, so only process death lets the tree age past
-    # the grace period.
-    try:
-        pin_names = [
-            p for p in os.listdir(step_dir) if p.startswith("_pin-")
-        ]
-    except OSError:
-        pin_names = []
-    for name in pin_names:
-        pin_dir = os.path.join(step_dir, name)
-        if _tree_is_stale(pin_dir, now, min_claim_age):
-            shutil.rmtree(pin_dir, ignore_errors=True)
     # _inflight-{batch_id}-* scratch (the streaming sink's staging dirs;
     # see streaming/jobs.py::commit_stream_batch) is swept ONLY when a
     # committed version's _BATCH_ID marker proves that batch already
@@ -948,149 +928,6 @@ def _fold_and_prune(
     return len(
         prune_versions(root, step, keep_last=1, min_claim_age=min_claim_age)
     )
-
-
-def stage_pin(
-    df: DataFrame, root: str, step: str, heartbeat_interval: float = 60.0
-) -> tuple[DataFrame, Callable[[], None]]:
-    """Durably materialize ``df`` under the step's storage root and
-    return ``(pinned_frame, release)``.
-
-    The fault-tolerant sibling of ``localCheckpoint()`` for INGEST
-    paths (r10 VERDICT): a local checkpoint pins the frame in
-    executor-LOCAL shuffle blocks, so losing one executor mid-ingest
-    fails the whole job — recoverable only by re-running it (safe
-    here because the incremental ingests are redelivery-idempotent,
-    but an availability cliff at 1000-executor scale, where some
-    executor loss per long job is the norm).  A staged parquet write
-    under the same storage root keeps the pin on DURABLE storage
-    instead: the pinned plan is a plain scan, so an executor loss
-    degrades to re-reading a file.  The price is one write+read of a
-    delta-sized frame through the job's own filesystem — the same
-    cost class as the versioned write the ingest is about to do
-    anyway (A/B-measured r11 on the BM25 redelivery ingest at sf0.1,
-    1000-doc delta: 1.12 s vs 1.02 s median with localCheckpoint —
-    ~10% of the ingest for the durability).
-
-    The scratch dir (``_pin-<uuid>``) is invisible to versioned
-    readers (``list_versions`` matches ``v=N`` only).  Callers must
-    invoke ``release`` after the LAST action on the pinned frame
-    (try/finally); crash leftovers are swept by ``prune_versions``
-    once older than its claim grace period.
-
-    Liveness heartbeat (r11 ADVICE): unlike an uncommitted ``v=N``
-    claim — whose live writer keeps streaming files into the tree —
-    a pin's tree goes mtime-quiescent the moment its one parquet
-    write finishes (READS never update mtime), so a live ingest whose
-    remaining work (isEmpty probe, versioned write, LSH/Jaccard
-    verification) outlasts the sweep grace period would be
-    indistinguishable from a crash leftover, and a concurrent
-    ``prune_versions``/``compact_merged_log`` would delete the pin
-    mid-job — failing exactly the long jobs the pin exists to
-    protect.  A daemon thread therefore touches ``_HEARTBEAT`` inside
-    the pin dir every ``heartbeat_interval`` seconds (default 60 s,
-    far inside the 3600 s default grace) until ``release``: the
-    sweep's tree-max-mtime walk then proves the pin alive for as long
-    as the owning PROCESS lives, while a crash kills the thread with
-    the process and the tree goes stale on schedule.  The underscore
-    prefix keeps the marker invisible to the parquet reader (Spark
-    file listings skip ``_``/``.`` paths).  Deployments that sweep
-    with a custom ``min_claim_age`` need it a few MULTIPLES of the
-    heartbeat interval (>= 3x is a sound floor: one swallowed touch —
-    the OSError branch deliberately waits out a full interval — plus
-    scheduling delay can stretch the gap between successful beats to
-    ~2 intervals), rather than above total ingest duration as before
-    the heartbeat."""
-    import threading
-    import uuid
-
-    spark = df.sparkSession
-    pin_dir = os.path.join(_step_dir(root, step), f"_pin-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(pin_dir)
-    hb_path = os.path.join(pin_dir, "_HEARTBEAT")
-    hb_stop = threading.Event()
-
-    def _beat() -> None:
-        while not hb_stop.wait(heartbeat_interval):
-            try:
-                with open(hb_path, "a"):
-                    pass
-                os.utime(hb_path, None)
-            except FileNotFoundError:
-                # ENOENT usually means the pin was swept/released — but
-                # on a network filesystem it can also be a TRANSIENT
-                # blip (attribute-cache miss, brief unmount) while the
-                # dir still exists (r12 ADVICE).  Exiting on a transient
-                # would silently kill the heartbeat for a still-live
-                # pin, which then ages past the grace period and gets
-                # swept mid-job — the exact failure the heartbeat
-                # prevents.  Confirm the dir is really gone before
-                # giving up; otherwise retry like the OSError branch.
-                if hb_stop.is_set() or not os.path.isdir(pin_dir):
-                    break  # pin dir really swept/released
-                continue
-            except OSError:
-                pass  # transient (e.g. NFS hiccup): keep trying, the
-                # next successful touch restores liveness
-
-    hb_thread = threading.Thread(
-        target=_beat, daemon=True, name=f"stage-pin-heartbeat-{step}"
-    )
-    hb_thread.start()
-
-    def release() -> None:
-        # stop the heartbeat BEFORE removing the tree: a touch racing
-        # rmtree could otherwise re-create _HEARTBEAT inside a
-        # half-emptied dir, leaving a husk for the stale sweep.  The
-        # join is bounded — a wedged touch (pathological filesystem)
-        # only risks that same husk.
-        hb_stop.set()
-        hb_thread.join(timeout=5.0)
-        shutil.rmtree(pin_dir, ignore_errors=True)
-        if hb_thread.is_alive():
-            # the touch wedged past the join bound (r12 ADVICE): its
-            # eventual completion can re-create _HEARTBEAT in the
-            # half-emptied dir, and the husk — freshly touched —
-            # survives at least one more full grace window before
-            # prune_versions reclaims it.  A daemon finalizer waits
-            # out the wedge and re-removes the husk the moment the
-            # thread actually exits, so release() stays non-blocking
-            # while the husk's lifetime shrinks from a grace period
-            # to the wedge duration.
-            def _finalize() -> None:
-                hb_thread.join()
-                shutil.rmtree(pin_dir, ignore_errors=True)
-
-            threading.Thread(
-                target=_finalize,
-                daemon=True,
-                name=f"stage-pin-finalizer-{step}",
-            ).start()
-
-    try:
-        # declared schema, not parquet inference — DEFENSIVE (probed
-        # r11): today's writer emits a schema-bearing part file even
-        # for plan-empty results, so inference would work, but the
-        # declared schema keeps the pin readable if that ever changes
-        # and pins the exact TYPES.  Nullability is NOT preserved
-        # either way: file sources force every column nullable
-        # regardless of the declared schema, so the pinned frame's
-        # columns are nullable — names and types exact, a documented
-        # relaxation the ingest call sites tolerate (parquet sinks
-        # ignore nullability).
-        pinned = spark.read.schema(df.schema).parquet(pin_dir)
-    except BaseException:
-        # a failure between thread start and handing the caller its
-        # release handle (r12 review): without this, the orphan
-        # heartbeat keeps the dead pin "provably alive" for the whole
-        # driver lifetime — each retried stage_pin would accumulate a
-        # delta-sized parquet copy NO sweep can ever reclaim, a
-        # regression vs pre-heartbeat behavior where failed pins
-        # simply aged out.
-        release()
-        raise
-
-    return pinned, release
 
 
 def process_scratch_root(prefix: str, sf_dir: str) -> str:

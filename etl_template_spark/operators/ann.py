@@ -110,7 +110,6 @@ def ivf_index_incremental(
         latest_version,
         read_versioned,
         read_versioned_merged,
-        stage_pin,
         write_versioned,
     )
 
@@ -171,21 +170,14 @@ def ivf_index_incremental(
             seen = read_versioned_merged(spark, root, cells_step).select("vec_id")
             d = d.join(seen, "vec_id", "left_anti")
         centroids = read_versioned(spark, root, cent_step)
-        # stage_pin before the emptiness probe (r10 review; durable per
-        # the r10 VERDICT — see io.stage_pin): the assignment plan
-        # embeds the anti-join against the FULL merged cell log plus
-        # the broadcast-centroid argmax, and isEmpty + write_versioned
-        # would otherwise execute it twice.  The pin is delta-sized by
-        # contract and on the index's own storage root, so an executor
-        # loss mid-ingest degrades to re-reading the staged file.
-        assigned, release = stage_pin(
-            _assign_cells(d, centroids), root, cells_step
-        )
-        try:
-            if not assigned.isEmpty():
-                write_versioned(assigned, root, cells_step)
-        finally:
-            release()
+        # pin before the emptiness probe (ingest snapshot, see the
+        # caching module docstring): the assignment plan embeds the
+        # anti-join against the FULL merged cell log plus the
+        # broadcast-centroid argmax, and isEmpty + write_versioned
+        # would otherwise execute it twice.
+        assigned = _assign_cells(d, centroids).localCheckpoint(eager=True)
+        if not assigned.isEmpty():
+            write_versioned(assigned, root, cells_step)
     version = latest_version(root, cells_step)
     merged = read_versioned_merged(spark, root, cells_step).drop("_version")
     return merged, version

@@ -79,7 +79,6 @@ def search_index_incremental(
     from ..io import (
         latest_version,
         read_versioned_merged,
-        stage_pin,
         write_versioned,
     )
 
@@ -99,46 +98,36 @@ def search_index_incremental(
                 "call must supply a non-empty delta_docs frame"
             )
         return 0, latest_version(root, post_step)
-    release = None
     if have:
         seen = read_versioned_merged(spark, root, post_step).select(
             "doc_id"
         ).distinct()
-        # stage_pin the anti-joined delta (r10 review; durable per the
-        # r10 VERDICT — see io.stage_pin): the plan embeds a scan of
-        # the FULL merged postings log (corpus-sized), and without
-        # materialization it would execute three times — isEmpty here,
-        # the versioned write, and the returned count.  The pin is
-        # delta-sized by contract and lives on the index's own storage
-        # root, so an executor loss mid-ingest degrades to re-reading
-        # the staged file instead of failing the job.
-        d, release = stage_pin(
-            d.join(seen, "doc_id", "left_anti"), root, post_step
-        )
-    try:
-        if release is not None and d.isEmpty():
+        # pin the anti-joined delta (ingest snapshot, see the caching
+        # module docstring): the plan embeds a scan of the FULL merged
+        # postings log (corpus-sized), and without materialization it
+        # would execute three times — isEmpty here, the versioned
+        # write, and the returned count.
+        d = d.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
+        if d.isEmpty():
             return 0, latest_version(root, post_step)
-        tok = d.select("doc_id", F.explode(_tokens("text")).alias("term"))
-        post = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        # the per-doc LENGTH row (term=NULL, tf=dl), dl=0 docs included
-        length = (
-            d.select("doc_id")
-            .join(
-                tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.lit(None).cast("string").alias("term"),
-                F.coalesce("dl", F.lit(0)).alias("tf"),
-            )
+    tok = d.select("doc_id", F.explode(_tokens("text")).alias("term"))
+    post = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    # the per-doc LENGTH row (term=NULL, tf=dl), dl=0 docs included
+    length = (
+        d.select("doc_id")
+        .join(
+            tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")),
+            "doc_id",
+            "left",
         )
-        version, _ = write_versioned(post.unionByName(length), root, post_step)
-        return d.count(), version
-    finally:
-        if release is not None:
-            release()
+        .select(
+            "doc_id",
+            F.lit(None).cast("string").alias("term"),
+            F.coalesce("dl", F.lit(0)).alias("tf"),
+        )
+    )
+    version, _ = write_versioned(post.unionByName(length), root, post_step)
+    return d.count(), version
 
 
 def bm25_search(

@@ -1085,353 +1085,3 @@ def test_prune_grace_uses_tree_mtime(spark, tmp_path):
     os.utime(leaf, (stale, stale))
     assert n in prune_versions(root, "s", keep_last=5)
     assert not os.path.isdir(slow_dir)
-
-
-def test_stage_pin_roundtrip_and_release(spark, tmp_path):
-    """io.stage_pin (r10 VERDICT): the durable sibling of
-    localCheckpoint() for ingest paths — the pinned frame reads back
-    bit-identical as a plain parquet scan, the scratch dir is invisible
-    to versioned readers, and release() removes it."""
-    from etl_template_spark.io import list_versions, stage_pin, write_versioned
-
-    root = str(tmp_path)
-    write_versioned(spark.createDataFrame([("1", "a")], SCHEMA), root, "s")
-    df = spark.createDataFrame([("2", "b"), ("3", "c")], SCHEMA)
-    pinned, release = stage_pin(df, root, "s")
-    assert sorted(map(tuple, pinned.collect())) == [("2", "b"), ("3", "c")]
-    assert pinned.schema == df.schema
-    # pin dir exists under the step dir but versioned readers don't see it
-    pins = [p for p in os.listdir(os.path.join(root, "s")) if p.startswith("_pin-")]
-    assert len(pins) == 1
-    assert list_versions(root, "s") == [1]
-    release()
-    assert not os.path.isdir(os.path.join(root, "s", pins[0]))
-
-
-def test_stage_pin_empty_frame_keeps_schema(spark, tmp_path):
-    """The pin reads back with the DECLARED schema (names and types
-    exact — an empty delta must survive the ingest's isEmpty probe
-    regardless of what the writer emitted), with the one documented
-    relaxation: file sources force every column nullable, so a
-    nullable=False input comes back nullable=True (probed r11 — a
-    declared read schema does NOT override file-source nullability)."""
-    from pyspark.sql import functions as F
-
-    from etl_template_spark.io import stage_pin
-
-    df = spark.createDataFrame([], SCHEMA)
-    pinned, release = stage_pin(df, str(tmp_path), "s")
-    try:
-        assert pinned.isEmpty()
-        assert pinned.schema == df.schema
-    finally:
-        release()
-
-    nn = spark.range(3).select(F.col("id"))  # id is nullable=False
-    assert not nn.schema["id"].nullable
-    pinned, release = stage_pin(nn, str(tmp_path), "s")
-    try:
-        assert [(f.name, f.dataType) for f in pinned.schema.fields] == [
-            (f.name, f.dataType) for f in nn.schema.fields
-        ]
-        assert pinned.schema["id"].nullable  # the documented relaxation
-        assert sorted(r.id for r in pinned.collect()) == [0, 1, 2]
-    finally:
-        release()
-
-
-def test_prune_versions_sweeps_stale_pin_scratch(spark, tmp_path):
-    """A _pin-* scratch dir released on every non-crash path is, when
-    still present, either a crash leftover or a live ingest — the sweep
-    reclaims it only past the claim grace period, keyed off the
-    tree-wide max mtime (same discipline as uncommitted claims)."""
-    from etl_template_spark.io import prune_versions, stage_pin, write_versioned
-
-    root = str(tmp_path)
-    write_versioned(spark.createDataFrame([("1", "a")], SCHEMA), root, "s")
-    # effectively-infinite heartbeat (r12 review): this test simulates
-    # a CRASH leftover by aging mtimes, so the pin's own live beat must
-    # never land mid-test and re-freshen the tree (with the default
-    # 60 s interval a paused/slow CI host could flake the final
-    # reclaimed assertion)
-    pinned, _release = stage_pin(
-        spark.createDataFrame([("2", "b")], SCHEMA), root, "s",
-        heartbeat_interval=1e9,
-    )
-    pin_dir = os.path.join(
-        root, "s",
-        [p for p in os.listdir(os.path.join(root, "s")) if p.startswith("_pin-")][0],
-    )
-    # fresh pin (simulating a live ingest): spared
-    prune_versions(root, "s", keep_last=5)
-    assert os.path.isdir(pin_dir)
-    # a stale top dir with ONE fresh leaf is still alive (tree max)
-    stale = time.time() - 7200
-    leaves = [
-        os.path.join(d, f)
-        for d, _s, fs in os.walk(pin_dir)
-        for f in fs
-    ]
-    os.utime(pin_dir, (stale, stale))
-    for leaf in leaves[1:]:
-        os.utime(leaf, (stale, stale))
-    prune_versions(root, "s", keep_last=5)
-    assert os.path.isdir(pin_dir)
-    # whole tree stale: reclaimed
-    for d, _s, fs in os.walk(pin_dir):
-        os.utime(d, (stale, stale))
-        for f in fs:
-            os.utime(os.path.join(d, f), (stale, stale))
-    prune_versions(root, "s", keep_last=5)
-    assert not os.path.isdir(pin_dir)
-
-
-def test_stage_pin_cleans_up_when_read_fails(spark, tmp_path, monkeypatch):
-    """r12 review: a failure between heartbeat start and handing the
-    caller its release handle (e.g. the read-back raising) must stop
-    the beat and remove the pin dir before re-raising — an orphan
-    heartbeat would otherwise keep the dead pin 'provably alive' for
-    the whole driver lifetime, unreclaimable by ANY sweep: each retry
-    of the failed ingest would leak a delta-sized parquet copy."""
-    import threading
-
-    import pytest
-    from pyspark.sql.readwriter import DataFrameReader
-
-    from etl_template_spark.io import stage_pin
-
-    def boom(self, *a, **k):
-        raise RuntimeError("injected read failure")
-
-    monkeypatch.setattr(DataFrameReader, "parquet", boom)
-    hb_names = lambda: {  # noqa: E731
-        t.name for t in threading.enumerate()
-        if t.name.startswith("stage-pin-heartbeat-") and t.is_alive()
-    }
-    before = hb_names()
-    with pytest.raises(RuntimeError, match="injected read failure"):
-        stage_pin(
-            spark.createDataFrame([("2", "b")], SCHEMA), str(tmp_path), "s",
-            heartbeat_interval=0.2,
-        )
-    step_dir = os.path.join(str(tmp_path), "s")
-    leftovers = [
-        p for p in (os.listdir(step_dir) if os.path.isdir(step_dir) else [])
-        if p.startswith("_pin-")
-    ]
-    assert leftovers == [], "failed stage_pin left its scratch behind"
-    deadline = time.time() + 10
-    while hb_names() - before and time.time() < deadline:
-        time.sleep(0.05)
-    assert hb_names() - before == set(), "orphan heartbeat thread leaked"
-
-
-def test_stage_pin_survives_concurrent_prune_loop(spark, tmp_path):
-    """The r11 ADVICE scenario end-to-end, with REAL concurrency: a
-    slow ingest (pin taken, then several grace periods of 'work'
-    before its versioned write) races a retention sweeper that prunes
-    with a min_claim_age several times SHORTER than the ingest.
-    Before the heartbeat this deterministic schedule deleted the pin
-    mid-job; with it, the pin must stay readable through every sweep
-    and the ingest's closing write must succeed."""
-    import threading
-
-    from etl_template_spark.io import (
-        prune_versions, read_versioned, stage_pin, write_versioned,
-    )
-
-    root = str(tmp_path)
-    write_versioned(spark.createDataFrame([("1", "a")], SCHEMA), root, "s")
-    pinned, release = stage_pin(
-        spark.createDataFrame([("2", "b")], SCHEMA), root, "s",
-        heartbeat_interval=0.2,
-    )
-    stop = threading.Event()
-    sweeps = [0]
-
-    def sweeper() -> None:
-        while not stop.is_set():
-            prune_versions(root, "s", keep_last=5, min_claim_age=2.0)
-            sweeps[0] += 1
-            time.sleep(0.2)
-
-    t = threading.Thread(target=sweeper)
-    t.start()
-    try:
-        time.sleep(4.5)  # the "long ingest": > 2x the sweep grace
-        write_versioned(pinned, root, "s")  # the closing delta write
-    finally:
-        stop.set()
-        t.join()
-        release()
-    # low floor on purpose (r12 review): nominal cadence gives ~22
-    # sweeps in the window, but this VM documents multi-second steal
-    # bursts — the assertion only guards against a schedule that never
-    # actually raced, not against a slow one
-    assert sweeps[0] >= 5, "sweeper barely ran — schedule did not race"
-    assert sorted(map(tuple, read_versioned(spark, root, "s").collect())) == [
-        ("2", "b")
-    ]
-
-
-def test_stage_pin_heartbeat_outlives_grace_period(spark, tmp_path):
-    """r11 ADVICE (medium): a pin's tree goes mtime-quiescent right
-    after its one parquet write — reads never update mtime — so a LIVE
-    ingest whose remaining work outlasts min_claim_age looked like a
-    crash leftover and a concurrent prune deleted the pin mid-job.
-    The heartbeat thread closes that hole: with every data mtime aged
-    past the grace period and the ingest still running (pin not
-    released), the sweep must spare the pin because the heartbeat
-    keeps the tree-max mtime fresh; release() stops the beat and
-    removes the dir; a crashed process (no live thread) still goes
-    stale and is reclaimed — the existing sweep test pins that side."""
-    from etl_template_spark.io import prune_versions, stage_pin, write_versioned
-
-    root = str(tmp_path)
-    write_versioned(spark.createDataFrame([("1", "a")], SCHEMA), root, "s")
-    pinned, release = stage_pin(
-        spark.createDataFrame([("2", "b")], SCHEMA), root, "s",
-        heartbeat_interval=0.2,
-    )
-    pin_dir = os.path.join(
-        root, "s",
-        [p for p in os.listdir(os.path.join(root, "s")) if p.startswith("_pin-")][0],
-    )
-    hb_path = os.path.join(pin_dir, "_HEARTBEAT")
-    # let at least one beat land, then age EVERY existing mtime far
-    # past the grace period — the simulated "long quiet ingest"
-    deadline = time.time() + 10
-    while not os.path.exists(hb_path) and time.time() < deadline:
-        time.sleep(0.05)
-    assert os.path.exists(hb_path), "heartbeat never landed"
-    stale = time.time() - 7200
-    for d, _s, fs in os.walk(pin_dir):
-        os.utime(d, (stale, stale))
-        for f in fs:
-            os.utime(os.path.join(d, f), (stale, stale))
-    # within one interval the next beat refreshes the tree; a sweep
-    # with the default 3600 s grace must then spare the live pin
-    deadline = time.time() + 10
-    while os.path.getmtime(hb_path) < time.time() - 3600 and time.time() < deadline:
-        time.sleep(0.05)
-    prune_versions(root, "s", keep_last=5)
-    assert os.path.isdir(pin_dir), "sweep reclaimed a LIVE heartbeating pin"
-    # the pinned frame is still readable after the sweep
-    assert sorted(map(tuple, pinned.collect())) == [("2", "b")]
-    # release stops the beat and removes the dir — and no late beat
-    # resurrects it.  The elapsed bound kills the drop-the-stop mutant:
-    # without hb_stop.set() the bounded join blocks its full 5 s
-    # timeout, while a stopped beat exits within one wait() tick.
-    t0 = time.time()
-    release()
-    assert time.time() - t0 < 4.0, "release() blocked on a live heartbeat"
-    assert not os.path.isdir(pin_dir)
-    time.sleep(0.5)
-    assert not os.path.isdir(pin_dir)
-
-def test_stage_pin_heartbeat_survives_transient_enoent(spark, tmp_path, monkeypatch):
-    """r12 ADVICE (low): on a network filesystem the heartbeat touch can
-    raise a TRANSIENT FileNotFoundError (attribute-cache blip, brief
-    unmount) while the pin dir still exists.  The old beat treated every
-    ENOENT as 'pin swept' and exited permanently — the still-live pin
-    then aged past min_claim_age and a concurrent sweep could reclaim it
-    mid-job, the exact failure the heartbeat exists to prevent.  The
-    beat must confirm the dir is really gone before giving up, and
-    retry otherwise (like the sibling OSError branch)."""
-    import builtins
-    import threading
-
-    import etl_template_spark.io as io_mod
-
-    flaked = threading.Event()
-
-    def flaky_open(path, mode="r", *args, **kwargs):
-        if str(path).endswith("_HEARTBEAT") and not flaked.is_set():
-            flaked.set()
-            raise FileNotFoundError(path)  # transient: the dir is intact
-        return builtins.open(path, mode, *args, **kwargs)
-
-    # shadow the builtin in the io module's globals only — the beat
-    # resolves `open` through its module before builtins
-    monkeypatch.setattr(io_mod, "open", flaky_open, raising=False)
-    pinned, release = io_mod.stage_pin(
-        spark.createDataFrame([("2", "b")], SCHEMA), str(tmp_path), "s",
-        heartbeat_interval=0.1,
-    )
-    step_dir = os.path.join(str(tmp_path), "s")
-    pin_dir = os.path.join(
-        step_dir,
-        [p for p in os.listdir(step_dir) if p.startswith("_pin-")][0],
-    )
-    hb_path = os.path.join(pin_dir, "_HEARTBEAT")
-    try:
-        # the FIRST touch flakes with ENOENT while the dir exists; the
-        # beat must retry and land the SECOND touch
-        deadline = time.time() + 10
-        while not os.path.exists(hb_path) and time.time() < deadline:
-            time.sleep(0.05)
-        assert flaked.is_set(), "the injected transient ENOENT never fired"
-        assert os.path.exists(hb_path), (
-            "heartbeat died permanently on a transient ENOENT with the "
-            "pin dir still present"
-        )
-        assert sorted(map(tuple, pinned.collect())) == [("2", "b")]
-    finally:
-        release()
-    assert not os.path.isdir(pin_dir)
-
-
-def test_stage_pin_release_finalizer_reclaims_wedged_husk(spark, tmp_path, monkeypatch):
-    """r12 ADVICE (low): release() joins the heartbeat with a 5 s bound
-    and rmtrees regardless; a touch wedged PAST that bound (pathological
-    filesystem) could replay its write afterwards, resurrecting a
-    freshly-touched husk _pin-* dir that survives at least one more full
-    grace window.  release() now leaves a daemon finalizer behind that
-    re-removes the dir the moment the wedged thread finally exits —
-    husk lifetime shrinks from a grace period to the wedge duration,
-    while release() itself stays bounded."""
-    import threading
-
-    from etl_template_spark.io import stage_pin
-
-    real_utime = os.utime
-    wedged = threading.Event()        # the touch entered the wedge
-    unwedge = threading.Event()       # the test releases the wedge
-    husk_planted = threading.Event()  # the replayed write landed
-
-    def wedging_utime(path, *args, **kwargs):
-        if str(path).endswith("_HEARTBEAT") and not wedged.is_set():
-            wedged.set()
-            unwedge.wait(timeout=30)
-            # worst case: the wedged touch's write replays AFTER
-            # release()'s rmtree, resurrecting the husk
-            os.makedirs(os.path.dirname(str(path)), exist_ok=True)
-            with open(path, "a"):
-                pass
-            husk_planted.set()
-        return real_utime(path, *args, **kwargs)
-
-    monkeypatch.setattr(os, "utime", wedging_utime)
-    pinned, release = stage_pin(
-        spark.createDataFrame([("2", "b")], SCHEMA), str(tmp_path), "s",
-        heartbeat_interval=0.1,
-    )
-    step_dir = os.path.join(str(tmp_path), "s")
-    pin_dir = os.path.join(
-        step_dir,
-        [p for p in os.listdir(step_dir) if p.startswith("_pin-")][0],
-    )
-    assert wedged.wait(timeout=10), "heartbeat touch never reached utime"
-    t0 = time.time()
-    release()  # join times out against the wedge, rmtree runs anyway
-    assert time.time() - t0 < 8.0, "release() not bounded under a wedge"
-    unwedge.set()
-    assert husk_planted.wait(timeout=10), "simulated husk replay never ran"
-    # the finalizer must reclaim the husk once the wedged thread exits
-    deadline = time.time() + 10
-    while os.path.isdir(pin_dir) and time.time() < deadline:
-        time.sleep(0.05)
-    assert not os.path.isdir(pin_dir), (
-        "wedged-touch husk survived release(); it would live another "
-        "full grace window before a sweep reclaims it"
-    )

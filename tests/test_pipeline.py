@@ -561,3 +561,25 @@ def test_incremental_dedup_example_runs(spark, sf_dir, tmp_path, monkeypatch):
     )
     assert redelivered.isEmpty()
     assert list_versions(root, "dupes_index") == [4]
+
+
+def test_incremental_dedup_night_writes_without_rescanning_its_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A later night's anti-joined documents are a snapshot (see the
+    caching module docstring): the night's versioned write reads the
+    pinned documents, never the index log that the write appends to."""
+    from etl_template_spark.examples import incremental_dedup as ex
+
+    root = str(tmp_path / "data")
+    ex.night_pairs(spark, root, ex.night_docs(spark, sf_dir, 0))
+    write_versioned, inputs = ex.write_versioned, []
+
+    def spy(df, *args, **kwargs):
+        inputs.append(df.inputFiles())
+        return write_versioned(df, *args, **kwargs)
+
+    monkeypatch.setattr(ex, "write_versioned", spy)
+    ex.night_pairs(spark, root, ex.night_docs(spark, sf_dir, 1))
+    assert len(inputs) == 1
+    assert not [f for f in inputs[0] if f"/{ex.STEP}_index/" in f], inputs[0]

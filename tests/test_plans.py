@@ -799,6 +799,24 @@ def test_shingle_queries_run_without_python_workers(spark, sf_dir, plan_nodes, n
     assert "Generate" in names  # the walk reached the shingle explode
 
 
+def _source_hits(subdirs, pattern):
+    """``path:line: text`` for every line of the package's modules under
+    ``subdirs`` (``"."`` is the whole package) that matches ``pattern``."""
+    import re
+    from pathlib import Path
+
+    import etl_template_spark
+
+    pkg = Path(etl_template_spark.__file__).parent
+    return [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for sub in subdirs
+        for path in sorted((pkg / sub).rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(pattern, line)
+    ]
+
+
 def test_query_builders_never_touch_jvm_internals():
     """Builders and operators stay on the public DataFrame API: no
     ``._jdf``, ``._jvm`` or ``._jsc`` reach-through, which has no
@@ -806,17 +824,15 @@ def test_query_builders_never_touch_jvm_internals():
     best-effort fallback around it silently changes the plan).  Tests
     and profiling code may read plans through Py4J; query building may
     not."""
-    import re
-    from pathlib import Path
+    hits = _source_hits(("operators", "queries"), r"\._(jdf|jvm|jsc)\b")
+    assert not hits, hits
 
-    import etl_template_spark
 
-    pkg = Path(etl_template_spark.__file__).parent
-    hits = [
-        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
-        for sub in ("operators", "queries")
-        for path in sorted((pkg / sub).rglob("*.py"))
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if re.search(r"\._(jdf|jvm|jsc)\b", line)
-    ]
+def test_package_starts_no_threads():
+    """One thread builds, materializes and releases (the caching module's
+    process-global registry relies on it), so no module of the package
+    may import a threading API."""
+    hits = _source_hits(
+        (".",), r"^\s*(import|from)\s+(threading|_thread|concurrent\.futures)\b"
+    )
     assert not hits, hits

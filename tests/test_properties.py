@@ -258,15 +258,20 @@ def test_exact_group_percentiles_match_numpy_linear(spark, groups, fractions):
 
     import numpy as np
 
+    from etl_template_spark import caching
     from etl_template_spark.operators.percentiles import exact_group_percentiles
 
     rows = [(gi, float(v)) for gi, vals in enumerate(groups) for v in vals]
     df = spark.createDataFrame(rows, "g int, x double")
     targets = [(f"p{i}", "x", p) for i, p in enumerate(fractions)]
-    got = {
-        r["g"]: [r[f"p{i}"] for i in range(len(fractions))]
-        for r in exact_group_percentiles(df, "g", targets).collect()
-    }
+    try:
+        got = {
+            r["g"]: [r[f"p{i}"] for i in range(len(fractions))]
+            for r in exact_group_percentiles(df, "g", targets).collect()
+        }
+    finally:
+        caching.release_tracked()
+    assert not caching._TRACKED
     assert set(got) == set(range(len(groups)))
     for gi, vals in enumerate(groups):
         expect = [float(np.percentile(vals, p * 100, method="linear"))
@@ -279,6 +284,7 @@ def test_exact_group_percentiles_null_semantics(spark):
     """NULL measures are excluded (quantile_cont semantics): they must
     not shift interpolated positions or sort first; an all-NULL group
     yields NULL; rows with a NULL group key are excluded (documented)."""
+    from etl_template_spark import caching
     from etl_template_spark.operators.percentiles import exact_group_percentiles
 
     rows = [
@@ -287,10 +293,14 @@ def test_exact_group_percentiles_null_semantics(spark):
         (None, 5.0),                           # NULL key -> excluded
     ]
     df = spark.createDataFrame(rows, "g string, x double")
-    got = {
-        r["g"]: r["p50"]
-        for r in exact_group_percentiles(df, "g", [("p50", "x", 0.5)]).collect()
-    }
+    try:
+        got = {
+            r["g"]: r["p50"]
+            for r in exact_group_percentiles(df, "g", [("p50", "x", 0.5)]).collect()
+        }
+    finally:
+        caching.release_tracked()
+    assert not caching._TRACKED
     assert got == {"a": 2.0, "b": None}
 
 
@@ -998,51 +1008,3 @@ def test_compact_merged_log_preserves_multiset(
             .collect()
         )
         assert got == truth
-
-
-# ---------------------------------------------------------------------------
-# stage_pin roundtrip (r11): the durable ingest pin must hand back the
-# exact rows and types for any frame an ingest could stage — including
-# arrays, decimals, timestamps, NULLs, and the empty frame.
-# ---------------------------------------------------------------------------
-
-_pin_cell = st.one_of(
-    st.none(),
-    st.integers(min_value=-(2**62), max_value=2**62),
-)
-_pin_text = st.one_of(st.none(), st.text(max_size=8))
-_pin_arr = st.one_of(
-    st.none(), st.lists(st.floats(-1e6, 1e6, allow_nan=False, width=32), max_size=4)
-)
-
-
-@given(
-    rows=st.lists(st.tuples(_pin_cell, _pin_text, _pin_arr), max_size=15),
-)
-@settings(**_SETTINGS)
-def test_stage_pin_roundtrips_rows_and_types(spark, tmp_path_factory, rows):
-    from etl_template_spark.io import stage_pin
-
-    schema = "a bigint, b string, c array<float>"
-    df = spark.createDataFrame(rows, schema)
-    root = str(tmp_path_factory.mktemp("pinprop"))
-    pinned, release = stage_pin(df, root, "s")
-    try:
-        key = repr  # tuples mixing None/str/list do not order natively
-        got = sorted(
-            ((r.a, r.b, None if r.c is None else tuple(r.c))
-             for r in pinned.collect()),
-            key=key,
-        )
-        want = sorted(
-            ((r.a, r.b, None if r.c is None else tuple(r.c))
-             for r in df.collect()),
-            key=key,
-        )
-        assert got == want
-        # names and types exact (nullability is the documented relaxation)
-        assert [(f.name, f.dataType) for f in pinned.schema.fields] == [
-            (f.name, f.dataType) for f in df.schema.fields
-        ]
-    finally:
-        release()

@@ -838,3 +838,43 @@ def test_bm25_index_redelivery_and_compaction(spark, sf_dir, tmp_path):
     assert list_versions(root, "idx_post") == [3]
     after = [tuple(r) for r in bm25_search(spark, root, "idx", _BM25_TERMS).collect()]
     assert after == before
+
+
+@pytest.mark.parametrize("ingest", ["bm25", "ivf"])
+def test_ingest_writes_its_delta_without_rescanning_its_log(
+    spark, sf_dir, tmp_path, monkeypatch, ingest
+):
+    """The second ingest's anti-joined delta is a snapshot (see the
+    caching module docstring): its versioned write reads the pinned
+    delta, never the log that the write appends to, so the log-sized
+    anti-join runs once per ingest."""
+    from etl_template_spark import io
+    from etl_template_spark.operators.ann import ivf_index_incremental
+    from etl_template_spark.operators.invindex import search_index_incremental
+
+    root = str(tmp_path)
+    if ingest == "bm25":
+        docs = io.load_table(spark, sf_dir, "documents")
+        a, b = (docs.where(F.col("doc_id") % 2 == r) for r in (0, 1))
+        log = "idx_post"
+
+        def run(d):
+            return search_index_incremental(spark, root, "idx", d)
+    else:
+        a, b = _embeddings_halves(spark, sf_dir)
+        log = "ann_cells"
+
+        def run(d):
+            return ivf_index_incremental(spark, root, "ann", d, k=8)
+
+    run(a)
+    write_versioned, inputs = io.write_versioned, []
+
+    def spy(df, *args, **kwargs):
+        inputs.append(df.inputFiles())
+        return write_versioned(df, *args, **kwargs)
+
+    monkeypatch.setattr(io, "write_versioned", spy)
+    run(b)
+    assert len(inputs) == 1
+    assert not [f for f in inputs[0] if f"/{log}/" in f], inputs[0]

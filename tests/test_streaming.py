@@ -18,6 +18,7 @@ from etl_template_spark.streaming import (
     read_events_stream,
     run_available_now,
     session_agg_stream,
+    sliding_agg_stream,
     tumbling_agg_stream,
     versioned_stream_sink,
 )
@@ -78,6 +79,38 @@ def test_tumbling_stream_matches_batch_up_to_watermark(spark, events_dir, tmp_pa
     }
     assert got == expect and len(got) > 0
     assert not any(k[0].startswith("2024-01-01 11:30") for k in got)
+
+
+def test_sliding_stream_matches_batch_up_to_watermark(spark, events_dir, tmp_path):
+    """The sliding twin: each event lands in width/slide overlapping
+    windows, and append mode emits exactly the batch windows whose end
+    is at or before the watermark horizon (11:20); both windows holding
+    the 11:30 event stay open and are withheld."""
+    stream = read_events_stream(spark, events_dir)
+    agg = sliding_agg_stream(
+        stream, width="10 minutes", slide="5 minutes", watermark="10 minutes"
+    )
+    run_available_now(agg, "sliding_out", str(tmp_path / "ckpt"), output_mode="append")
+    got = {
+        (str(r["win_start"]), r["event_type"]): (r["n_events"], r["sum_value"])
+        for r in spark.table("sliding_out").collect()
+    }
+    batch = (
+        spark.read.schema(
+            "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+            "value double, props string"
+        )
+        .json(events_dir)
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+        .where(F.col("w.end") <= F.lit("2024-01-01 11:20:00").cast("timestamp"))
+    )
+    expect = {
+        (str(r["w"]["start"]), r["event_type"]): (r["n"], r["s"])
+        for r in batch.collect()
+    }
+    assert got == expect and len(got) > 0
+    assert not any(k[0] >= "2024-01-01 11:" for k in got)
 
 
 def test_session_stream_gap_semantics(spark, events_dir, tmp_path):
