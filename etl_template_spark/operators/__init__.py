@@ -10,7 +10,8 @@ Each is a pure DataFrame→DataFrame composition (no RDDs, no collect):
     topk.py       per-group top-k (rank window) and global top-k
     cluster.py    connected components over pair graphs (duplicate-
                   cluster resolution: pairs → groups → one survivor);
-                  min-label O(diameter) + star-rewrite O(log n) variants
+                  one min-label kernel, also behind the incremental
+                  refresh
     dedup.py      exact / MinHash / SimHash deduplication
     rangejoin.py  binned range join (interval containment without an
                   equi key, as a bin-id equi-join — no BNLJ/cartesian)
@@ -31,7 +32,6 @@ from .asof import asof_join  # noqa: F401
 from .cluster import (  # noqa: F401
     connected_components,
     connected_components_incremental,
-    connected_components_star,
 )
 from .dedup import (  # noqa: F401
     dedup_exact,

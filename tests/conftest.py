@@ -81,3 +81,28 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def union_find_cc():
+    """Driver-side union-find over (src, dst) pairs → {vertex: component
+    minimum}: the from-scratch connected-components reference, kept
+    independent of the distributed kernel under test."""
+
+    def components(edges):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {v: find(v) for v in parent}
+
+    return components

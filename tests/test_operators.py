@@ -509,13 +509,16 @@ def test_range_join_binned_edges(spark):
 
 def test_connected_components_chain_and_islands(spark):
     """Transitive chaining (A-B, B-C ⇒ one component), separate islands
-    stay separate, and the label is the component minimum."""
+    stay separate, a self-loop-only vertex is its own singleton
+    component, and the label is the component minimum."""
     from etl_template_spark.operators.cluster import connected_components
 
     edges = spark.createDataFrame(
         # chain 1-2-3-4 (diameter > 1 forces multiple propagation
-        # rounds), island {10, 11}, self-contained pair {7, 8}
-        [(2, 1), (2, 3), (3, 4), (10, 11), (7, 8)],
+        # rounds), island {10, 11}, self-contained pair {7, 8}, and a
+        # self-loop {42} (the incremental refresh gives every component
+        # root one)
+        [(2, 1), (2, 3), (3, 4), (10, 11), (7, 8), (42, 42)],
         "src long, dst long",
     )
     got = {
@@ -526,52 +529,54 @@ def test_connected_components_chain_and_islands(spark):
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10),
         (7, 7), (8, 7),
+        (42, 42),
     }
 
 
-def test_connected_components_star_long_path(spark):
-    """The large-star/small-star variant must label a 64-hop path in
-    O(log n) rounds — min-label propagation would need ~64 (its
-    documented pathological shape).  Node ids are permuted so the
-    component minimum sits mid-path, not at an endpoint."""
-    from etl_template_spark.operators.cluster import (
-        connected_components_star,
+def test_connected_components_star_islands_and_self_loops(spark):
+    """Min-label on the refresh's input shape: old components arrive as
+    stars (every member points at its minimum, which carries a
+    self-loop).  A delta edge between two stars merges them under the
+    smaller root, an untouched star keeps its root, and a
+    self-loop-only vertex stays its own singleton component."""
+    from etl_template_spark.operators.cluster import connected_components
+
+    edges = spark.createDataFrame(
+        [
+            (1, 1), (5, 1), (9, 1),  # star rooted at 1
+            (4, 4), (6, 4),  # star rooted at 4
+            (20, 20), (21, 20),  # star rooted at 20, untouched
+            (42, 42),  # self-loop only
+            (9, 6),  # delta edge joining the stars at 1 and 4
+        ],
+        "src long, dst long",
     )
+    got = {
+        (r["id"], r["component"])
+        for r in connected_components(edges).collect()
+    }
+    assert got == {
+        (1, 1), (4, 1), (5, 1), (6, 1), (9, 1),
+        (20, 20), (21, 20),
+        (42, 42),
+    }
+
+
+def test_connected_components_long_path_fails_loudly(spark):
+    """Min-label propagation needs O(diameter) rounds, so a 64-hop path
+    cannot converge in 10: the kernel must raise rather than return a
+    partial labeling, and the message names no other kernel.  Node ids
+    are permuted so the path is not in id order; the component minimum
+    is ``ids[0] == 0``, an endpoint, so the far end is 64 rounds away."""
+    from etl_template_spark.operators.cluster import connected_components
 
     # deterministic permutation of 0..64: multiply by 37 mod 65 (coprime)
     ids = [(i * 37) % 65 for i in range(65)]
     path = list(zip(ids, ids[1:]))  # 64 edges, diameter 64
     edges = spark.createDataFrame(path, "src long, dst long")
-    # 10 rounds ≥ log2(65) + slack; raises RuntimeError if not stable
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_star(edges, max_iter=10).collect()
-    }
-    assert got == {v: 0 for v in range(65)}
-
-
-def test_connected_components_star_islands_and_self_loops(spark):
-    """Star variant honors the min-label contract verbatim: transitive
-    chaining, separate islands, self-loop-only vertices labeled as
-    their own singleton component."""
-    from etl_template_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (7, 8), (42, 42)],
-        "src long, dst long",
-    )
-    got = {
-        (r["id"], r["component"])
-        for r in connected_components_star(edges).collect()
-    }
-    assert got == {
-        (1, 1), (2, 1), (3, 1), (4, 1),
-        (10, 10), (11, 10),
-        (7, 7), (8, 7),
-        (42, 42),
-    }
+    with pytest.raises(RuntimeError, match="did not converge") as exc:
+        connected_components(edges, max_iter=10)
+    assert "star" not in str(exc.value)
 
 
 def test_ngram_prefix_filter_identical_to_full_join(spark):

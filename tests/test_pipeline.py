@@ -524,7 +524,9 @@ def test_link_graph_refresh_example_runs(spark, sf_dir, tmp_path, monkeypatch):
     assert set(final) == set(prev) and final != prev
 
 
-def test_incremental_dedup_example_runs(spark, sf_dir, tmp_path, monkeypatch):
+def test_incremental_dedup_example_runs(
+    spark, sf_dir, tmp_path, monkeypatch, union_find_cc
+):
     """examples.incremental_dedup — the round-9 incremental-dedup
     composition as living documentation, pinned to its LOSSLESS
     contract: after three nightly ingests (delta-indexed signatures,
@@ -533,7 +535,6 @@ def test_incremental_dedup_example_runs(spark, sf_dir, tmp_path, monkeypatch):
     near-dup clustering BIT-FOR-BIT."""
     from etl_template_spark.examples import incremental_dedup as ex
     from etl_template_spark.io import list_versions, read_versioned
-    from etl_template_spark.operators.cluster import connected_components_star
     from etl_template_spark.queries.llm_text import q_dedup_fuzzy
 
     monkeypatch.setattr(ex, "get_spark", lambda **kw: spark)
@@ -547,12 +548,11 @@ def test_incremental_dedup_example_runs(spark, sf_dir, tmp_path, monkeypatch):
         (r["id"], r["component"])
         for r in read_versioned(spark, root, "dupes_cc").collect()
     }
-    want = {
-        (r["id"], r["component"])
-        for r in connected_components_star(
-            q_dedup_fuzzy(spark, sf_dir), src="d1", dst="d2"
-        ).collect()
-    }
+    want = set(
+        union_find_cc(
+            (r["d1"], r["d2"]) for r in q_dedup_fuzzy(spark, sf_dir).collect()
+        ).items()
+    )
     assert got == want and got
     # redelivering a night end-to-end is idempotent: nothing indexed,
     # no pairs emitted, no new versions, labeling bit-identical

@@ -688,13 +688,13 @@ def test_analyze_versioned_repoints_on_same_step_name(spark, tmp_path):
 def test_incremental_tier_library_plans_no_cartesian(spark, sf_dir, tmp_path):
     """The r9 library operators get the same plan contract the
     registered queries get: no CartesianProduct anywhere; the IVF
-    centroid pass is a broadcast against the k-row frame; star-CC and
+    centroid pass is a broadcast against the k-row frame; CC and
     search joins are key equi-joins."""
     from pyspark.sql import functions as F
 
     from etl_template_spark.io import load_table
     from etl_template_spark.operators.ann import ivf_index_incremental, ivf_search
-    from etl_template_spark.operators.cluster import connected_components_star
+    from etl_template_spark.operators.cluster import connected_components
 
     def plan(df):
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -715,7 +715,7 @@ def test_incremental_tier_library_plans_no_cartesian(spark, sf_dir, tmp_path):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], "src long, dst long"
     )
-    p = plan(connected_components_star(pairs))
+    p = plan(connected_components(pairs))
     assert "CartesianProduct" not in p
 
     from etl_template_spark.operators.invindex import (

@@ -165,69 +165,15 @@ def test_range_join_binned_matches_naive(spark, points, intervals, width):
     ),
 )
 @settings(**_SETTINGS)
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, union_find_cc, edges):
     """Distributed min-label propagation must agree with a classic
     driver-side union-find on every random graph (self-loops included)."""
     from etl_template_spark.operators.cluster import connected_components
 
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expect = {v: find(v) for v in parent}
-
+    expect = union_find_cc(edges)
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["id"]: r["component"] for r in connected_components(df).collect()
-    }
-    assert got == expect
-
-
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)),
-        min_size=1,
-        max_size=25,
-    ),
-)
-@settings(**_SETTINGS)
-def test_connected_components_star_matches_union_find(spark, edges):
-    """The O(log n)-round large-star/small-star variant must land on
-    the identical (id → component-min) labeling as union-find — the
-    same contract the min-label operator is pinned to, so the two
-    distributed algorithms are interchangeable."""
-    from etl_template_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expect = {v: find(v) for v in parent}
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_star(df).collect()
     }
     assert got == expect
 

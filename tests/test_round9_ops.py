@@ -485,18 +485,16 @@ def test_pagerank_oracles_materialize_every_cte():
         assert len(re.findall(r"\bAS MATERIALIZED\s*\(", sql)) >= 5 + 3 * 6
 
 
-# ----------------------------------------- CC algorithm equivalence ----
+# ---------------------------------------- CC on the real pair graph ----
 
 
-def test_star_cc_matches_min_label_on_real_pair_graph(spark, sf_dir):
-    """The two connected-components algorithms must be interchangeable
-    on the ACTUAL near-dup pair graph (q_dedup_fuzzy's LSH-verified
-    pairs over the documents corpus), not just on synthetic graphs —
-    the swap the star variant exists for is exactly this input."""
-    from etl_template_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
+def test_cc_matches_union_find_on_real_pair_graph(spark, sf_dir, union_find_cc):
+    """Min-label connected components must equal a driver-side
+    union-find on the ACTUAL near-dup pair graph (q_dedup_fuzzy's
+    LSH-verified pairs over the documents corpus), not just on
+    synthetic graphs — the input both cluster queries and the
+    incremental refresh run the kernel on."""
+    from etl_template_spark.operators.cluster import connected_components
     from etl_template_spark.queries.llm_text import q_dedup_fuzzy
 
     pairs = q_dedup_fuzzy(spark, sf_dir).localCheckpoint(eager=True)
@@ -504,22 +502,20 @@ def test_star_cc_matches_min_label_on_real_pair_graph(spark, sf_dir):
         (r["id"], r["component"])
         for r in connected_components(pairs, src="d1", dst="d2").collect()
     }
-    b = {
-        (r["id"], r["component"])
-        for r in connected_components_star(pairs, src="d1", dst="d2").collect()
-    }
+    b = set(
+        union_find_cc((r["d1"], r["d2"]) for r in pairs.collect()).items()
+    )
     assert a == b
     assert a  # non-vacuous: the corpus does contain near-dup clusters
 
 
-def test_cc_incremental_matches_from_scratch(spark, tmp_path):
+def test_cc_incremental_matches_from_scratch(spark, tmp_path, union_find_cc):
     """The labeling-as-sufficient-statistic claim, end to end: three
     delta refreshes (new pairs, a cluster-bridging edge, brand-new
     vertices chained in) must each land bit-for-bit on from-scratch CC
     over the union of every delta so far."""
     from etl_template_spark.operators.cluster import (
         connected_components_incremental,
-        connected_components_star,
     )
 
     root = str(tmp_path)
@@ -536,12 +532,9 @@ def test_cc_incremental_matches_from_scratch(spark, tmp_path):
             spark, root, "dd",
             spark.createDataFrame(dl, "src long, dst long"),
         )
-        want = connected_components_star(
-            spark.createDataFrame(seen, "src long, dst long")
-        )
-        assert {(r["id"], r["component"]) for r in got.collect()} == {
-            (r["id"], r["component"]) for r in want.collect()
-        }
+        assert {
+            (r["id"], r["component"]) for r in got.collect()
+        } == set(union_find_cc(seen).items())
     final = {r["id"]: r["component"] for r in got.collect()}
     assert final[5] == 1 and final[9] == 7 and final[10] == 10
 
